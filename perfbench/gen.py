@@ -2,14 +2,17 @@
 
 Everything a workload feeds the engine comes from here, derived from one
 integer seed: the base tables (written as parquet in the engine's fixture
-layout), the serve request stream and the curated-refresh slices. The
-same seed gives byte-identical inputs, and ``digest_streams``
-fingerprints each stream so two runs (for instance on a parent and a
-child commit) can be shown to have seen the same inputs.
+layout), the serve request stream, the ingest micro-batches and the
+curated-refresh slices. The same seed gives byte-identical inputs, and
+``digest_streams`` fingerprints each stream so two runs (for instance on
+a parent and a child commit) can be shown to have seen the same inputs.
 
 Run standalone to print the digests of one seed's streams:
 
     python3 perfbench/gen.py --seed 7 [--scale 1.0]
+
+The stream sizes below are the ones the workloads use, so the printed
+digests match the ``inputs`` digests in a run's record.
 """
 
 from __future__ import annotations
@@ -62,12 +65,25 @@ SERVE_KINDS = (
     "bm25",
     "bm25_filtered",
     "hybrid",
-    "grouped_page",
     "collection_search",
     "retrieve",
     "scroll",
     "browse",
 )
+
+# Stream sizes. A run uses a few dozen serve requests, at most a few
+# refresh slices (slice 0 loads the table in set-up) and every ingest
+# batch; the rest of each stream is never read.
+N_REQUESTS = 200
+N_SLICES = 8
+SLICE_FRAC = 0.1
+N_INGEST = 1
+INGEST_FRAC = 0.05
+# kNN queries whose recall@10 against brute force is measured once per
+# run, outside the timed window
+N_RECALL = 20
+# hybrid queries served in one batch call in traced runs
+N_HYBRID_BATCH = 8
 
 
 def _rng(seed: int, stream: str) -> np.random.Generator:
@@ -377,6 +393,44 @@ def refresh_slices(seed: int, t: Tables, n_slices: int, frac: float) -> list[dic
     return out
 
 
+def ingest_batches(seed: int, t: Tables, n_batches: int, frac: float) -> list[dict]:
+    """Micro-batches for the serving indexes: each holds a ``frac`` share
+    of the vectors and of the documents, half re-sent existing records
+    (changed) and half new ids, plus one new curated row per new vector
+    and the existing ids whose ``status`` payload is re-labelled."""
+    r = _rng(seed, "ingest")
+    n_vec, n_docs = len(t.labels), len(t.doc_tokens)
+    out = []
+    for b in range(n_batches):
+        k_v = max(8, int(n_vec * frac)) // 2
+        v_old = np.sort(r.choice(n_vec, k_v, replace=False))
+        vec_ids = np.concatenate([v_old, n_vec + b * k_v + np.arange(k_v)])
+        src = np.concatenate([v_old, r.choice(n_vec, k_v)])
+        vecs = t.vectors[src] + 0.01 * r.normal(size=(2 * k_v, DIM))
+        k_d = max(8, int(n_docs * frac)) // 2
+        d_old = np.sort(r.choice(n_docs, k_d, replace=False))
+        doc_ids = np.concatenate([d_old, n_docs + b * k_d + np.arange(k_d)])
+        docs = [list(t.doc_tokens[i]) for i in np.concatenate([d_old, r.choice(n_docs, k_d)])]
+        for d in docs:
+            d[int(r.integers(0, len(d)))] = str(r.choice(VOCAB))
+        relabel = np.sort(r.choice(n_vec, k_v, replace=False))
+        out.append(
+            {
+                "vec_ids": vec_ids.astype(np.int64),
+                "vectors": vecs.astype(np.float32),
+                "labels": t.labels[src].astype(np.int32),
+                "doc_ids": doc_ids.astype(np.int64),
+                "docs": [" ".join(d) for d in docs],
+                "langs": [LANGS[k] for k in r.integers(0, len(LANGS), 2 * k_d)],
+                "relabel_ids": relabel.astype(np.int64),
+                "cur_users": r.integers(1, 1_000, k_v).astype(np.int64),
+                "cur_ts_us": (1_800_000_000_000_000 + b * 1_000_000
+                              + np.arange(k_v, dtype=np.int64)),
+            }
+        )
+    return out
+
+
 def write_slice(s: dict, out_dir: str) -> None:
     """A refresh slice as parquet: the orders and events the curated
     flow reads, plus ``doc_delta`` and ``vec_delta`` to canonicalise."""
@@ -410,26 +464,29 @@ def table_streams(t: Tables) -> dict:
     return {"tables": [t.vectors, t.labels, t.doc_tokens, t.doc_lang, t.orders, t.events]}
 
 
-def all_streams(seed: int, scale: float, n_serve: int, n_slices: int, frac: float) -> dict:
-    """Every stream the workloads draw from one seed (the serve stream
-    and the refresh slices as each workload uses them)."""
-    t = make_tables(seed, scale)
+def dashboard_streams(seed: int, t: Tables) -> dict:
     return {
-        **table_streams(t),
-        "dashboard_serve": serve_stream(seed, t, n_serve, "dashboard"),
-        "refresh_slices": refresh_slices(seed, t, n_slices, frac),
+        "dashboard_serve": serve_stream(seed, t, N_REQUESTS, "dashboard"),
+        "ingest_batches": ingest_batches(seed, t, N_INGEST, INGEST_FRAC),
     }
+
+
+def refresh_streams(seed: int, t: Tables) -> dict:
+    return {"refresh_slices": refresh_slices(seed, t, N_SLICES, SLICE_FRAC)}
+
+
+def all_streams(seed: int, scale: float) -> dict:
+    """Every stream the workloads draw from one seed."""
+    t = make_tables(seed, scale)
+    return {**table_streams(t), **dashboard_streams(seed, t), **refresh_streams(seed, t)}
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--scale", type=float, default=1.0)
-    ap.add_argument("--serve-requests", type=int, default=1_000)
-    ap.add_argument("--slices", type=int, default=16)
-    ap.add_argument("--slice-frac", type=float, default=0.1)
     a = ap.parse_args()
-    streams = all_streams(a.seed, a.scale, a.serve_requests, a.slices, a.slice_frac)
+    streams = all_streams(a.seed, a.scale)
     print(json.dumps({"seed": a.seed, "scale": a.scale, **digest_streams(streams)}))
 
 

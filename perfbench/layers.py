@@ -18,6 +18,12 @@ Refresh stages (spans the benchmark opens around each stage of a cycle):
 ``<stage>_s`` is the median stage time; ``<stage>.shuffle_write_mb``,
 ``.executor_cpu_s`` and ``.tasks`` sum the jobs submitted inside the
 stage, as a mean per cycle.
+
+Traced-only phases (after the final checks): ingest micro-batches give
+the mean wall time of each top-level write call per batch, the delta
+segments the indexes carried before compaction, and OCC commit attempts
+per batch; the hybrid batch gives one call's time; the catalog sweep
+gives each query module's summed path time and four named paths.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ import statistics
 from collections import defaultdict
 
 from spans import attribute_jobs, covered, self_times
+from workloads import CuratedRefresh
 
 SERVE_LAYERS = ("ann_index", "text_index", "collection", "similarity.hybrid")
 SERVE_FIELDS = ("construct_s", "action_s", "driver_only_s", "py4j_calls", "jobs", "tasks")
@@ -42,6 +49,18 @@ BUILDS = {
     "text_index.build_s": "text_index.build_text_index",
     "collection.create_s": "collection.collection_create",
 }
+# metric -> top-level call in an ingest batch
+INGEST_CALLS = {
+    "ann_index.upsert_s": "ann_index.ann_index_upsert",
+    "text_index.upsert_s": "text_index.text_index_upsert",
+    "collection.upsert_s": "collection.collection_upsert",
+    "collection.set_payload_s": "collection.collection_set_payload",
+    "streaming.batch_upsert_commit_s": "streaming.batch_upsert_commit",
+    "ann_index.compact_s": "ann_index.ann_index_compact",
+    "text_index.compact_s": "text_index.text_index_compact",
+}
+SWEEP_MODULES = sorted({m for m, _ in CuratedRefresh.SWEEP})
+SWEEP_NAMED = ("training_corpus_pipeline", "ngram_jaccard_pairs", "reference_curated_flow")
 
 
 def metric_units() -> dict[str, str]:
@@ -66,7 +85,20 @@ def metric_units() -> dict[str, str]:
         u[f"{st}.executor_cpu_s"] = "s"
         u[f"{st}.tasks"] = "count"
     u["dedup.components_jobs"] = "count"
+    u.update({k: "s" for k in INGEST_CALLS})
+    u.update({
+        "ann_index.delta_segments": "count",
+        "text_index.delta_segments": "count",
+        "txn.commit_attempts": "count",
+        "collection.freshness_s": "s",
+        "hybrid_batch_search_s": "s",
+    })
+    for mod in SWEEP_MODULES:
+        u[f"plans.{mod}.sweep_s"] = "s"
+    for name in SWEEP_NAMED:
+        u[f"{name}_s"] = "s"
     u["trace.op_mean_s"] = "s"
+    u["trace.op_cpu_s"] = "s"
     return u
 
 
@@ -75,8 +107,10 @@ def _mean(xs) -> float:
     return sum(xs) / len(xs) if xs else 0.0
 
 
-def per_layer(tracer, jobs, clock_offset, ops_done, lat, session_s, quality,
-              storage_growth_mb) -> dict[str, tuple[float, str]]:
+def per_layer(tracer, jobs, clock_offset, ops_done, lat, cpu, session_s, quality,
+              storage_growth_mb, memo) -> dict[str, tuple[float, str]]:
+    """``memo`` is (calls, misses) of the plan memo over the timed window
+    and the final checks."""
     spans = [s for s in tracer.spans if s.end is not None]
     by_id = {s.sid: s for s in spans}
     selft = self_times(spans)
@@ -127,9 +161,10 @@ def per_layer(tracer, jobs, clock_offset, ops_done, lat, session_s, quality,
             m[f"{layer}.{f}"] = _mean(entry[layer][f])
 
     # transaction layer
-    m["txn.plan_memo_calls"] = float(tracer.memo_calls)
-    if tracer.memo_calls:
-        m["txn.plan_memo_hit_ratio"] = 1 - tracer.memo_misses / tracer.memo_calls
+    calls, misses = memo
+    m["txn.plan_memo_calls"] = float(calls)
+    if calls:
+        m["txn.plan_memo_hit_ratio"] = 1 - misses / calls
     op_rids = {rid for rid, *_ in ops_done}
     rv = [s.end - s.start for s in spans if s.name == "txn.read_version" and s.rid in op_rids]
     m["txn.read_version_s"] = _mean(rv)
@@ -157,6 +192,31 @@ def per_layer(tracer, jobs, clock_offset, ops_done, lat, session_s, quality,
         if st == "dedup.components":
             m["dedup.components_jobs"] = len(sj) / n_ops
 
+    # ingest micro-batches
+    ingest = {s.rid for s in spans if s.rid and s.rid.startswith("ingest")}
+    for metric, name in INGEST_CALLS.items():
+        d = [s.end - s.start for s in spans
+             if s.name == name and s.rid in ingest and s.parent is None]
+        m[metric] = _mean(d)
+    attempts = [s for s in spans if s.rid in ingest
+                and s.name in ("txn.commit_attempt", "txn.try_publish_version")]
+    m["txn.commit_attempts"] = len(attempts) / max(1, len(ingest))
+    m["ann_index.delta_segments"] = float(quality.get("ann_delta_segments", 0))
+    m["text_index.delta_segments"] = float(quality.get("text_delta_segments", 0))
+    m["collection.freshness_s"] = quality.get("collection_freshness_s", 0.0)
+    m["hybrid_batch_search_s"] = sum(
+        s.end - s.start for s in spans
+        if s.rid == "hybrid_batch" and s.name == "similarity.hybrid.hybrid_rrf_search_all")
+
+    # catalog sweep
+    for s in spans:
+        if s.rid == "sweep" and s.layer.startswith("plans."):
+            m[f"{s.layer}.sweep_s"] += s.end - s.start
+            short = s.name.rsplit(".", 1)[-1]
+            if short in SWEEP_NAMED:
+                m[f"{short}_s"] = s.end - s.start
+
     m["trace.op_mean_s"] = _mean(lat)
+    m["trace.op_cpu_s"] = _mean(cpu)
     units = metric_units()
     return {k: (v, units[k]) for k, v in m.items()}

@@ -9,11 +9,13 @@
   its bare name is invisible to them.
 - ``version_plan_memo`` gets a counting wrapper: a call whose builder
   runs is a memo miss, any other call a hit.
+- ``commit_with_retry`` gets a wrapper that opens a ``txn.commit_attempt``
+  span around each run of its ``build`` callable (one per OCC attempt).
 - ``parse_event_log`` reads Spark's JSON event log (enabled only in traced
   runs) into jobs with their stages' task metrics, and ``attribute_jobs``
   assigns each job to the innermost span open at its submission.
 - ``peak_rss_mb`` sums ``VmHWM`` of this process and its descendants (the
-  JVM), read from ``/proc``.
+  JVM), read from ``/proc``; ``cpu_s`` sums their CPU time.
 """
 
 from __future__ import annotations
@@ -141,6 +143,26 @@ class Tracer:
 
         self._saved.append((txn, "version_plan_memo", orig))
         txn.version_plan_memo = counted
+
+    def reset_memo(self) -> None:
+        with self._lock:
+            self.memo_calls = self.memo_misses = 0
+
+    def wrap_commit_attempts(self, txn) -> None:
+        if not self.enabled:
+            return
+        orig = txn.commit_with_retry
+
+        @functools.wraps(orig)
+        def counted(root, build, *a, **k):
+            def attempt(*ba, **bk):
+                with self.span("commit_attempt", "txn"):
+                    return build(*ba, **bk)
+
+            return orig(root, attempt, *a, **k)
+
+        self._saved.append((txn, "commit_with_retry", orig))
+        txn.commit_with_retry = counted
 
     def count_py4j(self) -> None:
         if not self.enabled:
@@ -284,6 +306,22 @@ def peak_rss_mb() -> float:
         except OSError:
             continue
     return total / 1024.0
+
+
+def cpu_s() -> float:
+    """CPU seconds (user + system, own and reaped children) used so far by
+    this process and its descendants: the JVM and the Python workers."""
+    total = 0
+    for pid in [os.getpid(), *_descendants(os.getpid())]:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                # fields after the parenthesised command name; utime,
+                # stime, cutime, cstime are fields 14-17 of the line
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        total += sum(int(x) for x in fields[11:15])
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def cpu_steal_s() -> float:
