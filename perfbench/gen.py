@@ -72,8 +72,8 @@ SERVE_KINDS = (
 )
 
 # Stream sizes. A run uses a few dozen serve requests, at most a few
-# refresh slices (slice 0 loads the table in set-up) and every ingest
-# batch; the rest of each stream is never read.
+# refresh slices and every ingest batch; the rest of each stream is never
+# read.
 N_REQUESTS = 200
 N_SLICES = 8
 SLICE_FRAC = 0.1

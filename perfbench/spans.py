@@ -308,20 +308,50 @@ def peak_rss_mb() -> float:
     return total / 1024.0
 
 
-def cpu_s() -> float:
-    """CPU seconds (user + system, own and reaped children) used so far by
-    this process and its descendants: the JVM and the Python workers."""
-    total = 0
+# Names, as /proc truncates them (15 bytes), of the JVM's JIT compiler
+# and code-cache sweeper threads. A young JVM compiles in the background
+# for minutes; that CPU goes to whichever operation happens to run.
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread")
+
+
+def _ticks(stat_path: str, n: int) -> int:
+    """Sum of the ``n`` CPU-time fields (utime, stime, cutime, cstime:
+    fields 14-17) of a ``/proc`` stat line."""
+    with open(stat_path) as f:
+        # fields after the parenthesised command name
+        fields = f.read().rsplit(")", 1)[1].split()
+    return sum(int(x) for x in fields[11 : 11 + n])
+
+
+def cpu_sample() -> tuple[int, dict[int, int]]:
+    """CPU clock ticks (user + system, own and reaped children) used so
+    far by this process and its descendants (the JVM and the Python
+    workers), and the ticks of each live JIT compiler thread among them."""
+    total, jit = 0, {}
     for pid in [os.getpid(), *_descendants(os.getpid())]:
         try:
-            with open(f"/proc/{pid}/stat") as f:
-                # fields after the parenthesised command name; utime,
-                # stime, cutime, cstime are fields 14-17 of the line
-                fields = f.read().rsplit(")", 1)[1].split()
+            total += _ticks(f"/proc/{pid}/stat", 4)
         except OSError:
             continue
-        total += sum(int(x) for x in fields[11:15])
-    return total / os.sysconf("SC_CLK_TCK")
+        for task in glob.glob(f"/proc/{pid}/task/*"):
+            try:
+                with open(f"{task}/comm") as f:
+                    if not f.read().startswith(_JIT_THREADS):
+                        continue
+                jit[int(task.rsplit("/", 1)[1])] = _ticks(f"{task}/stat", 2)
+            except OSError:
+                continue
+    return total, jit
+
+
+def cpu_delta_s(a, b) -> float:
+    """CPU seconds used between samples ``a`` and ``b``, less what the
+    JIT compiler threads used in between. The JVM must keep its compiler
+    threads for its whole life (``-XX:-UseDynamicNumberOfCompilerThreads``):
+    the CPU of one that exited between the samples would stay counted."""
+    (t0, j0), (t1, j1) = a, b
+    jit = sum(v - j0.get(tid, 0) for tid, v in j1.items())
+    return (t1 - t0 - jit) / os.sysconf("SC_CLK_TCK")
 
 
 def cpu_steal_s() -> float:

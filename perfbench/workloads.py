@@ -17,19 +17,21 @@ session with one client thread issuing operations closed-loop:
 
 dashboard_serve
     Read-only dashboard traffic against an ANN index, a text index, a
-    two-space named-vector collection and a curated table, all prebuilt
+    one-space named-vector collection and a curated table, all prebuilt
     in setup. Request kinds cycle in a fixed order; keys are drawn
-    Zipf-skewed from large pools. The traced run then serves one hybrid
-    batch and commits ingest micro-batches (upserts, a payload re-label,
-    a MERGE, then compaction) into the same structures.
+    Zipf-skewed from large pools. The traced run then measures recall on
+    a fixed query sample, serves one hybrid batch and commits ingest
+    micro-batches (upserts, a payload re-label, a MERGE, then compaction)
+    into the same structures.
 curated_refresh
     The scheduled batch chain: ``pipelines.curated.curated_flow`` on a new
     slice of orders and events, MinHash text canonicalisation of the
     documents, threshold-join semantic canonicalisation of the
     embeddings, then a MERGE of the re-keyed result into the curated
     table with ``streaming.batch_upsert_commit``. Set-up loads the table
-    with the same chain on the first slice. The traced run then makes
-    one pass over a fixed subset of catalog paths.
+    with the DuckDB replay of the catalog's ``reference_curated_flow``
+    oracle over the seed's base tables. The traced run then makes one
+    pass over a fixed subset of catalog paths.
 """
 
 from __future__ import annotations
@@ -75,6 +77,8 @@ def _cos(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 class _Base:
     name = ""
+    # set-up repetitions per run; ``setup_s`` is their median
+    SETUPS = 3
 
     def __init__(self, spark, seed: int, scale: float, work: str, tracer, plant_wrong: bool):
         self.spark, self.seed, self.scale = spark, seed, scale
@@ -85,10 +89,6 @@ class _Base:
 
     def generate(self) -> None:
         """Draw the workload's input streams from the seed."""
-
-    def setup_checks(self):
-        """(name, check) pairs run once after the set-ups."""
-        return iter(())
 
     def final_checks(self):
         """(name, check) pairs run once after the timed window."""
@@ -114,13 +114,16 @@ class _Base:
 
 class DashboardServe(_Base):
     name = "dashboard_serve"
+    # a warm set-up costs 6-8 s of a run of about a minute, so only one
+    # follows the cold one: setup_s is their mean
+    SETUPS = 2
     CYCLE = len(gen.SERVE_KINDS)  # the window ends on a whole cycle
     MIN_CYCLES = 1
     PAGE = 50
     K = 10
-    # recall@10 of the fixed query sample ranged 0.835-0.945 over 15
-    # seeds; a run more than 0.05 below the lowest is wrong
-    MIN_RECALL = 0.835 - 0.05
+    # recall@10 of the fixed query sample ranged 0.79-0.94 over 40 seeds
+    # (mean 0.88); a run below 0.70 probes less than the engine does today
+    MIN_RECALL = 0.70
     # kinds re-served after the window, to check a repeated request (a
     # plan-memo hit) returns the rows of its first serve
     REPEAT_KINDS = ("knn", "bm25")
@@ -152,7 +155,8 @@ class DashboardServe(_Base):
 
     def setup(self, rep: int) -> None:
         """Write the input tables, then build the four serving structures
-        concurrently (four driver threads, one Spark session)."""
+        concurrently (four driver threads, one Spark session). The
+        collection has one space, ``image`` (the first 32 dimensions)."""
         from pyspark.sql import functions as F
 
         from cultural_heritage_bigdata_project_spark.operators import (
@@ -173,7 +177,6 @@ class DashboardServe(_Base):
         pts = emb.select(
             "vec_id",
             F.slice("embedding", 1, 32).alias("image_emb"),
-            F.col("embedding").alias("combined_emb"),
             "label",
             F.lit("pending").alias("status"),
         )
@@ -193,9 +196,7 @@ class DashboardServe(_Base):
             lambda: ann_index.build_ann_index(spark, emb, roots["ann"], payload_cols=["label"]),
             lambda: text_index.build_text_index(spark, docs, roots["tix"], payload_cols=["lang"]),
             lambda: collection.collection_create(
-                spark, pts, roots["coll"],
-                spaces={"image": {"vec_col": "image_emb"},
-                        "combined": {"vec_col": "combined_emb"}},
+                spark, pts, roots["coll"], spaces={"image": {"vec_col": "image_emb"}},
                 payload_cols=["label", "status"],
             ),
             lambda: streaming.batch_upsert_commit(
@@ -372,33 +373,14 @@ class DashboardServe(_Base):
     def final_checks(self):
         """After the window: the first request of each ``REPEAT_KINDS``
         kind is served again (a plan-memo hit) and must return the same
-        rows; recall@10 of a fixed sample of pool queries, served in one
-        ``ann_index_top_k_all`` call with the single-query codec, must
-        not fall below ``MIN_RECALL``; the first plain BM25 index serve
-        must be bit-equal to the corpus-scan ``text.bm25_search``."""
-        from cultural_heritage_bigdata_project_spark.operators import ann_index, text
-        from cultural_heritage_bigdata_project_spark.operators.localrel import local_df
+        rows; the first plain BM25 index serve must be bit-equal to the
+        corpus-scan ``text.bm25_search``."""
+        from cultural_heritage_bigdata_project_spark.operators import text
 
         for kind in self.REPEAT_KINDS:
             first = next((q for q, _ in self.served if q["kind"] == kind), None)
             if first is not None:
                 yield f"{kind}_repeated", lambda q=first: self._serve(q)()
-
-        def recall():
-            qs = local_df(self.spark,
-                          [(i, self.qv[i].astype(float).tolist()) for i in range(gen.N_RECALL)],
-                          "q_id long, embedding array<double>")
-            got: dict[int, list] = {}
-            for q_id, vec_id in _rows(ann_index.ann_index_top_k_all(
-                    self.spark, self.roots["ann"], qs, k=self.K, codec="pq"
-            ).select("q_id", "vec_id")):
-                got.setdefault(q_id, []).append(vec_id)
-            self.recall_sample = float(np.mean(
-                [self._recall(got.get(i, []), self.qv[i]) for i in range(gen.N_RECALL)]))
-            if self.recall_sample < self.MIN_RECALL:
-                raise WrongAnswer(f"recall@10 {self.recall_sample:.3f} < {self.MIN_RECALL:.3f}")
-
-        yield "ann_recall_sample", recall
         if self.bm25_sample is not None:
             q, rows = self.bm25_sample
 
@@ -410,11 +392,33 @@ class DashboardServe(_Base):
 
     # ----------------------------------------------------- traced phases
     def traced_checks(self):
-        """One hybrid batch serve, then the ingest micro-batches; each
-        phase runs as its own request and checks its own output."""
+        """The recall sample, one hybrid batch serve, then the ingest
+        micro-batches; each phase runs as its own request and checks its
+        own output."""
+        yield "ann_recall_sample", self._recall_sample
         yield "hybrid_batch", self._hybrid_batch
         for b in range(len(self.batches)):
             yield f"ingest{b}", lambda b=b: self._ingest(b)
+
+    def _recall_sample(self) -> None:
+        """recall@10 of a fixed sample of pool queries, served in one
+        ``ann_index_top_k_all`` call with the single-query ``pq`` codec,
+        must not fall below ``MIN_RECALL``."""
+        from cultural_heritage_bigdata_project_spark.operators import ann_index
+        from cultural_heritage_bigdata_project_spark.operators.localrel import local_df
+
+        qs = local_df(self.spark,
+                      [(i, self.qv[i].astype(float).tolist()) for i in range(gen.N_RECALL)],
+                      "q_id long, embedding array<double>")
+        got: dict[int, list] = {}
+        for q_id, vec_id in _rows(ann_index.ann_index_top_k_all(
+                self.spark, self.roots["ann"], qs, k=self.K, codec="pq"
+        ).select("q_id", "vec_id")):
+            got.setdefault(q_id, []).append(vec_id)
+        self.recall_sample = float(np.mean(
+            [self._recall(got.get(i, []), self.qv[i]) for i in range(gen.N_RECALL)]))
+        if self.recall_sample < self.MIN_RECALL:
+            raise WrongAnswer(f"recall@10 {self.recall_sample:.3f} < {self.MIN_RECALL:.3f}")
 
     def _hybrid_batch(self) -> None:
         from cultural_heritage_bigdata_project_spark.operators import similarity
@@ -473,8 +477,7 @@ class DashboardServe(_Base):
         }), f"{d}/cur.parquet")
         vecs = spark.read.parquet(f"{d}/vec.parquet")
         pts = vecs.select("vec_id", F.slice("embedding", 1, 32).alias("image_emb"),
-                          F.col("embedding").alias("combined_emb"), "label",
-                          F.lit("pending").alias("status"))
+                          "label", F.lit("pending").alias("status"))
         relabel = spark.createDataFrame([(int(i), "validated") for i in s["relabel_ids"]],
                                         "vec_id long, status string")
         ids = [int(i) for i in s["vec_ids"]]
@@ -545,6 +548,8 @@ class CuratedRefresh(_Base):
     # catalog paths timed once in a traced run, through the noop sink, as
     # (query module, catalog name): text, corpus, classify, temporal,
     # windows, scale, streaming-window and pipeline paths
+    # share of the seed's tables the sweep's catalog fixture holds
+    SWEEP_SCALE = 0.2
     SWEEP = (
         ("queries_text", "ngram_jaccard_pairs"),
         ("queries_text", "charlm_quality"),
@@ -570,26 +575,50 @@ class CuratedRefresh(_Base):
         tr.wrap(txn, "read_version", "txn")
 
     def setup(self, rep: int) -> None:
-        """Write the first slice's inputs and load the curated table with
-        one ``curated_flow`` MERGE of them."""
+        """Write the seed's base tables and load the curated table with
+        one MERGE (``batch_upsert_commit``) of the DuckDB replay of the
+        catalog's ``reference_curated_flow`` oracle over them; each cycle's
+        slice then re-sends part of the base and adds new records."""
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        from cultural_heritage_bigdata_project_spark.pipelines import curated
         from cultural_heritage_bigdata_project_spark.streaming import pipelines as streaming
 
         d = self._fresh(f"setup{rep}")
         sf, cur = os.path.join(d, "base"), os.path.join(d, "cur")
-        self._write_slice(self.slices[0], sf)
+        os.makedirs(sf)
+        t = self.tables
+        gen.write_orders(t.orders, f"{sf}/orders.parquet")
+        gen.write_events(t.events, f"{sf}/events.parquet")
+        gen.write_embeddings(t, f"{sf}/embeddings.parquet")
+        pq.write_table(self._oracle(sf), f"{d}/seed.parquet")
         self.tracer.begin_request(f"setup{rep}")
         try:
             streaming.batch_upsert_commit(
                 self.spark,
-                curated.curated_flow(self.spark, sf).withColumn("refresh_no", F.lit(0)),
+                self.spark.read.parquet(f"{d}/seed.parquet").withColumn("refresh_no", F.lit(0)),
                 keys=self.KEYS, order_desc=self.ORDER, target_dir=cur,
             )
         finally:
             self.tracer.end_request()
-        self.base, self.cur_root = sf, cur
+        self.cur_root = cur
+
+    @staticmethod
+    def _oracle(sf: str):
+        """The catalog's ``reference_curated_flow`` oracle, replayed in
+        DuckDB over the tables in ``sf``, as an Arrow table."""
+        import duckdb
+
+        from cultural_heritage_bigdata_project_spark.plans import queries_pipeline  # noqa: F401
+        from cultural_heritage_bigdata_project_spark.plans.catalog import CATALOG
+
+        con = duckdb.connect()
+        try:
+            for t in ("orders", "events", "embeddings"):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+            return con.execute(CATALOG["reference_curated_flow"].oracle).arrow()
+        finally:
+            con.close()
 
     def _write_slice(self, s: dict, d: str) -> None:
         gen.write_slice(s, d)
@@ -597,41 +626,13 @@ class CuratedRefresh(_Base):
         gen.write_embeddings(self.tables, f"{d}/embeddings.parquet")
 
     def generate(self) -> None:
-        # slice 0 loads the table in setup; the cycles take the others
         self.slices = gen.refresh_streams(self.seed, self.tables)["refresh_slices"]
 
     def streams(self) -> dict:
         return {**gen.table_streams(self.tables), **gen.refresh_streams(self.seed, self.tables)}
 
-    def setup_checks(self):
-        """The loaded curated table equals the DuckDB replay of the
-        catalog's ``reference_curated_flow`` oracle over the same inputs."""
-        import duckdb
-
-        from cultural_heritage_bigdata_project_spark.operators import txn
-        from cultural_heritage_bigdata_project_spark.plans import queries_pipeline  # noqa: F401
-        from cultural_heritage_bigdata_project_spark.plans.catalog import CATALOG
-
-        def check():
-            cols = ["guid", "user_id", "ts_us", "comment", "tags_str", "title",
-                    "description", "creator"]
-            con = duckdb.connect()
-            try:
-                for t in ("orders", "events", "embeddings"):
-                    con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                                f"read_parquet('{self.base}/{t}.parquet')")
-                want = con.execute(CATALOG["reference_curated_flow"].oracle).arrow()
-            finally:
-                con.close()
-            got = txn.read_version(self.spark, self.cur_root).select(*cols).toArrow()
-            if _multiset(want, cols) != _multiset(got, cols):
-                raise WrongAnswer("curated table differs from the reference_curated_flow oracle")
-            self.info["oracle_rows"] = got.num_rows
-
-        yield "reference_curated_flow_oracle", check
-
     def ops(self):
-        for i, s in enumerate(self.slices[1:], start=1):
+        for i, s in enumerate(self.slices, start=1):
             d = os.path.join(self.work, "slices", f"s{i:03d}")
             self._write_slice(s, d)
             yield "refresh", "pipelines.curated", self._op(i, d)
@@ -692,10 +693,16 @@ class CuratedRefresh(_Base):
 
         def run():
             *stages, out = self._chain(sf, refresh_no, self.cur_root)
-            _, text_edges, _, text_canon, _ = stages
+            flow, text_edges, _, text_canon, _ = stages
 
             def check():
                 try:
+                    cols = ["guid", "user_id", "ts_us", "comment", "tags_str", "title",
+                            "description", "creator"]
+                    if (_multiset(self._oracle(sf), cols)
+                            != _multiset(flow.select(*cols).toArrow(), cols)):
+                        raise WrongAnswer(
+                            "curated_flow differs from the reference_curated_flow oracle")
                     sample = _rows(out.select(*self.KEYS, "comment", "text_canonical")
                                    .orderBy(F.xxhash64(*self.KEYS)).limit(20))
                     self._check(sample, _rows(text_edges), dict(_rows(text_canon)))
@@ -744,8 +751,9 @@ class CuratedRefresh(_Base):
 
     # ----------------------------------------------------- traced phase
     def traced_checks(self):
-        """One pass over ``SWEEP`` on the seed's full tables, each path
-        its own operation; a path that raises counts as failed."""
+        """One pass over ``SWEEP`` on a ``SWEEP_SCALE`` share of the seed's
+        tables, each path its own operation; a path that raises counts as
+        failed."""
         yield "catalog_fixture", self._catalog_fixture
         for module, name in self.SWEEP:
             yield f"catalog_{name}", lambda m=module, n=name: self._sweep(m, n)
@@ -755,7 +763,7 @@ class CuratedRefresh(_Base):
 
         catalog_queries()  # registers every catalog module
         d = self.catalog_dir = self._fresh("catalog")
-        t = self.tables
+        t = gen.make_tables(self.seed, self.scale * self.SWEEP_SCALE)
         gen.write_orders(t.orders, f"{d}/orders.parquet")
         gen.write_events(t.events, f"{d}/events.parquet")
         gen.write_embeddings(t, f"{d}/embeddings.parquet")
