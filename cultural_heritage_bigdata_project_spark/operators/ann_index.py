@@ -38,17 +38,15 @@ for the final ``shortlist`` re-rank.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import payload_overlay as plov
+from . import segment_index as sx
 from . import txn
 from .localrel import local_df
 from .similarity import (
     _deterministic_centroids,
-    cosine_similarity,
     cosine_similarity_qnorm,
     pq_adc_shortlist,
     pq_codebook,
@@ -57,8 +55,22 @@ from .similarity import (
 
 META_COMPONENT = "meta"
 CODES_COMPONENT = "codes"
-_SEQ = "__sg_seq"
+_SEQ = sx.SEQ
 _DEL = "__ann_del"
+# codes rows carry the payload (Qdrant's payload-on-point model), so
+# the codes component is also the payload component
+ANN = sx.IndexSpec(
+    component=CODES_COMPONENT,
+    block="ann",
+    epoch_col="ann_epoch",
+    id_col="vec_id",
+    delete_col=_DEL,
+    payload_component=CODES_COMPONENT,
+    base_seg="ann_{v}_l{k}",
+    delta_seg="annd_{v}",
+    payload_seg="annp_{v}",
+    build_fn="build_ann_index",
+)
 
 
 def _encode_pass(
@@ -136,17 +148,11 @@ def _encode_pass(
 
 
 def _spec(id_col: str) -> dict:
-    return {
-        "kind": "latest_by_key",
-        "keys": [id_col],
-        "order_desc": ["ann_epoch"],
-        "seq_col": _SEQ,
-        # tombstone deletes (round 9): a delete is a delta row whose
-        # flag wins the latest-per-key fold — the Qdrant
-        # delete-points analog (deduplicate_from_qdrant.py's removal
-        # of confirmed duplicates); a newer upsert resurrects the key
-        "delete_col": _DEL,
-    }
+    # tombstone deletes (round 9): a delete is a delta row whose
+    # flag wins the latest-per-key fold — the Qdrant
+    # delete-points analog (deduplicate_from_qdrant.py's removal
+    # of confirmed duplicates); a newer upsert resurrects the key
+    return sx.latest_spec(ANN, id_col)
 
 
 def _meta_df(spark: SparkSession, centroids, codebook) -> DataFrame:
@@ -244,57 +250,24 @@ def build_ann_index(
 
     def build(current_dir, new_dir):
         vname = os.path.basename(new_dir)
-        epoch = _next_epoch(root, current_dir)
-        stamped = encoded.withColumn("ann_epoch", F.lit(epoch).cast("long")).withColumn(
-            _SEQ, F.lit(epoch).cast("long")
+        epoch = sx.next_epoch(ANN, root, current_dir)
+        stamped = sx.stamp(ANN, encoded, epoch)
+        # ONE job writes every inverted list's segment. Segment names
+        # carry VNAME, not the epoch: vname was claimed by this
+        # writer's exclusive makedirs, so two racing builders (which
+        # compute the SAME epoch from the same expected current) can
+        # never write — or rmtree — each other's segment paths
+        # (round-7 ADVICE, high). Sorting by (list, id) satisfies the
+        # partitioned writer's required ordering (no extra sort
+        # inserted) AND makes every data file id-sorted, so parquet
+        # row-group min/max stats prune keyset predicates
+        # (ann_index_scroll's vec_id > after) down to O(remaining)
+        # scanned bytes per page
+        seg_names, stats, list_map = sx.rehome(
+            ANN, root, vname, stamped, "ann_list", sort_by=[id_col]
         )
-        # ONE job: hash-shuffle on the (duplicated) partition column,
-        # every list's tasks write their own directory; each partition
-        # dir is then RENAMED into place as a per-list segment —
-        # metadata-only re-homing, no second write pass. The duplicate
-        # ``ann_list_p`` exists because partitionBy strips its column
-        # from the data files, and delta segments need ``ann_list`` as
-        # a real column to union by name.
-        #
-        # Segment names carry VNAME, not the epoch: vname was claimed
-        # by this writer's exclusive makedirs, so two racing builders
-        # (which compute the SAME epoch from the same expected current)
-        # can never write — or rmtree — each other's segment paths.
-        # (A bare epoch-derived name let the CAS loser rmtree the
-        # winner's just-published segment: round-7 ADVICE, high.) The
-        # rmtree below therefore only ever clears leftovers of an
-        # aborted earlier claim of this same exclusively-owned name.
-        scratch = os.path.join(new_dir, "_encode")
-        # sortWithinPartitions(list, id): satisfies the partitioned
-        # writer's required ordering (no extra sort inserted) AND makes
-        # every data file id-sorted, so parquet row-group min/max stats
-        # prune keyset predicates (ann_index_scroll's vec_id > after)
-        # down to O(remaining) scanned bytes per page
-        stamped.withColumn(
-            "ann_list_p", F.col("ann_list")
-        ).sortWithinPartitions("ann_list_p", id_col).write.partitionBy(
-            "ann_list_p"
-        ).parquet(scratch)
-        seg_names: list[str] = []
-        stats: dict[str, dict] = {}
-        list_map: dict[str, str] = {}
-        for entry in sorted(os.listdir(scratch)):
-            if not entry.startswith("ann_list_p="):
-                continue
-            k = int(entry.split("=", 1)[1])
-            seg = f"ann_{vname}_l{k}"
-            sdir = txn.segment_path(root, seg)
-            shutil.rmtree(sdir, ignore_errors=True)
-            os.makedirs(os.path.dirname(sdir), exist_ok=True)
-            os.rename(os.path.join(scratch, entry), sdir)
-            seg_names.append(seg)
-            list_map[str(k)] = seg
-            stats[seg] = txn.collect_parquet_stats(sdir)
-            stats[seg]["ann_list"] = [k, k]  # exact: the partition value
-        shutil.rmtree(scratch, ignore_errors=True)
         meta_seg = f"annmeta_{vname}"
-        mdir = txn.segment_path(root, meta_seg)
-        shutil.rmtree(mdir, ignore_errors=True)
+        mdir = sx.fresh_segment(root, meta_seg)
         _meta_df(spark, centroids, codebook).coalesce(1).write.parquet(mdir)
         schema = [
             [f.name, f.dataType.simpleString()]
@@ -335,32 +308,6 @@ def build_ann_index(
     return txn.commit_with_retry(root, build, keep_last=keep_last, op="ann_build")
 
 
-def _next_epoch(root: str, current_dir: str | None) -> int:
-    """The fold-order stamp for the next commit's rows. Racing writers
-    MAY compute the same value (both read the same expected current) —
-    that is safe, because the loser's rebased retry recomputes it and
-    the published chain stays strictly increasing; only segment NAMES
-    must never collide, and those come from the exclusively-claimed
-    version name, never from this number."""
-    if current_dir is None:
-        return 0
-    comp = (txn.read_manifest(root, os.path.basename(current_dir)) or {}).get(
-        CODES_COMPONENT
-    )
-    if comp is None:
-        return 0
-    stamped = (comp.get("ann") or {}).get("epoch")
-    if stamped is not None:
-        return int(stamped) + 1
-    # pre-"epoch"-field manifests named segments ann{N}_l{K} / annd{N}
-    hi = -1
-    for s in comp.get("segments", []):
-        tag = s.split("_", 1)[0].removeprefix("ann").removeprefix("d")
-        if tag.isdigit():
-            hi = max(hi, int(tag))
-    return hi + 1
-
-
 def ann_index_upsert(
     spark: SparkSession,
     new_vectors: DataFrame,
@@ -391,75 +338,63 @@ def ann_index_upsert(
     payload per attempt."""
     # eager argument check against the CURRENT manifest for a good
     # error before any job runs; authoritative re-validation happens
-    # inside build against the attempt's expected current
+    # inside write against the attempt's expected current
     if _batch_fn is None:
-        pc0 = _stored_payload_cols(root)
-        missing = [c for c in pc0 if c not in new_vectors.columns]
-        if missing:
-            raise ValueError(
-                f"index at {root!r} stores payload columns {pc0}; "
-                f"the upsert batch is missing {missing}"
-            )
+        sx.require_payload_cols(root, sx.stored_payload_cols(ANN, root), new_vectors)
 
-    def build(current_dir, new_dir):
-        if current_dir is None:
-            raise FileNotFoundError(
-                f"no index published under {root!r}; run build_ann_index first"
-            )
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
-        comp = dict(components[CODES_COMPONENT])
-        ann_meta = comp.get("ann") or {}
-        m = int(ann_meta.get("m", 8))
-        payload_cols = list(ann_meta.get("payload_cols", []) or [])
+    def write(components, cur_name, vname, epoch):
+        ann = sx.block_of(ANN, components)
+        m = int(ann.get("m", 8))
+        payload_cols = list(ann.get("payload_cols", []) or [])
         batch = new_vectors if _batch_fn is None else _batch_fn(cur_name)
-        missing = [c for c in payload_cols if c not in batch.columns]
-        if missing:
-            raise ValueError(
-                f"index at {root!r} stores payload columns {payload_cols}; "
-                f"the upsert batch is missing {missing}"
-            )
+        sx.require_payload_cols(root, payload_cols, batch)
         centroids, codebook = read_index_meta(spark, root, version=cur_name)
         encoded = _encode_pass(batch, centroids, codebook, m, id_col, vec_col)
         if payload_cols:
             encoded = encoded.join(
                 batch.select(id_col, *payload_cols), on=id_col
             )
-        epoch = _next_epoch(root, current_dir)
-        stamped = encoded.withColumn(
-            "ann_epoch", F.lit(epoch).cast("long")
-        ).withColumn(_SEQ, F.lit(epoch).cast("long"))
+        stamped = sx.stamp(ANN, encoded, epoch)
         # delta name from the exclusively-claimed version dir (see
         # build_ann_index): a racing upsert that computed the same
         # epoch builds into a DIFFERENT claimed vname, so its segment
         # path never aliases this one and the CAS loser cannot clobber
         # the winner's published delta (round-7 ADVICE, high)
-        vname = os.path.basename(new_dir)
-        seg = f"annd_{vname}"
-        sdir = txn.segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers only
+        seg = ANN.delta_seg.format(v=vname)
         # id-sorted like the base list files: the delta tail keeps
         # row-group pruning for keyset scroll pages
-        stamped.sortWithinPartitions(id_col).write.parquet(sdir)
-        segments = list(comp.get("segments", [])) + [seg]
-        stats = dict(comp.get("stats") or {})
-        stats[seg] = txn.collect_parquet_stats(sdir)
-        ann = dict(comp.get("ann") or {})
-        ann["epoch"] = epoch
-        ann["delta_segments"] = list(ann.get("delta_segments", [])) + [seg]
+        stamped.sortWithinPartitions(id_col).write.parquet(
+            sx.fresh_segment(root, seg)
+        )
         # per-delta quantization error (narrow __qd read of the one
         # segment just written): drift monitoring stays metadata-only
-        qd = dict(ann.get("qerr_deltas") or {})
-        qd[seg] = _qerr_of(spark, root, [seg])
-        ann["qerr_deltas"] = qd
-        comp.update(
-            {"segments": segments, "changes": [seg], "stats": stats, "ann": ann}
-        )
-        out = dict(components)
-        out[CODES_COMPONENT] = comp
-        txn.write_manifest(root, os.path.basename(new_dir), out)
+        ann["qerr_deltas"] = {
+            **(ann.get("qerr_deltas") or {}),
+            seg: _qerr_of(spark, root, [seg]),
+        }
+        return _append_delta(root, components, ann, epoch, seg)
 
-    return txn.commit_with_retry(root, build, keep_last=keep_last, op="ann_upsert")
+    return sx.commit(ANN, root, write, keep_last, "ann_upsert")
+
+
+def _append_delta(root: str, components: dict, ann: dict, epoch: int, seg: str) -> dict:
+    """The manifest after a row-delta commit (upsert or tombstones):
+    ``seg`` joins the codes read list, the feed record and the ``ann``
+    delta tail that every probe reads whole."""
+    comp = dict(components[CODES_COMPONENT])
+    stats = dict(comp.get("stats") or {})
+    stats[seg] = txn.collect_parquet_stats(txn.segment_path(root, seg))
+    ann["epoch"] = epoch
+    ann["delta_segments"] = list(ann.get("delta_segments", [])) + [seg]
+    comp.update(
+        {
+            "segments": list(comp.get("segments", [])) + [seg],
+            "changes": [seg],
+            "stats": stats,
+            "ann": ann,
+        }
+    )
+    return {**components, CODES_COMPONENT: comp}
 
 
 def ann_index_update_vectors(
@@ -493,7 +428,7 @@ def ann_index_update_vectors(
     back — the CAS retry now re-reads the refreshed overlay instead,
     making 'a re-embed never rolls back a pending re-label' hold under
     concurrent writers, not just single-writer)."""
-    pcols = _stored_payload_cols(root)
+    pcols = sx.stored_payload_cols(ANN, root)
     if not pcols:
         return ann_index_upsert(
             spark, new_vectors, root, id_col=id_col, vec_col=vec_col,
@@ -503,15 +438,7 @@ def ann_index_update_vectors(
     keys = batch.select(id_col).distinct()
 
     def batch_with_stored_payload(version: str) -> DataFrame:
-        cols = list(
-            (
-                (txn.read_manifest(root, version) or {})
-                .get(CODES_COMPONENT, {})
-                .get("ann")
-                or {}
-            ).get("payload_cols", [])
-            or []
-        )
+        cols = sx.stored_payload_cols(ANN, root, version)
         if not cols:
             return batch
         stored = (
@@ -547,10 +474,7 @@ def _qerr_of(spark: SparkSession, root: str, seg_names: list[str]) -> dict:
     """{"mean": <avg __qd>, "n": <rows>} over the named code segments —
     one columns-pruned agg, recorded into the manifest so later drift
     checks never rescan."""
-    df = txn._read_segment_union(
-        spark, [txn.segment_path(root, s) for s in seg_names]
-    )
-    row = df.agg(
+    row = sx.segment_rows(spark, root, seg_names).agg(
         F.avg("__qd").alias("m"), F.count(F.lit(1)).alias("n")
     ).first()
     return {"mean": float(row["m"] or 0.0), "n": int(row["n"] or 0)}
@@ -576,62 +500,28 @@ def ann_index_delete(
     serves. A LATER upsert of the same key resurrects it (newer epoch
     wins the fold), and `ann_index_compact` physically reclaims
     tombstoned rows — after a full fold nothing older remains to
-    resurrect, so the tombstones themselves are dropped. The commit
-    also stamps the component's reconstruct spec with the delete
-    column so generic `txn.read_version` reads honor deletions."""
+    resurrect, so the tombstones themselves are dropped. The build
+    stamps the component's reconstruct spec with the delete column, so
+    generic `txn.read_version` reads honor deletions too."""
     if not isinstance(ids, DataFrame):
         ids = local_df(
             spark, [(int(i),) for i in ids], f"{id_col} bigint"
         )
 
-    def build(current_dir, new_dir):
-        if current_dir is None:
-            raise FileNotFoundError(
-                f"no index published under {root!r}; run build_ann_index first"
-            )
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
-        comp = dict(components[CODES_COMPONENT])
-        epoch = _next_epoch(root, current_dir)
-        vname = os.path.basename(new_dir)
-        stamped = (
-            ids.select(id_col)
-            .distinct()
-            .withColumn("ann_epoch", F.lit(epoch).cast("long"))
-            .withColumn(_SEQ, F.lit(epoch).cast("long"))
-            .withColumn(_DEL, F.lit(True))
+    def write(components, _cur_name, vname, epoch):
+        stamped = sx.stamp(ANN, ids.select(id_col).distinct(), epoch).withColumn(
+            _DEL, F.lit(True)
         )
-        seg = f"annd_{vname}"
-        sdir = txn.segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers only
+        seg = ANN.delta_seg.format(v=vname)
+        sdir = sx.fresh_segment(root, seg)
         stamped.write.parquet(sdir)
         if not txn._has_parquet(sdir):
-            # empty id set: manifest-only no-op commit — changes reset
-            # so the feed never re-attributes the prior delta (ADVICE)
-            txn.write_manifest(root, vname, txn.noop_components(components))
-            return
-        segments = list(comp.get("segments", [])) + [seg]
-        stats = dict(comp.get("stats") or {})
-        stats[seg] = txn.collect_parquet_stats(sdir)
-        ann = dict(comp.get("ann") or {})
-        ann["epoch"] = epoch
-        ann["delta_segments"] = list(ann.get("delta_segments", [])) + [seg]
-        comp.update(
-            {
-                "segments": segments,
-                "changes": [seg],
-                "stats": stats,
-                "ann": ann,
-                # pre-delete-support manifests carry a spec without the
-                # delete column; refresh so generic reads filter it
-                "reconstruct": _spec(id_col),
-            }
+            return None  # empty id set: manifest-only no-op commit
+        return _append_delta(
+            root, components, sx.block_of(ANN, components), epoch, seg
         )
-        out = dict(components)
-        out[CODES_COMPONENT] = comp
-        txn.write_manifest(root, vname, out)
 
-    return txn.commit_with_retry(root, build, keep_last=keep_last, op="ann_delete")
+    return sx.commit(ANN, root, write, keep_last, "ann_delete")
 
 
 def ann_index_set_payload(
@@ -659,79 +549,9 @@ def ann_index_set_payload(
     ignored (Qdrant: set_payload never creates points). Vectors,
     codes, and posting layout are never touched. See
     `payload_overlay` for the merge contract."""
-    pcols = _stored_payload_cols(root)
-    upd_cols = plov.validate_update_cols(updates, pcols, id_col, root)
-
-    def build(current_dir, new_dir):
-        if current_dir is None:
-            raise FileNotFoundError(
-                f"no index published under {root!r}; run build_ann_index first"
-            )
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
-        comp = dict(components[CODES_COMPONENT])
-        epoch = _next_epoch(root, current_dir)
-        vname = os.path.basename(new_dir)
-        stamped = updates.dropDuplicates([id_col]).select(
-            id_col,
-            *upd_cols,
-            *[
-                F.lit(True).alias(plov.set_flag_col(p)) for p in upd_cols
-            ],
-            F.lit(epoch).cast("long").alias("ann_epoch"),
-            F.lit(epoch).cast("long").alias(_SEQ),
-        )
-        seg = f"annp_{vname}"
-        sdir = txn.segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers only
-        stamped.write.parquet(sdir)
-        if not txn._has_parquet(sdir):
-            # empty batch: a no-op commit must not re-advertise the
-            # predecessor's changes under a new epoch (round-10 ADVICE)
-            txn.write_manifest(root, vname, txn.noop_components(components))
-            return
-        ann = dict(comp.get("ann") or {})
-        ann["epoch"] = epoch
-        ann["payload_deltas"] = list(ann.get("payload_deltas", [])) + [seg]
-        # NOT in `segments` (a payload-only row winning the generic
-        # latest-per-key fold would null out codes/vectors) and NOT in
-        # `changes` either (round-10 ADVICE, medium): feed consumers
-        # are latest-per-key row appliers, and an overlay row is a
-        # partial-column PATCH — merged as a full-row upsert it would
-        # null a replica's codes/vectors. GC and snapshot protect the
-        # overlay through the `payload_deltas` metadata reference
-        # (txn.cleanup_unpublished / snapshot_table), so the feed
-        # record is not needed for liveness. Payload mutations are
-        # index-serving state: replicas follow them via the index's
-        # own serve paths, not the row feed.
-        comp.update({"changes": [], "ann": ann})
-        out = dict(components)
-        out[CODES_COMPONENT] = comp
-        txn.write_manifest(root, vname, out)
-
-    return txn.commit_with_retry(
-        root, build, keep_last=keep_last, op="ann_set_payload"
+    return sx.set_payload(
+        ANN, spark, updates, root, id_col, id_col, keep_last, "ann_set_payload"
     )
-
-
-def _stored_m(spark: SparkSession, root: str) -> int:
-    cur = txn.current_version_dir(root)
-    comp = (txn.read_manifest(root, os.path.basename(cur)) or {}).get(
-        CODES_COMPONENT, {}
-    )
-    return int((comp.get("ann") or {}).get("m", 8))
-
-
-def _stored_payload_cols(root: str, version: str | None = None) -> list[str]:
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            return []
-        version = os.path.basename(cur)
-    comp = (txn.read_manifest(root, version) or {}).get(
-        CODES_COMPONENT, {}
-    )
-    return list((comp.get("ann") or {}).get("payload_cols", []) or [])
 
 
 def ann_index_top_k(
@@ -791,11 +611,7 @@ def ann_index_top_k(
     single-resolve discipline)."""
     import numpy as np
 
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
     centroids, codebook = read_index_meta(spark, root, version=version)
     comp = txn.read_manifest(root, version)[CODES_COMPONENT]
     ann = comp.get("ann") or {}
@@ -877,11 +693,7 @@ def _probed_filtered(
         # table, no join; a simple predicate pushes into the probed
         # segments' parquet scans, and like allowed_ids it applies
         # BEFORE the shortlist so k fills from the filtered candidates
-        probed = probed.filter(
-            F.expr(payload_filter)
-            if isinstance(payload_filter, str)
-            else payload_filter
-        )
+        probed = probed.filter(sx.predicate(payload_filter))
     return probed
 
 
@@ -965,17 +777,9 @@ def _probed_latest_build(
         else:
             raise FileNotFoundError(f"index under {root!r} has no segments")
     else:
-        base_rows = (
-            txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in probe_segs]
-            )
-            if probe_segs
-            else None
-        )
+        base_rows = sx.segment_rows(spark, root, probe_segs)
         if delta_segs:
-            delta_rows = txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in delta_segs]
-            )
+            delta_rows = sx.segment_rows(spark, root, delta_segs)
             # tombstones filter out of delta_latest (their keys serve
             # nothing), but the base anti join must key on ALL delta keys
             # including tombstoned ones — a deleted key's base row must
@@ -995,22 +799,7 @@ def _probed_latest_build(
                 )
         else:
             out = base_rows.drop(_SEQ)
-    overlay, eff = _ann_payload_overlay(spark, root, ann, id_col)
-    return plov.overlay_merge(out, overlay, eff, id_col, "ann_epoch")
-
-
-def _ann_payload_overlay(spark: SparkSession, root: str, ann: dict, id_col: str):
-    """Fold of this index's pending payload-only mutations (see
-    `payload_overlay`): None when there are none — the common case,
-    whose plan is untouched."""
-    segs = list((ann or {}).get("payload_deltas", []) or [])
-    pcols = list((ann or {}).get("payload_cols", []) or [])
-    if not segs or not pcols:
-        return None, []
-    rows = txn._read_segment_union(
-        spark, [txn.segment_path(root, s) for s in segs]
-    )
-    return plov.overlay_fold(rows, pcols, id_col)
+    return sx.with_payload(ANN, spark, root, out, ann or {}, id_col)
 
 
 def _shortlist_rerank(
@@ -1137,11 +926,11 @@ def foreach_batch_ann_index_run(
     probe segments + a bounded delta tail, and rebuild cost is amortized
     over ``rebuild_every_deltas`` batches."""
 
-    def rebuild_from_live(comp: dict) -> None:
+    def rebuild_from_live(ann: dict) -> None:
         # stored payload columns must survive the quantizer refresh —
         # a rebuild that dropped them would silently break every
         # payload_filter downstream
-        pcols = list(comp["ann"].get("payload_cols", []) or [])
+        pcols = list(ann.get("payload_cols", []) or [])
         # overlay-merged live view: a rebuild must bake pending
         # set_payload mutations in, not erase them with the fresh
         # manifest's empty payload_deltas
@@ -1150,9 +939,9 @@ def foreach_batch_ann_index_run(
         )
         build_ann_index(
             spark, state, root,
-            n_lists=int(comp["ann"].get("n_lists", 16)),
-            m=int(comp["ann"].get("m", 8)),
-            n_codes=int(comp["ann"].get("n_codes", 16)),
+            n_lists=int(ann.get("n_lists", 16)),
+            m=int(ann.get("m", 8)),
+            n_codes=int(ann.get("n_codes", 16)),
             id_col=id_col, vec_col=vec_col, keep_last=keep_last,
             payload_cols=pcols,
         )
@@ -1172,27 +961,16 @@ def foreach_batch_ann_index_run(
             # tail is still short
             ratio = ann_index_drift(spark, root)["incoming_ratio"]
             if ratio is not None and ratio > rebuild_on_drift:
-                cur = txn.current_version_dir(root)
-                comp = txn.read_manifest(root, os.path.basename(cur))[
-                    CODES_COMPONENT
-                ]
-                rebuild_from_live(comp)
+                rebuild_from_live(sx.stored_block(ANN, root))
                 return
         if compact_every_deltas is not None:
-            cur = txn.current_version_dir(root)
-            comp = txn.read_manifest(root, os.path.basename(cur))[
-                CODES_COMPONENT
-            ]
-            tail = (comp.get("ann") or {}).get("delta_segments", [])
+            tail = sx.stored_block(ANN, root).get("delta_segments", [])
             if len(tail) >= compact_every_deltas:
                 ann_index_compact(spark, root, keep_last=keep_last)
         if rebuild_every_deltas is not None:
-            cur = txn.current_version_dir(root)
-            comp = txn.read_manifest(root, os.path.basename(cur))[
-                CODES_COMPONENT
-            ]
-            if len((comp.get("ann") or {}).get("delta_segments", [])) > rebuild_every_deltas:
-                rebuild_from_live(comp)
+            ann = sx.stored_block(ANN, root)
+            if len(ann.get("delta_segments", [])) > rebuild_every_deltas:
+                rebuild_from_live(ann)
 
     q = (
         stream.writeStream.foreachBatch(apply)
@@ -1284,11 +1062,7 @@ def ann_index_top_k_all(
     # all read the same pinned version — a rebuild committing between
     # two resolutions could otherwise pair one version's ADC LUTs
     # with another version's stored codes
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
     centroids, codebook = read_index_meta(spark, root, version=version)
     dim = len(centroids[0])
     comp = txn.read_manifest(root, version)[CODES_COMPONENT]
@@ -1325,11 +1099,7 @@ def ann_index_top_k_all(
     if payload_filter is not None:
         # stored-payload predicate on the overlay-merged fold, BEFORE
         # any shortlist — the single-query path's semantics
-        latest = latest.filter(
-            F.expr(payload_filter)
-            if isinstance(payload_filter, str)
-            else payload_filter
-        )
+        latest = latest.filter(sx.predicate(payload_filter))
     code_cols = (
         ["bq_words"] if codec == "bq" else [f"c{j}" for j in range(m)]
     )
@@ -1472,11 +1242,7 @@ def mmr_rerank_indexed(
 
     # single CURRENT resolution (round-10 ADVICE discipline): meta,
     # manifest, and fold all read the same pinned version
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
     centroids, _codebook = read_index_meta(spark, root, version=version)
     comp = txn.read_manifest(root, version)[CODES_COMPONENT]
     ann = comp.get("ann") or {}
@@ -1524,47 +1290,29 @@ def ann_index_compact(
     without a delta tail. At 100 TB this is O(code bytes) maintenance
     I/O — orders cheaper than the rebuild's encode pass — amortized
     over every probe's restored pruning."""
-    cur0 = txn.current_version_dir(root)
-    if cur0 is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    ann0 = (
-        txn.read_manifest(root, os.path.basename(cur0))[CODES_COMPONENT]
-    ).get("ann") or {}
-    if not ann0.get("delta_segments"):
+    if not sx.stored_block(ANN, root, sx.pin(root)).get("delta_segments"):
         return None
 
-    def build(current_dir, new_dir):
-        vname = os.path.basename(new_dir)
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
+    def write(components, _cur_name, vname, _epoch):
         comp = dict(components[CODES_COMPONENT])
-        ann = dict(comp.get("ann") or {})
+        ann = sx.block_of(ANN, components)
         if not ann.get("list_segments") and comp.get("segments"):
             raise ValueError(
                 f"index under {root!r} lost its list map (a generic "
                 "rewrite rebuilt the component); run build_ann_index "
                 "to restore the per-list layout before compacting"
             )
-        spec = comp.get("reconstruct") or _spec("vec_id")
+        spec = comp.get("reconstruct") or _spec(ANN.id_col)
         id_col = spec["keys"][0]
         list_map = ann.get("list_segments", {})
-        base_segs = [list_map[k] for k in sorted(list_map, key=int)]
-        delta_segs = list(ann.get("delta_segments", []))
-
-        base_rows = (
-            txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in base_segs]
-            )
-            if base_segs
-            else None
+        base_rows = sx.segment_rows(
+            spark, root, [list_map[k] for k in sorted(list_map, key=int)]
         )
+        delta_segs = list(ann.get("delta_segments", []))
         folded = base_rows
         if delta_segs:
-            delta_rows = txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in delta_segs]
-            )
             delta_latest = txn.reconstruct_latest(
-                delta_rows, spec, keep_seq=True
+                sx.segment_rows(spark, root, delta_segs), spec, keep_seq=True
             )
             if base_rows is not None:
                 survivors = base_rows.join(
@@ -1592,35 +1340,12 @@ def ann_index_compact(
         # one mutation family the latest-per-key fold above cannot
         # absorb (payload-only rows carry no codes); cleared below so
         # payload-predicate pushdown is physical again after compaction
-        overlay, eff = _ann_payload_overlay(spark, root, ann, id_col)
-        folded = plov.overlay_merge(folded, overlay, eff, id_col, "ann_epoch")
-
-        scratch = os.path.join(new_dir, "_compact")
+        folded = sx.with_payload(ANN, spark, root, folded, ann, id_col)
         # id-sorted within each list file, as in the build: keyset
         # scroll pages keep row-group pruning after compaction
-        folded.withColumn(
-            "ann_list_p", F.col("ann_list")
-        ).sortWithinPartitions("ann_list_p", id_col).write.partitionBy(
-            "ann_list_p"
-        ).parquet(scratch)
-        seg_names: list[str] = []
-        stats: dict[str, dict] = {}
-        new_map: dict[str, str] = {}
-        for entry in sorted(os.listdir(scratch)):
-            if not entry.startswith("ann_list_p="):
-                continue
-            k = int(entry.split("=", 1)[1])
-            seg = f"ann_{vname}_l{k}"
-            sdir = txn.segment_path(root, seg)
-            shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers
-            os.makedirs(os.path.dirname(sdir), exist_ok=True)
-            os.rename(os.path.join(scratch, entry), sdir)
-            seg_names.append(seg)
-            new_map[str(k)] = seg
-            stats[seg] = txn.collect_parquet_stats(sdir)
-            stats[seg]["ann_list"] = [k, k]
-        shutil.rmtree(scratch, ignore_errors=True)
-
+        seg_names, stats, new_map = sx.rehome(
+            ANN, root, vname, folded, "ann_list", sort_by=[id_col]
+        )
         comp["base"] = None
         comp["segments"] = seg_names
         comp["changes"] = []  # a rewrite is not a change
@@ -1637,13 +1362,9 @@ def ann_index_compact(
             ann["qerr_live"] = _qerr_of(spark, root, seg_names)
         ann["qerr_deltas"] = {}
         comp["ann"] = ann
-        out = dict(components)
-        out[CODES_COMPONENT] = comp
-        txn.write_manifest(root, vname, out)
+        return {**components, CODES_COMPONENT: comp}
 
-    return txn.commit_with_retry(
-        root, build, keep_last=keep_last, op="ann_index_compact"
-    )
+    return sx.commit(ANN, root, write, keep_last, "ann_index_compact")
 
 
 def ann_index_dedup_purge(
@@ -1738,24 +1459,15 @@ def ann_index_live(
     manifest. ``version`` pins a specific retained version instead
     (`ann_index_update_vectors` reads back payload against the commit
     attempt's expected current this way)."""
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
 
     def _build() -> DataFrame:
         out = txn.read_version(
             spark, root, version=version, subdir=CODES_COMPONENT
         )
-        ann = (
-            (txn.read_manifest(root, version) or {})
-            .get(CODES_COMPONENT, {})
-            .get("ann")
-            or {}
+        return sx.with_payload(
+            ANN, spark, root, out, sx.stored_block(ANN, root, version), id_col
         )
-        overlay, eff = _ann_payload_overlay(spark, root, ann, id_col)
-        return plov.overlay_merge(out, overlay, eff, id_col, "ann_epoch")
 
     # query-independent per-version server state: memoize the PLAN
     # (optimization round 12 — same move as the text doclen fold); every
@@ -1788,11 +1500,7 @@ def ann_index_count(
     map-side, and returns a single row."""
     live = ann_index_live(spark, root, id_col, version=version)
     if payload_filter is not None:
-        live = live.filter(
-            F.expr(payload_filter)
-            if isinstance(payload_filter, str)
-            else payload_filter
-        )
+        live = live.filter(sx.predicate(payload_filter))
     live = live.select(id_col)
     if allowed_ids is not None:
         live = live.join(
@@ -1844,11 +1552,7 @@ def ann_index_scroll(
     if payload_filter is not None:
         # scroll filter over STORED payload (Qdrant scroll_filter):
         # same pushed-predicate shape as serving, no side table
-        live = live.filter(
-            F.expr(payload_filter)
-            if isinstance(payload_filter, str)
-            else payload_filter
-        )
+        live = live.filter(sx.predicate(payload_filter))
     if allowed_ids is not None:
         live = live.join(
             allowed_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
@@ -1856,7 +1560,7 @@ def ann_index_scroll(
     cols = [F.col(id_col), F.col("ann_list")]
     if with_payload:
         # the column list honors the pin (round-11 review, as retrieve)
-        cols += [F.col(c) for c in _stored_payload_cols(root, version=version)]
+        cols += [F.col(c) for c in sx.stored_payload_cols(ANN, root, version)]
     if with_vectors:
         cols.append(F.col(vec_col))
     return live.select(*cols).orderBy(F.col(id_col).asc()).limit(int(limit))
@@ -1884,81 +1588,32 @@ def ann_index_retrieve(
     The grouped hybrid page resolves lexical-only hits' labels through
     exactly this read — bounded, never a fold scan."""
     want = sorted({int(i) for i in ids})
-    cols = [F.col(id_col), F.col("ann_list")]
-    # None = all stored payload (Qdrant with_payload=True); [] = none.
-    # The column list honors the pin too (round-11 review): a rebuild
-    # changing payload_cols between the pin and CURRENT must not make
-    # a pinned retrieve select columns the pinned fold lacks.
+    # the column list is read from the pinned manifest, resolved first
+    # (round-11 review): a rebuild changing payload_cols between the
+    # pin and CURRENT must not make a pinned retrieve select columns
+    # the pinned fold lacks
+    version = sx.pin(root, version)
+    # None = all stored payload (Qdrant with_payload=True); [] = none
     pcols = (
-        _stored_payload_cols(root, version=version)
+        sx.stored_payload_cols(ANN, root, version)
         if payload_out is None
         else payload_out
     )
-    cols += [F.col(c) for c in pcols]
-    if with_vectors:
-        cols.append(F.col(vec_col))
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
-
-    def _build():
-        # bounded-IN single-reader fold (optimization round 13,
-        # r12-VERDICT item 3 — the ANN twin of the text label lookup):
-        # the generic live fold is one latest-per-key window over the
-        # WHOLE codes component (a corpus-wide hash exchange executed
-        # per lookup); for ≤max_ids ids `txn.small_key_fold` answers
-        # the same rows from one IN-pushed scan + an exchange-free
-        # fold. set_payload overlays merge on top exactly as
-        # `ann_index_live` does, their input pre-filtered to the
-        # wanted ids (the overlay fold is per id, so the filter
-        # commutes).
-        fold = txn.small_key_fold(spark, root, version, CODES_COMPONENT, want)
-        if fold is None:
-            return None
-        ann = (
-            (txn.read_manifest(root, version) or {})
-            .get(CODES_COMPONENT, {})
-            .get("ann")
-            or {}
-        )
-        segs = list((ann or {}).get("payload_deltas", []) or [])
-        opcols = list((ann or {}).get("payload_cols", []) or [])
-        overlay, eff = None, []
-        if segs and opcols:
-            rows = txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in segs]
-            ).filter(
-                F.col(id_col).isin(want) if want else F.lit(False)
-            )
-            overlay, eff = plov.overlay_fold(rows, opcols, id_col)
-        live_ = plov.overlay_merge(fold, overlay, eff, id_col, "ann_epoch")
-        if not want:
-            live_ = live_.filter(F.lit(False))
-        needed = [id_col, "ann_list"] + list(pcols) + (
-            [vec_col] if with_vectors else []
-        )
-        if any(c not in live_.columns for c in needed):
-            return None  # stale/odd column request: general path decides
-        return live_.select(*cols)
-
-    live = txn.version_plan_memo(
-        spark,
-        root,
-        version,
-        "ann_retrieve",
-        _build,
-        extra=(tuple(want), tuple(pcols), bool(with_vectors), id_col),
+    names = [id_col, "ann_list", *pcols] + ([vec_col] if with_vectors else [])
+    # bounded-IN single-reader fold (optimization round 13,
+    # r12-VERDICT item 3 — the ANN twin of the text label lookup): the
+    # generic live fold is one latest-per-key window over the WHOLE
+    # codes component (a corpus-wide hash exchange executed per
+    # lookup); for ≤max_ids ids `sx.lookup` answers the same rows from
+    # one IN-pushed scan + an exchange-free fold, overlays merged
+    return sx.lookup(
+        ANN, spark, root, version, want, id_col,
+        names=names,
+        cols=[F.col(c) for c in names],
+        tag="ann_retrieve",
+        extra=(tuple(pcols), bool(with_vectors), id_col, vec_col),
+        live=lambda: ann_index_live(spark, root, id_col, version=version),
     )
-    if live is not None:
-        return live
-    live = ann_index_live(spark, root, id_col, version=version)
-    if want:
-        live = live.filter(F.col(id_col).isin(want))
-    else:
-        live = live.filter(F.lit(False))
-    return live.select(*cols)
 
 
 def ann_index_fetch_vectors(
@@ -2052,11 +1707,7 @@ def ann_index_recommend(
     pos = sorted(int(i) for i in positive_ids)
     if not pos:
         raise ValueError("recommend requires at least one positive id")
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
     neg = sorted(int(i) for i in negative_ids) if negative_ids else []
     fetched = ann_index_fetch_vectors(
         spark, root, pos + neg, id_col=id_col, vec_col=vec_col,
@@ -2192,12 +1843,8 @@ def ann_index_describe(spark: SparkSession, root: str, with_count: bool = False)
     ``with_count=True`` adds the live point count — that one field is
     a (columns-pruned) scan, so it is opt-in, like Qdrant's exact
     count vs the cached collection info."""
-    cur = txn.current_version_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    vname = os.path.basename(cur)
-    comp = txn.read_manifest(root, vname)[CODES_COMPONENT]
-    ann = comp.get("ann") or {}
+    vname = sx.pin(root)
+    ann = sx.stored_block(ANN, root, vname)
     out = {
         "version": vname,
         "epoch": int(ann.get("epoch", 0)),
@@ -2287,13 +1934,9 @@ def ann_index_recommend_all(
     bit-agreement with the single path does not matter."""
     from pyspark.sql import Window
 
-    if version is None:
-        # one CURRENT resolve for the example fold AND the batch probe
-        # (round 12 — the single-path fix, batch twin)
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    # one CURRENT resolve for the example fold AND the batch probe
+    # (round 12 — the single-path fix, batch twin)
+    version = sx.pin(root, version)
     ex = examples.select(
         F.col(user_col).alias("__u"),
         F.col(id_col),
@@ -2417,12 +2060,7 @@ def ann_index_drift(spark: SparkSession, root: str) -> dict:
     set_payload commits append delta/overlay segments with NO
     qerr_deltas entry, so a delete- or relabel-heavy tail reads as
     zero incoming drift — drift measures arriving VECTORS only."""
-    cur = txn.current_version_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    ann = (
-        txn.read_manifest(root, os.path.basename(cur))[CODES_COMPONENT]
-    ).get("ann") or {}
+    ann = sx.stored_block(ANN, root, sx.pin(root))
     build = ann.get("qerr_build")
     deltas = list((ann.get("qerr_deltas") or {}).values())
     n_in = sum(int(d["n"]) for d in deltas)

@@ -45,18 +45,6 @@ from pyspark.sql.observation import Observation
 # xxhash64 per call; both families share every other stage.
 
 
-def _md5_hash31_sql(expr: str, half: int) -> str:
-    """31-bit hash from md5 hex chars [1..8] (half=0) or [9..16] (half=1):
-    one md5 per input yields two independent Kirsch-Mitzenmacher bases.
-    DuckDB equivalent: ('0x'||substr(md5(x),{start},8))::BIGINT & 2147483647.
-    This SQL form is the portable-family CONTRACT; the minhash hot path
-    now computes the identical values in numpy (see ``minhash_lsh_pairs``)
-    and any engine replay must match this definition.
-    """
-    start = 1 + 8 * half
-    return f"(cast(conv(substr({expr}, {start}, 8), 16, 10) as bigint) & 2147483647)"
-
-
 def md5_hash60_sql(expr: str) -> str:
     """60-bit hash from the first 15 md5 hex chars (fits a signed long).
     DuckDB equivalent: ('0x'||substr(md5(x),1,15))::BIGINT."""
@@ -443,11 +431,6 @@ def simhash_bits(hash_col: str, n_bits: int = 64) -> Column:
             THEN shiftleft(1L, i) ELSE 0L END)
         """
     )
-
-
-def simhash64(hash_col: str) -> Column:
-    """64-bit SimHash (back-compat alias for ``simhash_bits``)."""
-    return simhash_bits(hash_col, 64)
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -49,21 +49,34 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
-from . import payload_overlay as plov
+from . import segment_index as sx
 from . import txn
 from .localrel import local_df
 from .text import bm25_rank_hits
 
 POSTINGS_COMPONENT = "postings"
 DOCLEN_COMPONENT = "doclen"
-_SEQ = "__sg_seq"
+_SEQ = sx.SEQ
 _DEL = "__tix_del"
+# doclen holds one row per doc (length + stored payload): it is the
+# payload component, and its delta tail is the posting-supersede keyset
+TEXT = sx.IndexSpec(
+    component=POSTINGS_COMPONENT,
+    block="tix",
+    epoch_col="tix_epoch",
+    id_col="doc_id",
+    delete_col=_DEL,
+    payload_component=DOCLEN_COMPONENT,
+    base_seg="tix_{v}_b{k}",
+    delta_seg="tixd_{v}",
+    payload_seg="tixp_{v}",
+    build_fn="build_text_index",
+)
 
 
 def _bucket_expr(term_col, n_buckets: int):
@@ -80,19 +93,13 @@ def _bucket_py(term: str, n_buckets: int) -> int:
 
 
 def _doclen_spec() -> dict:
-    return {
-        "kind": "latest_by_key",
-        "keys": ["doc_id"],
-        "order_desc": ["tix_epoch"],
-        "seq_col": _SEQ,
-        # tombstone deletes (round 9): a deleted doc's dl row wins the
-        # fold with this flag set, so it drops out of the doclen view
-        # (and therefore out of recomputed corpus stats); the doclen
-        # delta tail is ALSO the posting-supersede keyset, so the
-        # doc's base postings vanish from serving with zero posting
-        # writes — the Qdrant delete-points analog for lexical search
-        "delete_col": _DEL,
-    }
+    # tombstone deletes (round 9): a deleted doc's dl row wins the
+    # fold with the delete flag set, so it drops out of the doclen view
+    # (and therefore out of recomputed corpus stats); the doclen
+    # delta tail is ALSO the posting-supersede keyset, so the
+    # doc's base postings vanish from serving with zero posting
+    # writes — the Qdrant delete-points analog for lexical search
+    return sx.latest_spec(TEXT, TEXT.id_col)
 
 
 def _postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -109,16 +116,44 @@ def _postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _next_epoch(root: str, current_dir: str | None) -> int:
-    if current_dir is None:
-        return 0
-    comp = (txn.read_manifest(root, os.path.basename(current_dir)) or {}).get(
-        POSTINGS_COMPONENT
+def _replaced_stats(
+    spark: SparkSession, root: str, dlc: dict, spec: dict, keys: DataFrame
+) -> tuple[int, int]:
+    """``(n_docs, sum_dl)`` of the live doclen rows a batch of
+    ``keys`` (a ``doc_id`` frame) replaces — the exact corpus-stat
+    correction of upserts and deletes. BUCKET-PRUNED (round-8 VERDICT
+    item 1b): doclen is hash-bucketed on doc_id, so the replaced docs
+    can only live in the batch keys' buckets — list and read those
+    leaf dirs only, O(batch-buckets) instead of O(docs), the same
+    pruning as txn.read_version's point-lookup path. The fold drops
+    already-deleted docs, so a double delete never double-subtracts."""
+    dl_spec = dlc.get("reconstruct") or spec
+    batch_buckets = [
+        int(r["b"])
+        for r in keys.select(
+            txn.bucket_expr(["doc_id"], int(dl_spec["buckets"])).alias("b")
+        )
+        .distinct()
+        .collect()  # bounded: at most one row per batch doc
+    ]
+    if not batch_buckets:  # empty batch: nothing replaced, nothing to probe
+        return 0, 0
+    prior_dl = txn.bucketed_reconstruct(
+        spark,
+        [txn.segment_path(root, s) for s in dlc.get("segments", [])],
+        dl_spec,
+        only_bucket=batch_buckets,
     )
-    if comp is None:
-        return 0
-    stamped = (comp.get("tix") or {}).get("epoch")
-    return 0 if stamped is None else int(stamped) + 1
+    rep = (
+        prior_dl.join(
+            F.broadcast(keys.select("doc_id").distinct()),
+            on="doc_id",
+            how="leftsemi",
+        )
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+        .first()
+    )
+    return int(rep["n"] or 0), int(rep["s"] or 0)
 
 
 def build_text_index(
@@ -165,37 +200,20 @@ def build_text_index(
 
     def build(current_dir, new_dir):
         vname = os.path.basename(new_dir)
-        epoch = _next_epoch(root, current_dir)
-        stamped = postings.withColumn(
-            "tix_epoch", F.lit(epoch).cast("long")
-        ).withColumn(_SEQ, F.lit(epoch).cast("long"))
-        scratch = os.path.join(new_dir, "_build")
-        stamped.withColumn(
-            "term_bucket", _bucket_expr(F.col("term"), n_buckets)
-        ).withColumn("__tb_p", F.col("term_bucket")).write.partitionBy(
-            "__tb_p"
-        ).parquet(scratch)
-        seg_names: list[str] = []
-        stats: dict[str, dict] = {}
-        bucket_map: dict[str, str] = {}
-        for entry in sorted(os.listdir(scratch)):
-            if not entry.startswith("__tb_p="):
-                continue
-            k = int(entry.split("=", 1)[1])
-            seg = f"tix_{vname}_b{k}"
-            sdir = txn.segment_path(root, seg)
-            shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers
-            os.makedirs(os.path.dirname(sdir), exist_ok=True)
-            os.rename(os.path.join(scratch, entry), sdir)
-            seg_names.append(seg)
-            bucket_map[str(k)] = seg
-            stats[seg] = txn.collect_parquet_stats(sdir)
-            stats[seg]["term_bucket"] = [k, k]  # exact: the partition value
-        shutil.rmtree(scratch, ignore_errors=True)
+        epoch = sx.next_epoch(TEXT, root, current_dir)
+        stamped = sx.stamp(TEXT, postings, epoch)
+        seg_names, stats, bucket_map = sx.rehome(
+            TEXT,
+            root,
+            vname,
+            stamped.withColumn(
+                "term_bucket", _bucket_expr(F.col("term"), n_buckets)
+            ),
+            "term_bucket",
+        )
 
         dl_seg = f"tixdl_{vname}"
-        dl_dir = txn.segment_path(root, dl_seg)
-        shutil.rmtree(dl_dir, ignore_errors=True)
+        dl_dir = sx.fresh_segment(root, dl_seg)
         # doclen from the DOCS themselves in BOTH build modes: postings
         # drop docs whose text is NULL or tokenizes to nothing (explode
         # yields no rows) and docs that are all stop terms, yet
@@ -203,12 +221,14 @@ def build_text_index(
         # doclen from written postings undercounts n_docs on such
         # corpora and breaks the bit-equal invariant (round-8 ADVICE)
         toks = tokenize(F.lower(F.col(text_col)))
-        doclen = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(toks).alias("dl"),
-            *[F.col(c) for c in payload_cols],
-        ).withColumn("tix_epoch", F.lit(epoch).cast("long")).withColumn(
-            _SEQ, F.lit(epoch).cast("long")
+        doclen = sx.stamp(
+            TEXT,
+            docs.select(
+                F.col(id_col).alias("doc_id"),
+                F.size(toks).alias("dl"),
+                *[F.col(c) for c in payload_cols],
+            ),
+            epoch,
         )
         txn._write_maybe_bucketed(doclen, dl_dir, _doclen_spec() | {"buckets": n_buckets})
         # an empty corpus writes no doclen part files — never publish
@@ -293,47 +313,25 @@ def text_index_upsert(
     attempt — a CAS retry re-reads the refreshed overlay, so a
     concurrent `text_index_set_payload` is never rolled back."""
     if _docs_fn is None:
-        pc0 = _stored_text_payload_cols(root)
-        missing = [c for c in pc0 if c not in new_docs.columns]
-        if missing:
-            raise ValueError(
-                f"index at {root!r} stores payload columns {pc0}; "
-                f"the upsert batch is missing {missing}"
-            )
+        sx.require_payload_cols(root, sx.stored_payload_cols(TEXT, root), new_docs)
 
-    def build(current_dir, new_dir):
-        if current_dir is None:
-            raise FileNotFoundError(
-                f"no index published under {root!r}; run build_text_index first"
-            )
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
+    def write(components, cur_name, vname, epoch):
         comp = dict(components[POSTINGS_COMPONENT])
-        tix = dict(comp.get("tix") or {})
+        tix = sx.block_of(TEXT, components)
         n_buckets = int(tix.get("n_buckets", 16))
         pcols = list(tix.get("payload_cols", []) or [])
         batch_docs = new_docs if _docs_fn is None else _docs_fn(cur_name)
-        missing = [c for c in pcols if c not in batch_docs.columns]
-        if missing:
-            raise ValueError(
-                f"index at {root!r} stores payload columns {pcols}; "
-                f"the upsert batch is missing {missing}"
-            )
+        sx.require_payload_cols(root, pcols, batch_docs)
         postings = _postings(batch_docs, id_col, text_col)
-        epoch = _next_epoch(root, current_dir)
-        vname = os.path.basename(new_dir)
         stopped = tix.get("stop_terms") or []
         delta_postings = (
             postings.filter(~F.col("term").isin(stopped)) if stopped else postings
         )
-        stamped = (
-            delta_postings.withColumn("tix_epoch", F.lit(epoch).cast("long"))
-            .withColumn(_SEQ, F.lit(epoch).cast("long"))
-            .withColumn("term_bucket", _bucket_expr(F.col("term"), n_buckets))
+        stamped = sx.stamp(TEXT, delta_postings, epoch).withColumn(
+            "term_bucket", _bucket_expr(F.col("term"), n_buckets)
         )
-        seg = f"tixd_{vname}"
-        sdir = txn.segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)
+        seg = TEXT.delta_seg.format(v=vname)
+        sdir = sx.fresh_segment(root, seg)
         stamped.write.parquet(sdir)
 
         # doclen delta from the RAW batch, not the (possibly stop-term-
@@ -342,59 +340,30 @@ def text_index_upsert(
         # keep exact corpus stats — the doclen delta is the authoritative
         # per-upsert doc set (the serving fold keys on it)
         toks = tokenize(F.lower(F.col(text_col)))
-        delta_dl = (
+        delta_dl = sx.stamp(
+            TEXT,
             batch_docs.select(
                 F.col(id_col).alias("doc_id"),
                 F.size(toks).alias("dl"),
                 *[F.col(c) for c in pcols],
-            )
-            .withColumn("tix_epoch", F.lit(epoch).cast("long"))
-            .withColumn(_SEQ, F.lit(epoch).cast("long"))
+            ),
+            epoch,
         )
         dl_seg = f"tixdld_{vname}"
-        dl_dir = txn.segment_path(root, dl_seg)
-        shutil.rmtree(dl_dir, ignore_errors=True)
+        dl_dir = sx.fresh_segment(root, dl_seg)
         spec = _doclen_spec() | {"buckets": n_buckets}
         txn._write_maybe_bucketed(delta_dl, dl_dir, spec)
         # pinned to the EXPECTED current: on a CAS conflict this whole
-        # build re-runs against the new current, so the correction is
-        # always derived from the predecessor it publishes against.
-        # BUCKET-PRUNED (round-8 VERDICT item 1b): doclen is hash-
-        # bucketed on doc_id, so the replaced docs can only live in the
-        # batch keys' buckets — list and read those leaf dirs only,
-        # O(batch-buckets) instead of O(docs), the same pruning as
-        # txn.read_version's point-lookup path
-        dlc = components[DOCLEN_COMPONENT]
-        dl_spec = dlc.get("reconstruct") or spec
-        batch_buckets = [
-            int(r["b"])
-            for r in delta_dl.select(
-                txn.bucket_expr(["doc_id"], int(dl_spec["buckets"])).alias("b")
-            )
-            .distinct()
-            .collect()  # bounded: at most one row per batch doc
-        ]
-        if batch_buckets:
-            prior_dl = txn.bucketed_reconstruct(
-                spark,
-                [txn.segment_path(root, s) for s in dlc.get("segments", [])],
-                dl_spec,
-                only_bucket=batch_buckets,
-            )
-            batch_keys = delta_dl.select("doc_id").distinct()
-            replaced = prior_dl.join(
-                F.broadcast(batch_keys), on="doc_id", how="leftsemi"
-            )
-            rep = replaced.agg(
-                F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-            ).first()
-        else:  # empty batch: nothing replaced, nothing to probe
-            rep = {"n": 0, "s": 0}
+        # write re-runs against the new current, so the correction is
+        # always derived from the predecessor it publishes against
+        rep_n, rep_s = _replaced_stats(
+            spark, root, components[DOCLEN_COMPONENT], spec, delta_dl
+        )
         add = delta_dl.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
         ).first()
-        n_docs = int(tix.get("n_docs", 0)) - int(rep["n"] or 0) + int(add["n"] or 0)
-        sum_dl = int(tix.get("sum_dl", 0)) - int(rep["s"] or 0) + int(add["s"] or 0)
+        n_docs = int(tix.get("n_docs", 0)) - rep_n + int(add["n"] or 0)
+        sum_dl = int(tix.get("sum_dl", 0)) - rep_s + int(add["s"] or 0)
 
         # empty segments never enter a manifest (Spark writes no part
         # file for an empty frame — a partitioned empty write is not
@@ -431,11 +400,9 @@ def text_index_upsert(
         out = dict(components)
         out[POSTINGS_COMPONENT] = comp
         out[DOCLEN_COMPONENT] = dlcomp
-        txn.write_manifest(root, vname, out)
+        return out
 
-    return txn.commit_with_retry(
-        root, build, keep_last=keep_last, op="text_index_upsert"
-    )
+    return sx.commit(TEXT, root, write, keep_last, "text_index_upsert")
 
 
 def text_index_update_docs(
@@ -464,7 +431,7 @@ def text_index_update_docs(
     contract): a CAS retry re-reads the refreshed overlay, so a
     concurrent `text_index_set_payload` is never silently rolled back
     by the re-crawl's baked payload."""
-    pcols = _stored_text_payload_cols(root)
+    pcols = sx.stored_payload_cols(TEXT, root)
     if not pcols:
         return text_index_upsert(
             spark, new_docs, root, id_col=id_col, text_col=text_col,
@@ -477,8 +444,7 @@ def text_index_update_docs(
 
     def docs_with_stored_payload(version: str) -> DataFrame:
         components = txn.read_manifest(root, version) or {}
-        comp = components.get(POSTINGS_COMPONENT, {})
-        tix = dict(comp.get("tix") or {})
+        tix = sx.block_of(TEXT, components)
         cols = list(tix.get("payload_cols", []) or [])
         if not cols:
             return batch.withColumnRenamed("doc_id", id_col)
@@ -498,10 +464,7 @@ def text_index_update_docs(
             dl_spec,
             only_bucket=batch_buckets,
         ).join(keys, on="doc_id", how="leftsemi")
-        overlay, eff = _text_payload_overlay(spark, root, tix)
-        stored = plov.overlay_merge(
-            stored, overlay, eff, "doc_id", "tix_epoch"
-        )
+        stored = sx.with_payload(TEXT, spark, root, stored, tix, TEXT.id_col)
         stored = stored.select("doc_id", *cols)
         missing = (
             keys.join(stored.select("doc_id"), on="doc_id", how="left_anti")
@@ -559,68 +522,33 @@ def text_index_delete(
             spark, [(int(i),) for i in doc_ids], "doc_id bigint"
         )
 
-    def build(current_dir, new_dir):
-        if current_dir is None:
-            raise FileNotFoundError(
-                f"no index published under {root!r}; run build_text_index first"
-            )
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
+    def write(components, _cur_name, vname, epoch):
         comp = dict(components[POSTINGS_COMPONENT])
-        tix = dict(comp.get("tix") or {})
+        tix = sx.block_of(TEXT, components)
         n_buckets = int(tix.get("n_buckets", 16))
-        epoch = _next_epoch(root, current_dir)
-        vname = os.path.basename(new_dir)
-
-        tomb = (
+        tomb = sx.stamp(
+            TEXT,
             doc_ids.select("doc_id")
             .distinct()
-            .withColumn("dl", F.lit(None).cast("int"))
-            .withColumn("tix_epoch", F.lit(epoch).cast("long"))
-            .withColumn(_SEQ, F.lit(epoch).cast("long"))
-            .withColumn(_DEL, F.lit(True))
-        )
+            .withColumn("dl", F.lit(None).cast("int")),
+            epoch,
+        ).withColumn(_DEL, F.lit(True))
         dl_seg = f"tixdld_{vname}"
-        dl_dir = txn.segment_path(root, dl_seg)
-        shutil.rmtree(dl_dir, ignore_errors=True)
+        dl_dir = sx.fresh_segment(root, dl_seg)
         spec = _doclen_spec() | {"buckets": n_buckets}
         txn._write_maybe_bucketed(tomb, dl_dir, spec)
         has_dl = txn._has_parquet(dl_dir)
 
-        # exact-stats correction, bucket-pruned as in the upsert; the
-        # reconstruct filters ALREADY-deleted docs, so a double delete
-        # never double-subtracts
+        # exact-stats correction, bucket-pruned as in the upsert
         dlc = dict(components[DOCLEN_COMPONENT])
-        dl_spec = dlc.get("reconstruct") or spec
-        batch_buckets = [
-            int(r["b"])
-            for r in doc_ids.select(
-                txn.bucket_expr(["doc_id"], int(dl_spec["buckets"])).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        if has_dl and batch_buckets:
-            prior_dl = txn.bucketed_reconstruct(
-                spark,
-                [txn.segment_path(root, s) for s in dlc.get("segments", [])],
-                dl_spec,
-                only_bucket=batch_buckets,
-            )
-            rep = prior_dl.join(
-                F.broadcast(doc_ids.select("doc_id").distinct()),
-                on="doc_id",
-                how="leftsemi",
-            ).agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).first()
-        else:
-            rep = {"n": 0, "s": 0}
+        rep_n, rep_s = _replaced_stats(spark, root, dlc, spec, doc_ids)
         tix.update(
             {
                 "epoch": epoch,
                 "dl_delta_segments": list(tix.get("dl_delta_segments", []))
                 + ([dl_seg] if has_dl else []),
-                "n_docs": int(tix.get("n_docs", 0)) - int(rep["n"] or 0),
-                "sum_dl": int(tix.get("sum_dl", 0)) - int(rep["s"] or 0),
+                "n_docs": int(tix.get("n_docs", 0)) - rep_n,
+                "sum_dl": int(tix.get("sum_dl", 0)) - rep_s,
             }
         )
         comp["tix"] = tix
@@ -629,20 +557,15 @@ def text_index_delete(
             [dl_seg] if has_dl else []
         )
         dlc["changes"] = [dl_seg] if has_dl else []
-        # pre-delete-support manifests carry a spec without the delete
-        # column; refresh so generic doclen reads filter tombstones
-        dlc["reconstruct"] = spec
         if has_dl:
             # a delta after a compaction: the fold is required again
             dlc.pop("collapsed", None)
         out = dict(components)
         out[POSTINGS_COMPONENT] = comp
         out[DOCLEN_COMPONENT] = dlc
-        txn.write_manifest(root, vname, out)
+        return out
 
-    return txn.commit_with_retry(
-        root, build, keep_last=keep_last, op="text_index_delete"
-    )
+    return sx.commit(TEXT, root, write, keep_last, "text_index_delete")
 
 
 def text_index_compact(
@@ -673,55 +596,29 @@ def text_index_compact(
     Reference analog: Lucene merge policies / Delta OPTIMIZE — the
     maintenance story the reference itself lists as missing
     (README.md:410-411)."""
-    cur0 = txn.current_version_dir(root)
-    if cur0 is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    tix0 = (
-        txn.read_manifest(root, os.path.basename(cur0))[POSTINGS_COMPONENT]
-    ).get("tix") or {}
+    tix0 = sx.stored_block(TEXT, root, sx.pin(root))
     if not tix0.get("delta_segments") and not tix0.get("dl_delta_segments"):
         return None  # nothing to fold (racing upserts re-checked inside)
 
-    def build(current_dir, new_dir):
-        vname = os.path.basename(new_dir)
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
-        comp = dict(components[POSTINGS_COMPONENT])
-        tix = dict(comp.get("tix") or {})
-        if not tix.get("bucket_segments") and comp.get("segments"):
+    def write(components, _cur_name, vname, _epoch):
+        tix = sx.block_of(TEXT, components)
+        if not tix.get("bucket_segments") and components[POSTINGS_COMPONENT].get(
+            "segments"
+        ):
             raise ValueError(
                 f"index under {root!r} lost its bucket map (a generic "
                 "rewrite rebuilt the component); run build_text_index "
                 "to restore the bucketed layout before compacting"
             )
-        n_buckets = int(tix.get("n_buckets", 16))
-
-        def _rehome(folded):
-            _compact_rehome(
-                spark, root, new_dir, components, comp, tix, n_buckets, folded
-            )
-
         bucket_map = tix.get("bucket_segments", {})
-        base_segs = [bucket_map[k] for k in sorted(bucket_map, key=int)]
+        base_rows = sx.segment_rows(
+            spark, root, [bucket_map[k] for k in sorted(bucket_map, key=int)]
+        )
         delta_segs = list(tix.get("delta_segments", []))
         dl_delta_segs = list(tix.get("dl_delta_segments", []))
-
-        base_rows = (
-            txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in base_segs]
-            )
-            if base_segs
-            else None
-        )
         folded = base_rows
         if delta_segs or dl_delta_segs:
-            delta_rows = (
-                txn._read_segment_union(
-                    spark, [txn.segment_path(root, s) for s in delta_segs]
-                )
-                if delta_segs
-                else None
-            )
+            delta_rows = sx.segment_rows(spark, root, delta_segs)
             if dl_delta_segs and not all(
                 os.path.isdir(txn.segment_path(root, s)) for s in dl_delta_segs
             ):
@@ -748,12 +645,9 @@ def text_index_compact(
                     .filter(F.col("tix_epoch") == F.col("__keep"))
                     .drop("__keep")
                 )
-                _rehome(folded)
-                return
+                return _compact_rehome(spark, root, vname, components, tix, folded)
             key_src = (
-                txn._read_segment_union(
-                    spark, [txn.segment_path(root, s) for s in dl_delta_segs]
-                )
+                sx.segment_rows(spark, root, dl_delta_segs)
                 if dl_delta_segs
                 else delta_rows
             )
@@ -783,49 +677,26 @@ def text_index_compact(
             raise FileNotFoundError(
                 f"index under {root!r} has no posting segments to compact"
             )
-        _rehome(folded)
+        return _compact_rehome(spark, root, vname, components, tix, folded)
 
-    return txn.commit_with_retry(
-        root, build, keep_last=keep_last, op="text_index_compact"
-    )
+    return sx.commit(TEXT, root, write, keep_last, "text_index_compact")
 
 
-def _compact_rehome(
-    spark, root, new_dir, components, comp, tix, n_buckets, folded
-):
+def _compact_rehome(spark, root, vname, components, tix, folded) -> dict:
     """Shared tail of `text_index_compact`: re-home the folded posting
     rows into per-bucket segments (rows already carry ``term_bucket`` —
     build and upsert both stamp it, so this is one partitioned write +
-    renames, no term re-hash), fold doclen to latest-per-doc, and write
-    the refreshed manifest."""
-    vname = os.path.basename(new_dir)
-    scratch = os.path.join(new_dir, "_compact")
-    folded.withColumn("__tb_p", F.col("term_bucket")).write.partitionBy(
-        "__tb_p"
-    ).parquet(scratch)
-    seg_names: list[str] = []
-    stats: dict[str, dict] = {}
-    new_map: dict[str, str] = {}
-    for entry in sorted(os.listdir(scratch)):
-        if not entry.startswith("__tb_p="):
-            continue
-        k = int(entry.split("=", 1)[1])
-        seg = f"tix_{vname}_b{k}"
-        sdir = txn.segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers
-        os.makedirs(os.path.dirname(sdir), exist_ok=True)
-        os.rename(os.path.join(scratch, entry), sdir)
-        seg_names.append(seg)
-        new_map[str(k)] = seg
-        stats[seg] = txn.collect_parquet_stats(sdir)
-        stats[seg]["term_bucket"] = [k, k]
-    shutil.rmtree(scratch, ignore_errors=True)
+    renames, no term re-hash), fold doclen to latest-per-doc, and
+    return the refreshed manifest."""
+    seg_names, stats, new_map = sx.rehome(
+        TEXT, root, vname, folded, "term_bucket"
+    )
 
     # doclen: exchange-free bucketed latest-per-doc fold to one
     # segment (keep_seq: rows keep their original epochs)
     dlc = dict(components[DOCLEN_COMPONENT])
     dl_spec = dlc.get("reconstruct") or (
-        _doclen_spec() | {"buckets": n_buckets}
+        _doclen_spec() | {"buckets": int(tix.get("n_buckets", 16))}
     )
     dl_folded = txn.bucketed_reconstruct(
         spark,
@@ -842,17 +713,11 @@ def _compact_rehome(
     # bake pending set_payload overlays into the rewritten doclen rows
     # (cleared from tix below) — facet-predicate pushdown is physical
     # again after compaction
-    overlay, eff = _text_payload_overlay(spark, root, tix)
-    dl_folded = plov.overlay_merge(dl_folded, overlay, eff, "doc_id", "tix_epoch")
+    dl_folded = sx.with_payload(TEXT, spark, root, dl_folded, tix, TEXT.id_col)
     dl_seg = f"tixdl_{vname}"
-    dl_dir = txn.segment_path(root, dl_seg)
-    shutil.rmtree(dl_dir, ignore_errors=True)
+    dl_dir = sx.fresh_segment(root, dl_seg)
     txn._write_maybe_bucketed(dl_folded, dl_dir, dl_spec, align=True)
 
-    comp["base"] = None
-    comp["segments"] = seg_names
-    comp["changes"] = []  # a rewrite is not a change
-    comp["stats"] = stats
     tix.update(
         {
             "bucket_segments": new_map,
@@ -861,9 +726,14 @@ def _compact_rehome(
             "payload_deltas": [],
         }
     )
-    comp["tix"] = tix
     out = dict(components)
-    out[POSTINGS_COMPONENT] = comp
+    out[POSTINGS_COMPONENT] = components[POSTINGS_COMPONENT] | {
+        "base": None,
+        "segments": seg_names,
+        "changes": [],  # a rewrite is not a change
+        "stats": stats,
+        "tix": tix,
+    }
     out[DOCLEN_COMPONENT] = dlc | {
         "base": None,
         "segments": [dl_seg],
@@ -871,7 +741,7 @@ def _compact_rehome(
         "reconstruct": dl_spec,
         "collapsed": True,  # one row per doc now
     }
-    txn.write_manifest(root, vname, out)
+    return out
 
 
 def text_index_search(
@@ -1002,23 +872,9 @@ def _search_hits(
             F.col("tf").alias("__tf"),
         )
     )
-    if payload_filter is not None:
-        pf = (
-            _doclen_with_payload(spark, root, version=version)
-            .filter(
-                F.expr(payload_filter)
-                if isinstance(payload_filter, str)
-                else payload_filter
-            )
-            .select(F.col("doc_id").alias(id_col))
-        )
-        allowed_ids = (
-            pf
-            if allowed_ids is None
-            else allowed_ids.select(F.col(id_col)).join(
-                pf, on=id_col, how="leftsemi"
-            )
-        )
+    allowed_ids = _allowed_by_payload(
+        spark, root, version, id_col, allowed_ids, payload_filter
+    )
     if allowed_ids is not None:
         hits = hits.join(
             allowed_ids.select(F.col(id_col)).distinct(),
@@ -1028,15 +884,31 @@ def _search_hits(
     return hits, tix
 
 
+def _allowed_by_payload(
+    spark: SparkSession, root: str, version, id_col: str, allowed_ids, payload_filter
+):
+    """``allowed_ids`` narrowed to the docs whose stored payload
+    (build_text_index payload_cols, set_payload overlays merged)
+    matches ``payload_filter`` — one doclen-only read, no corpus text.
+    Unchanged without a filter."""
+    if payload_filter is None:
+        return allowed_ids
+    pf = (
+        _doclen_with_payload(spark, root, version=version)
+        .filter(sx.predicate(payload_filter))
+        .select(F.col("doc_id").alias(id_col))
+    )
+    if allowed_ids is None:
+        return pf
+    return allowed_ids.select(F.col(id_col)).join(pf, on=id_col, how="leftsemi")
+
+
 def text_index_current_version(root: str) -> str:
     """The index's CURRENT version name — resolve ONCE, then pass as
     ``version=`` to every read of one logical serve (flat probe +
     label lookup, hybrid fusion legs) so a commit landing mid-serve
     can never mix two versions' state in one page."""
-    cur = txn.current_version_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    return os.path.basename(cur)
+    return sx.pin(root)
 
 
 def _corpus_stats(
@@ -1083,11 +955,7 @@ def _probed_rows(
     and single-query serves re-issuing the same terms against the same
     immutable version skip re-deriving the probe plan; every action
     over it still reads the parquet inputs."""
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
     return txn.version_plan_memo(
         spark,
         root,
@@ -1128,17 +996,9 @@ def _probed_rows_build(
             return local_df(spark, [], schema), tix
         # posting-list map gone (a generic rewrite rebuilt the component
         # dict) and no delta tail: serve correctly, unpruned
-        rows = txn._read_segment_union(
-            spark, [txn.segment_path(root, s) for s in comp["segments"]]
-        )
+        rows = sx.segment_rows(spark, root, comp["segments"])
     else:
-        base_rows = (
-            txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in probe_segs]
-            )
-            if probe_segs
-            else None
-        )
+        base_rows = sx.segment_rows(spark, root, probe_segs)
         if delta_segs or dl_delta_segs:
             # doc-supersede fold: a delta doc's postings REPLACE its
             # base postings entirely (terms may have left the doc).
@@ -1148,13 +1008,7 @@ def _probed_rows_build(
             # — and its max epoch per doc keeps only the newest posting
             # set when one doc was upserted twice. Pre-dl-delta
             # manifests fall back to the posting-delta doc set.
-            delta_rows = (
-                txn._read_segment_union(
-                    spark, [txn.segment_path(root, s) for s in delta_segs]
-                )
-                if delta_segs
-                else None
-            )
+            delta_rows = sx.segment_rows(spark, root, delta_segs)
             if dl_delta_segs and not all(
                 os.path.isdir(txn.segment_path(root, s)) for s in dl_delta_segs
             ):
@@ -1186,10 +1040,7 @@ def _probed_rows_build(
                     .drop("__keep", _SEQ)
                 ), tix
             key_src = (
-                txn._read_segment_union(
-                    spark,
-                    [txn.segment_path(root, s) for s in dl_delta_segs],
-                )
+                sx.segment_rows(spark, root, dl_delta_segs)
                 if dl_delta_segs
                 else delta_rows
             )
@@ -1283,27 +1134,11 @@ def text_index_search_all(
         F.col("term"),
         F.col("tf"),
     )
-    if payload_filter is not None:
-        # stored-payload facet filter (build_text_index payload_cols):
-        # resolved once from the doclen component (set_payload overlays
-        # merged) for the whole batch, then the same semi-join path as
-        # allowed_ids
-        pf = (
-            _doclen_with_payload(spark, root, version=version)
-            .filter(
-                F.expr(payload_filter)
-                if isinstance(payload_filter, str)
-                else payload_filter
-            )
-            .select(F.col("doc_id").alias(id_col))
-        )
-        allowed_ids = (
-            pf
-            if allowed_ids is None
-            else allowed_ids.select(F.col(id_col)).join(
-                pf, on=id_col, how="leftsemi"
-            )
-        )
+    # resolved once for the whole batch, then the same semi-join path
+    # as allowed_ids
+    allowed_ids = _allowed_by_payload(
+        spark, root, version, id_col, allowed_ids, payload_filter
+    )
     if allowed_ids is not None:
         # same pre-ranking semi-join semantics as the single-query path
         # (one shared filter for the whole batch): df over the filtered
@@ -1350,28 +1185,6 @@ def text_index_search_all(
     )
 
 
-def _stored_text_payload_cols(root: str, version: str | None = None) -> list[str]:
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            return []
-        version = os.path.basename(cur)
-    comp = (txn.read_manifest(root, version) or {}).get(
-        POSTINGS_COMPONENT, {}
-    )
-    return list(((comp.get("tix") or {}).get("payload_cols", [])) or [])
-
-
-def _stored_tix(root: str) -> dict:
-    cur = txn.current_version_dir(root)
-    if cur is None:
-        return {}
-    comp = (txn.read_manifest(root, os.path.basename(cur)) or {}).get(
-        POSTINGS_COMPONENT, {}
-    )
-    return dict(comp.get("tix") or {})
-
-
 def _doclen_with_payload(
     spark: SparkSession, root: str, version: str | None = None
 ) -> DataFrame:
@@ -1386,39 +1199,21 @@ def _doclen_with_payload(
     overlay read the same pinned manifest, so a concurrent commit can
     never pair one version's doc rows with another version's overlays.
     ``version`` pins a retained version (the update_docs readback)."""
-    if version is None:
-        cur = txn.current_version_dir(root)
-        if cur is None:
-            raise FileNotFoundError(f"nothing published under {root!r}")
-        version = os.path.basename(cur)
+    version = sx.pin(root, version)
 
     def _build() -> DataFrame:
         out = txn.read_version(
             spark, root, version=version, subdir=DOCLEN_COMPONENT
         )
-        comp = (txn.read_manifest(root, version) or {}).get(
-            POSTINGS_COMPONENT, {}
+        return sx.with_payload(
+            TEXT, spark, root, out, sx.stored_block(TEXT, root, version), TEXT.id_col
         )
-        tix = dict(comp.get("tix") or {})
-        overlay, eff = _text_payload_overlay(spark, root, tix)
-        return plov.overlay_merge(out, overlay, eff, "doc_id", "tix_epoch")
 
     # query-independent per-version server state: memoize the PLAN
     # (optimization round 12 — the overlay fold alone was ~130 py4j
     # round trips of construction per grouped serve); every action over
     # it still reads the parquet inputs (txn.version_plan_memo contract)
     return txn.version_plan_memo(spark, root, version, "doclen_payload", _build)
-
-
-def _text_payload_overlay(spark: SparkSession, root: str, tix: dict):
-    segs = list((tix or {}).get("payload_deltas", []) or [])
-    pcols = list((tix or {}).get("payload_cols", []) or [])
-    if not segs or not pcols:
-        return None, []
-    rows = txn._read_segment_union(
-        spark, [txn.segment_path(root, s) for s in segs]
-    )
-    return plov.overlay_fold(rows, pcols, "doc_id")
 
 
 def text_index_set_payload(
@@ -1439,63 +1234,13 @@ def text_index_set_payload(
     query, a later full doc upsert resets payload wholesale (newer
     ``tix_epoch`` wins), and `text_index_compact` bakes values into
     the doclen rows and clears the overlay. Unknown ids are ignored.
-    See `payload_overlay` for the merge contract."""
-    pcols = _stored_text_payload_cols(root)
-    upd_cols = plov.validate_update_cols(updates, pcols, id_col, root)
-
-    def build(current_dir, new_dir):
-        if current_dir is None:
-            raise FileNotFoundError(
-                f"no index published under {root!r}; run build_text_index first"
-            )
-        cur_name = os.path.basename(current_dir)
-        components = txn.read_manifest(root, cur_name)
-        comp = dict(components[POSTINGS_COMPONENT])
-        tix = dict(comp.get("tix") or {})
-        epoch = _next_epoch(root, current_dir)
-        vname = os.path.basename(new_dir)
-        stamped = updates.dropDuplicates([id_col]).select(
-            F.col(id_col).alias("doc_id"),
-            *[F.col(c) for c in upd_cols],
-            *[F.lit(True).alias(plov.set_flag_col(p)) for p in upd_cols],
-            F.lit(epoch).cast("long").alias("tix_epoch"),
-            F.lit(epoch).cast("long").alias(_SEQ),
-        )
-        seg = f"tixp_{vname}"
-        sdir = txn.segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)  # own aborted leftovers only
-        stamped.write.parquet(sdir)
-        if not txn._has_parquet(sdir):
-            # empty batch: a no-op commit must not re-advertise the
-            # predecessor's changes under a new epoch (round-10 ADVICE)
-            txn.write_manifest(root, vname, txn.noop_components(components))
-            return
-        tix.update(
-            {
-                "epoch": epoch,
-                "payload_deltas": list(tix.get("payload_deltas", []))
-                + [seg],
-            }
-        )
-        comp["tix"] = tix
-        comp["changes"] = []  # postings untouched this commit
-        dlc = dict(components[DOCLEN_COMPONENT])
-        # NOT in the doclen read list (an overlay row winning the
-        # latest-per-doc fold would null out dl and with it corpus
-        # stats) and NOT in `changes` either (round-10 ADVICE, medium):
-        # overlay rows are partial-column patches — a feed consumer
-        # merging them as full-row upserts would null its replica's dl.
-        # GC/snapshot protect the overlay via the tix `payload_deltas`
-        # metadata reference; payload flips reach replicas through the
-        # serve paths, not the row feed.
-        dlc["changes"] = []
-        out = dict(components)
-        out[POSTINGS_COMPONENT] = comp
-        out[DOCLEN_COMPONENT] = dlc
-        txn.write_manifest(root, vname, out)
-
-    return txn.commit_with_retry(
-        root, build, keep_last=keep_last, op="text_set_payload"
+    See `payload_overlay` for the merge contract and
+    `segment_index.set_payload` for where the overlay is recorded (it
+    never enters the doclen read list: an overlay row winning the
+    latest-per-doc fold would null out dl and with it corpus stats)."""
+    return sx.set_payload(
+        TEXT, spark, updates, root, id_col, TEXT.id_col, keep_last,
+        "text_set_payload",
     )
 
 
@@ -1515,68 +1260,29 @@ def text_index_retrieve_payload(
     exactly this read — never a full doclen pass. Plan-gated in
     tests/test_plans.py."""
     want = sorted({int(i) for i in ids})
+    # pin first, then read the column list from that same manifest: a
+    # commit landing between the two must not mix vintages
+    version = sx.pin(root, version)
     pcols = (
-        _stored_text_payload_cols(root, version=version)
+        sx.stored_payload_cols(TEXT, root, version)
         if payload_out is None
         else payload_out
     )
-    if version is None:
-        version = text_index_current_version(root)
-
-    def _build():
-        # bounded-IN single-reader fold (optimization round 13,
-        # r12-VERDICT item 3): the general bucketed doclen fold builds
-        # a union of n_buckets (scan → sort → window) branches — a
-        # ~140-node plan whose execution for ≤fetch_k page labels is
-        # pure scheduling overhead (0.75 s / 3 jobs / 19 tasks at
-        # sf0.1). `txn.small_key_fold` answers the same lookup from one
-        # IN-pushed scan + one windowless-exchange fold (equivalence
-        # argued there); the set_payload overlay merges on top exactly
-        # as `_doclen_with_payload` does, its input pre-filtered to the
-        # wanted ids (the fold is per id, so the filter commutes).
-        fold = txn.small_key_fold(
-            spark, root, version, DOCLEN_COMPONENT, want
-        )
-        if fold is None:
-            return None
-        comp = (txn.read_manifest(root, version) or {}).get(
-            POSTINGS_COMPONENT, {}
-        )
-        tix = dict(comp.get("tix") or {})
-        segs = list(tix.get("payload_deltas", []) or [])
-        opcols = list(tix.get("payload_cols", []) or [])
-        overlay, eff = None, []
-        if segs and opcols:
-            rows = txn._read_segment_union(
-                spark, [txn.segment_path(root, s) for s in segs]
-            ).filter(
-                F.col("doc_id").isin(want) if want else F.lit(False)
-            )
-            overlay, eff = plov.overlay_fold(rows, opcols, "doc_id")
-        live_ = plov.overlay_merge(fold, overlay, eff, "doc_id", "tix_epoch")
-        if not want:
-            live_ = live_.filter(F.lit(False))
-        missing = [c for c in pcols if c not in live_.columns]
-        if missing:
-            return None  # stale/odd column request: general path decides
-        return live_.select("doc_id", *pcols)
-
-    live = txn.version_plan_memo(
-        spark,
-        root,
-        version,
-        "doclen_lookup",
-        _build,
-        extra=(tuple(want), tuple(pcols)),
+    # bounded-IN single-reader fold (optimization round 13,
+    # r12-VERDICT item 3): the general bucketed doclen fold builds a
+    # union of n_buckets (scan → sort → window) branches — a ~140-node
+    # plan whose execution for ≤fetch_k page labels is pure scheduling
+    # overhead (0.75 s / 3 jobs / 19 tasks at sf0.1). `sx.lookup`
+    # answers the same lookup from one IN-pushed scan + one
+    # windowless-exchange fold, set_payload overlays merged on top.
+    return sx.lookup(
+        TEXT, spark, root, version, want, TEXT.id_col,
+        names=pcols,
+        cols=["doc_id", *pcols],
+        tag="doclen_lookup",
+        extra=(tuple(pcols),),
+        live=lambda: _doclen_with_payload(spark, root, version=version),
     )
-    if live is not None:
-        return live
-    live = _doclen_with_payload(spark, root, version=version)
-    if want:
-        live = live.filter(F.col("doc_id").isin(want))
-    else:
-        live = live.filter(F.lit(False))
-    return live.select("doc_id", *pcols)
 
 
 def text_index_describe(root: str) -> dict:
@@ -1590,12 +1296,8 @@ def text_index_describe(root: str) -> dict:
     pressure signal), the build-time stoplist, and whether serving is
     pruned (``pruned_serving`` False = a generic doclen compaction
     degraded the bucket map; `text_index_compact` restores it)."""
-    cur = txn.current_version_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    vname = os.path.basename(cur)
-    comp = txn.read_manifest(root, vname)[POSTINGS_COMPONENT]
-    tix = comp.get("tix") or {}
+    vname = sx.pin(root)
+    tix = sx.stored_block(TEXT, root, vname)
     n_docs = int(tix.get("n_docs", 0))
     sum_dl = int(tix.get("sum_dl", 0))
     return {
@@ -1753,11 +1455,7 @@ def text_index_bucket_stats(root: str) -> dict:
                     ).metadata.num_rows
         return total
 
-    cur = txn.current_version_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    comp = txn.read_manifest(root, os.path.basename(cur))[POSTINGS_COMPONENT]
-    tix = comp.get("tix") or {}
+    tix = sx.stored_block(TEXT, root, sx.pin(root))
     bucket_rows = {
         int(b): _rows(seg)
         for b, seg in (tix.get("bucket_segments") or {}).items()

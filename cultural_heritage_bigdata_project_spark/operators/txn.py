@@ -1158,7 +1158,10 @@ def version_plan_memo(spark, root: str, version_name: str, tag: str, builder,
     lookup ids); plans only): a serving workload that re-issues the
     same terms against the same immutable version reuses the compiled
     plan instead of re-deriving it, and every action still reads the
-    parquet inputs. The LRU bound caps the per-process plan count."""
+    parquet inputs. The LRU bound caps the per-process plan count.
+
+    A builder that returns None (the lookup does not apply) is not
+    cached: the entry would only evict hot plans."""
     try:
         st = os.stat(os.path.join(root, version_name, MANIFEST))
         key = (
@@ -1177,7 +1180,9 @@ def version_plan_memo(spark, root: str, version_name: str, tag: str, builder,
         return builder()
     hit = _memo_get(key)
     if hit is None:
-        hit = _memo_put(key, builder())
+        hit = builder()
+        if hit is not None:
+            _memo_put(key, hit)
     return hit
 
 
@@ -1408,21 +1413,14 @@ def _stamp_commit_ts(root: str, dirname: str, op: str | None = None) -> None:
 
 def commit_info(root: str, version: str | int) -> dict | None:
     """``{"ts": <float>, "op": <str | None>}`` for a retained version,
-    or None for versions published before stamping existed. Reads both
-    the JSON stamp and the round-8 plain-float legacy format."""
+    or None for versions published before stamping existed."""
     path = os.path.join(version_dir(root, version), COMMIT_TS)
     try:
         with open(path, encoding="utf-8") as f:
-            raw = f.read().strip()
+            info = json.load(f)
     except FileNotFoundError:
         return None
-    try:
-        info = json.loads(raw)
-    except json.JSONDecodeError:
-        return {"ts": float(raw), "op": None}
-    if isinstance(info, dict):
-        return {"ts": float(info["ts"]), "op": info.get("op")}
-    return {"ts": float(info), "op": None}
+    return {"ts": float(info["ts"]), "op": info.get("op")}
 
 
 def commit_timestamp(root: str, version: str | int) -> float | None:

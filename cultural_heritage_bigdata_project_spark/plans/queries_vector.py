@@ -82,14 +82,6 @@ def _query_list(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float
     return [float(x) for x in row[0]]
 
 
-def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
-    """The query vector as a literal array expression (broadcast-free:
-    it folds into the plan as a constant)."""
-    return F.array(
-        *[F.lit(x) for x in _query_list(spark, sf_dir, vec_id)]
-    ).cast("array<double>")
-
-
 @register(
     "knn_brute_force",
     description="J8/M5 exact kNN: top-10 by cosine against vec_id=0 "

@@ -412,9 +412,7 @@ def batch_upsert_commit(
     for attempt in range(max_attempts):
         cur = txn.current_version_dir(target_dir)
         cur_name = os.path.basename(cur) if cur else None
-        components = (
-            txn.read_manifest(target_dir, cur_name) if cur_name else None
-        )
+        components = _segmented_manifest(target_dir, cur)
         prior = components[""] if components else None
         if components is not None and "" not in components:
             raise ValueError(
@@ -581,10 +579,28 @@ def _next_table_epoch(root: str, prior: dict | None, cur_name: str | None) -> in
     if cur_name:
         names.append(cur_name)
     for name in names:
-        m = re.search(r"(?:v|c|n|m)(\d+)$", name)
+        m = re.search(r"(?:v|c|n)(\d+)$", name)
         if m:
             used.add(int(m.group(1)))
     return (max(used) + 1) if used else 0
+
+
+def _segmented_manifest(root: str, cur: str | None) -> dict | None:
+    """The component manifest of the table's CURRENT version, None
+    before the first commit. Every segmented writer appends to this
+    manifest's read list, so a CURRENT published as plain parquet (no
+    manifest) raises: rebuilding the table from the batch alone would
+    drop every prior row."""
+    if cur is None:
+        return None
+    components = txn.read_manifest(root, os.path.basename(cur))
+    if components is None:
+        raise ValueError(
+            f"{root!r}: current version {os.path.basename(cur)!r} is plain "
+            "parquet without a segment manifest; segmented writers only "
+            "append to manifest-bearing tables"
+        )
+    return components
 
 
 def _upsert_spec(keys, order_desc, delete_col, n_buckets) -> dict:
@@ -780,7 +796,7 @@ def foreach_batch_upsert_run(
     with ``txn.read_version(spark, view_dir)``.
 
     **Key-bucketed layout** (``n_buckets``): every segment (delta,
-    migration, compaction) is written hash-bucketed on ``keys``
+    compaction) is written hash-bucketed on ``keys``
     (``txn.BUCKET_COL`` partition dirs) — one O(batch) shuffle per
     epoch at write time — and every read folds per-bucket with ZERO
     Exchange, even between compactions (``txn.bucketed_reconstruct``;
@@ -862,9 +878,7 @@ def foreach_batch_upsert_run(
 
     def _upsert_epoch_attempt(batch_df: DataFrame, epoch_id: int) -> bool:
         cur = txn.current_version_dir(tdir)
-        components = (
-            txn.read_manifest(tdir, os.path.basename(cur)) if cur else None
-        )
+        components = _segmented_manifest(tdir, cur)
         prior = components[""] if components else None
         if cur is not None:
             # crash-window replay: THIS sink already committed THIS
@@ -906,16 +920,7 @@ def foreach_batch_upsert_run(
                 break
             except FileExistsError:
                 table_epoch += 1  # claimed by a competitor / crash relic
-        if cur is not None and components is None:
-            # legacy plain-parquet version (pre-segmented layout): fold
-            # the whole table in as the oldest delta segment, once
-            mig = f"upsert_m{table_epoch}"
-            migrated = spark.read.parquet(cur).withColumn(
-                _SEQ_COL, F.lit(-1).cast("long")
-            )
-            segments = [mig] if _write_segment(migrated, mig) else []
-        else:
-            segments = list(components[""]["segments"]) if components else []
+        segments = list(components[""]["segments"]) if components else []
         latest = cleanse.dedup_first_wins(batch_df, keys, order_cols).withColumn(
             _SEQ_COL, F.lit(int(table_epoch)).cast("long")
         )
@@ -999,7 +1004,6 @@ def foreach_batch_upsert_run(
                 f"upsert_v{table_epoch}",
                 f"upsert_c{table_epoch}",
                 f"upsert_n{table_epoch}",
-                f"upsert_m{table_epoch}",
             }:
                 shutil.rmtree(txn.segment_path(tdir, s), ignore_errors=True)
             return False
@@ -1064,7 +1068,6 @@ def foreach_batch_scd2_run(
     os.makedirs(tdir, exist_ok=True)
     txn.cleanup_unpublished(tdir)
     order_cols = [F.col(ts_col).desc()]
-    scd_cols = [*keys, *change_cols, "valid_from", "valid_to", "is_current"]
 
     def scd2_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cur = txn.current_version_dir(tdir)
@@ -1084,26 +1087,11 @@ def foreach_batch_scd2_run(
                 F.lit(True).alias("is_current"),
             )
         else:
-            components = txn.read_manifest(tdir, os.path.basename(cur))
-            if components is None:
-                # legacy full-table version: split once — open rows join,
-                # accumulated history becomes the first immutable segment
-                full = spark.read.parquet(cur)
-                cur_df = full.filter(F.col("is_current")).select(*scd_cols)
-                hist = full.filter(
-                    ~F.coalesce(F.col("is_current"), F.lit(False))
-                ).select(*scd_cols)
-                mig = f"hist_m{epoch_id}"
-                mdir = txn.segment_path(tdir, mig)
-                shutil.rmtree(mdir, ignore_errors=True)
-                hist.write.mode("overwrite").parquet(mdir)
-                if txn._has_parquet(mdir):
-                    segments.append(mig)
-            else:
-                cur_df = spark.read.parquet(
-                    os.path.join(cur, components[""]["base"])
-                )
-                segments = list(components[""]["segments"])
+            components = _segmented_manifest(tdir, cur)
+            cur_df = spark.read.parquet(
+                os.path.join(cur, components[""]["base"])
+            )
+            segments = list(components[""]["segments"])
             new_current, closed = merge.scd2_delta(
                 cur_df,
                 latest.select(*keys, *change_cols, ts_col),
@@ -1220,10 +1208,7 @@ def streaming_corpus_dedup_run(
             # epoch already published; a replay after a crash between
             # publish and checkpoint commit is a no-op — see upsert_batch
             return
-        components = (
-            txn.read_manifest(tdir, os.path.basename(cur)) if cur else None
-        )
-        legacy = cur is not None and components is None
+        components = _segmented_manifest(tdir, cur)
 
         def seen(comp: str) -> DataFrame | None:
             """Accumulated state of a component (None before first data).
@@ -1231,8 +1216,6 @@ def streaming_corpus_dedup_run(
             but never rewritten."""
             if cur is None:
                 return None
-            if legacy:  # pre-segmented full-directory layout
-                return spark.read.parquet(os.path.join(cur, comp))
             segs = components[comp]["segments"]
             if not segs:
                 return None
@@ -1243,16 +1226,6 @@ def streaming_corpus_dedup_run(
         def prev_segments(comp: str) -> list[str]:
             if cur is None:
                 return []
-            if legacy:
-                # one-time migration: fold the legacy full component in
-                # as this epoch's first immutable segment
-                mig = f"{comp}_m{epoch_id}"
-                mdir = txn.segment_path(tdir, mig)
-                shutil.rmtree(mdir, ignore_errors=True)
-                spark.read.parquet(os.path.join(cur, comp)).write.mode(
-                    "overwrite"
-                ).parquet(mdir)
-                return [mig] if txn._has_parquet(mdir) else []
             return list(components[comp]["segments"])
 
         batch_df = batch_df.localCheckpoint(eager=True)

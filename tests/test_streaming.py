@@ -442,6 +442,36 @@ def test_batch_upsert_commit_merge_semantics(spark, tmp_path):
     assert feed.count() == 4  # epoch1: 3 rows, epoch2: 1 row
 
 
+def test_upsert_writers_refuse_plain_parquet_current(spark, tmp_path):
+    """A CURRENT published as plain parquet (no segment manifest) makes
+    both the batch MERGE and the streaming sink raise: a new version
+    holding only the batch would silently drop every prior row."""
+    from cultural_heritage_bigdata_project_spark.operators import txn
+
+    tdir = str(tmp_path / "t")
+    prior = spark.createDataFrame(
+        [(1, 10, "a"), (2, 10, "b")], "id long, v long, val string"
+    )
+    prior.write.parquet(os.path.join(tdir, "data_v0"))
+    txn.publish_version(tdir, "data_v0")
+    batch = spark.createDataFrame([(3, 20, "c")], "id long, v long, val string")
+
+    with pytest.raises(ValueError, match="plain parquet"):
+        streaming.batch_upsert_commit(spark, batch, ["id"], ["v"], tdir)
+
+    src = str(tmp_path / "src")
+    batch.coalesce(1).write.parquet(os.path.join(src, "f0"))
+    stream = spark.readStream.schema(batch.schema).parquet(os.path.join(src, "*"))
+    with pytest.raises(Exception, match="plain parquet"):
+        streaming.foreach_batch_upsert_run(
+            spark, stream, keys=["id"], order_desc=["v"], target_dir=tdir,
+            reset=False,
+        )
+
+    assert os.path.basename(txn.current_version_dir(tdir)) == "data_v0"
+    assert sorted(r.id for r in txn.read_version(spark, tdir).collect()) == [1, 2]
+
+
 def test_batch_upsert_interleaves_with_streaming_sink(spark, tmp_path):
     """A batch backfill and the streaming sink commit into ONE table:
     the batch epoch lands above the sink's epochs, the sink resumes on

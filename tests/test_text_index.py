@@ -353,6 +353,9 @@ def test_compaction_folds_delta_tail(spark, tmp_path, monkeypatch):
         return real(s, paths)
 
     monkeypatch.setattr(txn, "_read_segment_union", spy)
+    # an empty plan memo: the serve above cached this exact probe plan,
+    # and a memo hit would build no segment union to observe
+    monkeypatch.setattr(txn, "_READ_PLAN_MEMO", {})
     text_index.text_index_search(spark, root, TERMS, top_k=10).collect()
     probe = [p for p in seen if any("/tix_" in x for x in p)]
     assert probe, "probe did not go through the segment union"
@@ -590,6 +593,9 @@ def test_compaction_restores_pruning_from_degraded_state(spark, tmp_path, monkey
         return real(s, paths)
 
     monkeypatch.setattr(txn, "_read_segment_union", spy)
+    # an empty plan memo: the serve above cached this exact probe plan,
+    # and a memo hit would build no segment union to observe
+    monkeypatch.setattr(txn, "_READ_PLAN_MEMO", {})
     text_index.text_index_search(spark, root, TERMS, top_k=10).collect()
     probe = [p for p in seen if any("/tix_" in x for x in p)]
     want_buckets = {text_index._bucket_py(t, 16) for t in TERMS}
