@@ -22,9 +22,10 @@ The artifact also self-labels machine contention (round-6 lesson: a
 driver bench ran concurrently with external load and recorded 10x
 medians; only an idle re-run could prove the code hadn't regressed):
 "load" carries the 1-minute /proc/loadavg sampled before each query's
-repeat block plus start/end, and "cpus" the machine's CPU count — a
-load far above cpus at sample time explains an inflated sample from
-the artifact alone.
+repeat block plus start/end, and "cpus" the session's effective
+parallelism (``spark.sparkContext.defaultParallelism``, the N of
+``local[N]``) — a load far above cpus at sample time explains an
+inflated sample from the artifact alone.
 
 Round 10 adds a per-query CANARY (r9 VERDICT item 6): loadavg misses
 degraded-host phases where guest load stays ~1 yet identical code
@@ -199,6 +200,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
     catalog_queries()  # force registration of every query module
     # benchmark the raw per-operator queries: digest bundles (driver-slot
     # consolidation) would time serialization, not the operators
@@ -351,7 +353,7 @@ def main() -> None:
         "flagship_first_run_sec": flagship_first,
         "load": load,
         "canary": canary,
-        "cpus": os.cpu_count(),
+        "cpus": cpus,
         "sf": sf,
     }
     sidecar = os.environ.get("SPARK_GRAFT_BENCH_SIDECAR", "bench_details.json")
@@ -372,7 +374,7 @@ def main() -> None:
         "stream_commit_sec": {
             k: round(statistics.median(v), 2) for k, v in stream_commit.items()
         },
-        "cpus": os.cpu_count(),
+        "cpus": cpus,
         "sf": sf,
     }
     line = json.dumps(compact, separators=(",", ":"))

@@ -12,13 +12,18 @@ Two remedies, both POSIX-rename-atomic:
 - **Versioned publish** (`publish_version` / `current_version_dir`):
   data lives in ``data_v{N}`` directories under a table root; the
   committed version is whatever the ``CURRENT`` pointer file names.
-  Publishing = write the new directory, then atomically rename a tmp
-  pointer over ``CURRENT``. There is no moment where the table is
-  missing; a crash leaves at worst an unreferenced directory, removed
-  by `cleanup_unpublished` on the next run. This is the single-node
-  analog of a Delta/Iceberg commit log (one pointer instead of a log),
-  and maps to `_delta_log`/metastore pointer swaps on a cluster
-  (ref eu_raw_to_cleansed_merge.py:62-69 staging-table transaction).
+  Publishing = write the new directory, then swap the pointer. There
+  is no moment where the table is missing; a crash leaves at worst an
+  unreferenced directory, removed by `cleanup_unpublished` on the next
+  run. This is the single-node analog of a Delta/Iceberg commit log
+  (one pointer instead of a log), and maps to `_delta_log`/metastore
+  pointer swaps on a cluster (ref eu_raw_to_cleansed_merge.py:62-69
+  staging-table transaction).
+
+- **One commit protocol.** Every publish swaps the pointer in
+  `_swap_pointer` through a `ConditionalPutStore` (default
+  `FileConditionalPutStore`, the local file under its pointer lock);
+  every multi-writer commit runs the one OCC loop `_occ_commit`.
 
 - **Swap recovery** (`recover_swap`): for plain-path tables whose
   contract is "this directory IS the parquet table", the in-place
@@ -38,7 +43,6 @@ from contextlib import contextmanager
 CURRENT = "CURRENT"
 MANIFEST = "MANIFEST.json"
 SEGMENTS_DIR = "segments"
-COMMIT_LOCK = "COMMIT.lock"
 # hash-bucket partition column for key-bucketed segments: every base/
 # delta/rewrite file of a component whose reconstruct spec carries
 # "buckets": N lives under <dir>/__sg_bucket=<pmod(hash(keys), N)>/, so
@@ -1358,8 +1362,8 @@ def read_external_pins(root: str) -> list[str]:
 
 def set_external_pins(root: str, names: list[str]) -> None:
     """Declare the externally-pinned version names of this table
-    (atomic replace). Retention (`try_publish_version`) keeps a pinned
-    version in the pointer beyond ``keep_last`` and GC
+    (atomic replace). Retention (every publish's `_swap_pointer`) keeps
+    a pinned version in the pointer beyond ``keep_last`` and GC
     (`cleanup_unpublished`/`vacuum`) never collects it — so a
     composition layer whose pin lags CURRENT (a collection whose pin
     publish crashed, then several space commits) can always restore or
@@ -1503,19 +1507,12 @@ def publish_version(
     default 0 is the single-writer behavior; pass a positive window
     when ANY other writer (a concurrent maintenance rewrite, a second
     sink) may hold a freshly written, not-yet-published version dir —
-    otherwise this publish's GC can delete it mid-commit.
+    otherwise this publish's GC can delete it mid-commit. The swap is
+    `try_publish_version`'s without its expected-current check.
     """
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    retained = [dirname] + [n for n in _read_pointer(root) if n != dirname]
-    retained = retained[:keep_last]
-    _stamp_commit_ts(root, dirname, op=op)
-    tmp = os.path.join(root, CURRENT + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write("\n".join(retained))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(root, CURRENT))
+    _swap_pointer(root, dirname, keep_last, op, None)
     cleanup_unpublished(root, grace_seconds=grace_seconds)
     return os.path.join(root, dirname)
 
@@ -1611,13 +1608,16 @@ def cleanup_unpublished(
                 if not dry_run:
                     shutil.rmtree(spath, ignore_errors=True)
                 removed.append(os.path.join(SEGMENTS_DIR, name))
-    stale_tmp = os.path.join(root, CURRENT + ".tmp")
-    if os.path.exists(stale_tmp):
-        # report in BOTH modes so dry-run output is exactly what a real
-        # vacuum reclaims (round-6 advice)
-        if not dry_run:
-            os.remove(stale_tmp)
-        removed.append(CURRENT + ".tmp")
+    # under the pointer lock a CURRENT.tmp can only be a crash relic:
+    # a live publish holds the lock from its tmp write to its rename
+    with FileConditionalPutStore(root)._cas_lock():
+        stale_tmp = os.path.join(root, CURRENT + ".tmp")
+        if os.path.exists(stale_tmp):
+            # report in BOTH modes so dry-run output is exactly what a
+            # real vacuum reclaims (round-6 advice)
+            if not dry_run:
+                os.remove(stale_tmp)
+            removed.append(CURRENT + ".tmp")
     return removed
 
 
@@ -1628,19 +1628,19 @@ class PointerConflict(RuntimeError):
 
 
 class ConditionalPutStore:
-    """Pointer-store contract for object stores WITHOUT atomic rename
-    but WITH conditional writes (S3 ``If-None-Match``/``If-Match``, GCS
-    ``x-goog-if-generation-match``, ABFS ETags) — the Delta LogStore
-    analog for this layout's single CURRENT pointer.
+    """Pointer-store contract: the seam every pointer swap goes through
+    (`_swap_pointer`). Object stores WITHOUT atomic rename but WITH
+    conditional writes (S3 ``If-None-Match``/``If-Match``, GCS
+    ``x-goog-if-generation-match``, ABFS ETags) implement it directly —
+    the Delta LogStore analog for this layout's single CURRENT pointer.
 
     ``read()`` returns ``(lines, tag)`` where ``tag`` identifies the
     exact pointer generation observed (``None`` = pointer absent);
     ``put_if(lines, expected_tag)`` atomically replaces the pointer
     ONLY if it still carries ``expected_tag`` (``None`` = must not
-    exist yet), raising `PointerConflict` otherwise. With those two
-    primitives the whole flock critical section in `_commit_lock`
-    disappears: the compare-and-swap happens inside the store's one
-    conditional PUT. See DEPLOYMENT.md "Object-store commits".
+    exist yet), raising `PointerConflict` otherwise. The compare-and-
+    swap happens inside the store's one conditional PUT. See
+    DEPLOYMENT.md "Object-store commits".
     """
 
     def read(self) -> tuple[list[str], object]:
@@ -1651,12 +1651,12 @@ class ConditionalPutStore:
 
 
 class FileConditionalPutStore(ConditionalPutStore):
-    """Reference ConditionalPutStore over the local CURRENT file.
+    """The default ConditionalPutStore: the local CURRENT file.
 
-    ``put_if``'s read-check-replace runs under an flock on a pointer
-    lock file, making it an actual correct compare-and-swap on a local
-    (or NFSv4+/HDFS-mounted) filesystem — POSIX alone has no CAS on
-    file content, and the pre-round-6 unlocked check window let two
+    ``put_if``'s read-check-replace runs under an flock on the table's
+    pointer lock file, making it an actual correct compare-and-swap on
+    a local (or NFSv4+/HDFS-mounted) filesystem — POSIX alone has no
+    CAS on file content, and an unlocked check window lets two
     simultaneous put_if calls both pass the tag check. Real object
     stores get the same atomicity from the store's conditional write
     (S3 If-Match, GCS generation-match) with no lock at all; this class
@@ -1681,11 +1681,19 @@ class FileConditionalPutStore(ConditionalPutStore):
         return lines, hashlib.sha256(content.encode("utf-8")).hexdigest()
 
     @contextmanager
-    def _cas_lock(self):
+    def _cas_lock(self, timeout: float = 180.0):
         """Serialize the check-then-replace window (the object store's
         conditional PUT does this natively; a local file needs flock).
-        A distinct lock file from COMMIT_LOCK so pointer CAS and the
-        legacy flock publish path can never deadlock each other."""
+        Advisory `flock`: released automatically if the holder dies, so
+        a crashed committer can never wedge the table.
+
+        The timeout is deliberately generous: the critical section is
+        milliseconds, so a timeout only fires on a wedged NFS mount or a
+        machine so oversubscribed the waiter is starved — 30s proved
+        reachable on a saturated CI box (full pytest + a parallel
+        local[32] Spark job), and a spurious TimeoutError surfaces to
+        callers as a commit failure, which is strictly worse than
+        waiting out the load."""
         import fcntl
 
         os.makedirs(self.root, exist_ok=True)
@@ -1695,7 +1703,18 @@ class FileConditionalPutStore(ConditionalPutStore):
             0o644,
         )
         try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
+            deadline = time.monotonic() + timeout
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.monotonic() >= deadline:
+                        raise TimeoutError(
+                            f"pointer lock on {self.root!r} not acquired "
+                            f"in {timeout}s"
+                        )
+                    time.sleep(0.005)
             yield
             fcntl.flock(fd, fcntl.LOCK_UN)
         finally:
@@ -1731,43 +1750,45 @@ class CommitConflict(RuntimeError):
         )
 
 
-@contextmanager
-def _commit_lock(root: str, timeout: float = 180.0):
-    """Serialize the read-compare-rename critical section of a CAS
-    publish. Advisory `flock` on a lock file: released automatically
-    if the holder dies, so a crashed committer can never wedge the
-    table. Single-node analog of the conditional-put (If-Match ETag)
-    an object store provides natively — on S3/GCS/ABFS the lock
-    disappears and `try_publish_version` becomes one conditional PUT
-    of the pointer object (exactly how Delta coordinates S3 commits).
+_UNCHECKED = object()  # `_swap_pointer` expected-current: last writer wins
 
-    The timeout is deliberately generous: the critical section is
-    milliseconds, so a timeout only fires on a wedged NFS mount or a
-    machine so oversubscribed the waiter is starved — 30s proved
-    reachable on a saturated CI box (full pytest + a parallel
-    local[32] Spark job), and a spurious TimeoutError surfaces to
-    callers as a commit failure, which is strictly worse than waiting
-    out the load."""
-    import fcntl
 
-    os.makedirs(root, exist_ok=True)
-    fd = os.open(os.path.join(root, COMMIT_LOCK), os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                break
-            except BlockingIOError:
-                if time.monotonic() >= deadline:
-                    raise TimeoutError(
-                        f"commit lock on {root!r} not acquired in {timeout}s"
-                    )
-                time.sleep(0.005)
-        yield
-        fcntl.flock(fd, fcntl.LOCK_UN)
-    finally:
-        os.close(fd)
+def _swap_pointer(
+    root: str,
+    dirname: str,
+    keep_last: int,
+    op: str | None,
+    store: ConditionalPutStore | None,
+    expected: object = _UNCHECKED,
+) -> None:
+    """The one pointer swap: read the pointer, retain ``dirname`` plus
+    its ``keep_last - 1`` newest predecessors and any externally pinned
+    versions (`_retained_with_pins`), stamp the commit, then
+    ``put_if`` against the generation read. With ``expected`` given, a
+    current version other than it — or a competitor's swap between the
+    read and the put — raises `CommitConflict`; unchecked
+    (`publish_version`) a lost put re-reads and retries. Retention is
+    part of the same conditional write, so a crash can never orphan a
+    retained version or retain an orphan."""
+    store = store or FileConditionalPutStore(root)
+    while True:
+        names, tag = store.read()
+        actual = names[0] if names else None
+        if expected is not _UNCHECKED and actual != expected:
+            raise CommitConflict(expected, actual)
+        retained = _retained_with_pins(
+            root, ([dirname] + [n for n in names if n != dirname])[:keep_last]
+        )
+        _stamp_commit_ts(root, dirname, op=op)
+        try:
+            store.put_if(retained, tag)
+            return
+        except PointerConflict:
+            if expected is not _UNCHECKED:
+                now_names, _ = store.read()
+                raise CommitConflict(
+                    expected, now_names[0] if now_names else None
+                ) from None
 
 
 def try_publish_version(
@@ -1783,62 +1804,26 @@ def try_publish_version(
     at ``root/dirname`` ONLY if the committed version is still
     ``expected_current`` (None = table not yet published). Raises
     `CommitConflict` otherwise — the caller re-reads the new current,
-    rebases its work, and retries (`commit_with_retry` wraps the loop).
-
-    This closes the one table-format gap `publish_version` left open:
-    two independent writers (a streaming sink + a nightly compaction,
-    two backfill jobs) can now both commit safely — the loser LOSES
-    (detects the conflict) instead of silently clobbering the winner's
-    version, the lost-update anomaly last-writer-wins allows.
+    rebases its work, and retries (`commit_with_retry` wraps the loop):
+    of two racing writers the loser detects the conflict instead of
+    silently clobbering the winner (the last-writer-wins lost update).
 
     GC uses ``grace_seconds`` (default 1h) so a competitor's freshly
     written, not-yet-published version directory survives this
     writer's cleanup; pass 0 only in single-writer contexts.
 
-    ``pointer_store`` selects the commit mechanism: ``None`` (default)
-    uses the flock + atomic-rename critical section — correct on
-    local/HDFS, NOT on S3-class object stores (no atomic rename, no
-    mutual exclusion). Passing a `ConditionalPutStore` replaces the
-    lock with one conditional PUT of the pointer: the store's own
-    compare-and-swap serializes racing committers (Delta LogStore
-    style), with `PointerConflict` surfacing here as `CommitConflict`.
+    ``pointer_store`` is where the pointer lives: ``None`` (default)
+    is `FileConditionalPutStore(root)`, the local CURRENT file — correct
+    on local/HDFS filesystems. On S3-class object stores (no atomic
+    rename, no cross-client locks) pass a `ConditionalPutStore` whose
+    conditional PUT is the compare-and-swap (Delta LogStore style);
+    `PointerConflict` surfaces here as `CommitConflict`.
     """
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    if pointer_store is None:
-        with _commit_lock(root):
-            names = _read_pointer(root)
-            actual = names[0] if names else None
-            if actual != expected_current:
-                raise CommitConflict(expected_current, actual)
-            retained = _retained_with_pins(
-                root,
-                ([dirname] + [n for n in names if n != dirname])[:keep_last],
-            )
-            _stamp_commit_ts(root, dirname, op=op)
-            tmp = os.path.join(root, CURRENT + ".tmp")
-            with open(tmp, "w", encoding="utf-8") as f:
-                f.write("\n".join(retained))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(root, CURRENT))
-    else:
-        names, tag = pointer_store.read()
-        actual = names[0] if names else None
-        if actual != expected_current:
-            raise CommitConflict(expected_current, actual)
-        retained = _retained_with_pins(
-            root,
-            ([dirname] + [n for n in names if n != dirname])[:keep_last],
-        )
-        _stamp_commit_ts(root, dirname, op=op)
-        try:
-            pointer_store.put_if(retained, tag)
-        except PointerConflict:
-            now_names, _ = pointer_store.read()
-            raise CommitConflict(
-                expected_current, now_names[0] if now_names else None
-            ) from None
+    _swap_pointer(
+        root, dirname, keep_last, op, pointer_store, expected=expected_current
+    )
     cleanup_unpublished(root, grace_seconds=grace_seconds)
     return os.path.join(root, dirname)
 
@@ -1857,6 +1842,91 @@ def next_version_name(root: str) -> str:
     return f"data_v{n + 1}"
 
 
+class _Attempt:
+    """One `_occ_commit` pass: the current version it read
+    (``expected``, directory ``cur``), its index ``n`` and the paths it
+    created, all removed if it fails or loses the CAS."""
+
+    def __init__(self, root: str, expected: str | None, n: int):
+        self.root, self.expected, self.n = root, expected, n
+        self.cur = os.path.join(root, expected) if expected else None
+        self.created: list[str] = []
+
+    def claim(self, names) -> str:
+        """Exclusively create the first free version directory among
+        ``names`` (an endless iterator). Writers that read the same
+        pointer derive the same name; without the claim they would
+        build into ONE directory and the loser's discard would delete
+        the winner's published data (an object store claims with an
+        If-None-Match marker)."""
+        for name in names:
+            path = os.path.join(self.root, name)
+            try:
+                os.makedirs(path)
+            except FileExistsError:
+                continue  # a competitor's or a crash relic
+            self.created.append(path)
+            return name
+
+
+def _rewrite_names(n: int):
+    """Claim candidates for restore/maintenance versions:
+    ``data_vx<millis>a<attempt>`` — non-numeric, so change feeds skip
+    them (a rewrite is never a change)."""
+    return iter(lambda: f"data_vx{int(time.time() * 1000)}a{n}", None)
+
+
+def _occ_commit(
+    root: str,
+    attempt,
+    keep_last: int | None,
+    grace_seconds: float,
+    op: str | None,
+    max_attempts: int,
+    what: str = "commit",
+    pointer_store: ConditionalPutStore | None = None,
+):
+    """The one optimistic-concurrency loop every versioned-table writer
+    commits through: read the pointer, run ``attempt(a: _Attempt) ->
+    (vname, result)`` — claim a version name (``a.claim``) and build it
+    from the current version ``a.cur`` — then CAS-publish ``vname``
+    against that read. On a lost race the attempt's paths are removed
+    and it re-runs on the new current, so every committed version
+    derives from its immediate predecessor (no lost updates). Returns
+    ``result``; ``vname=None`` means nothing to commit.
+
+    A failed attempt leaves nothing behind; publish-side errors other
+    than a conflict are NOT cleaned (after the swap the directory is
+    live data). ``keep_last=None`` keeps every retained version (a
+    rewrite or restore never shortens history)."""
+    store = pointer_store or FileConditionalPutStore(root)
+    for n in range(max_attempts):
+        names, _tag = store.read()
+        a = _Attempt(root, names[0] if names else None, n)
+        try:
+            try:
+                vname, result = attempt(a)
+                if vname is None:
+                    return result
+            except BaseException:
+                for path in a.created:
+                    shutil.rmtree(path, ignore_errors=True)
+                raise
+            keep = len(list_versions(root)) + 1 if keep_last is None else keep_last
+            try_publish_version(
+                root, vname, a.expected, keep_last=keep,
+                grace_seconds=grace_seconds, pointer_store=pointer_store, op=op,
+            )
+            return result
+        except CommitConflict:
+            for path in a.created:
+                shutil.rmtree(path, ignore_errors=True)
+    raise RuntimeError(
+        f"{what} on {root!r} lost {max_attempts} consecutive commit races; "
+        "quiesce the writers or raise max_attempts"
+    )
+
+
 def commit_with_retry(
     root: str,
     build,
@@ -1871,78 +1941,23 @@ def commit_with_retry(
     version's full contents into ``new_dir`` derived from the current
     version it was shown; the CAS publish then succeeds only if that
     current is STILL current. On conflict the half-built directory is
-    removed and ``build`` re-runs against the new current — every
-    committed version is therefore derived from its immediate
-    predecessor (no lost updates), the OCC loop of every log-structured
-    table format. Returns the committed version directory."""
-    for _ in range(max_attempts):
-        if pointer_store is None:
-            with _commit_lock(root):
-                names = _read_pointer(root)
-                expected = names[0] if names else None
-                while True:
-                    dirname = next_version_name(root)
-                    new_dir = os.path.join(root, dirname)
-                    try:
-                        os.makedirs(new_dir)
-                        break
-                    except FileExistsError:
-                        continue  # claimed outside the lock → next name
-        else:
-            # no lock needed for the pointer read: a stale read just
-            # loses the CAS publish below. The version NAME, however,
-            # must be claimed exclusively — two racing writers that both
-            # read the same pointer would both derive the same
-            # next_version_name(), build into the SAME directory, and
-            # the loser's conflict cleanup would delete the winner's
-            # just-published data. Exclusive makedirs is the local
-            # claim primitive (FileExistsError = name taken, rescan);
-            # an object-store deployment claims the name with a
-            # conditional-create marker (If-None-Match) the same way.
-            names, _tag = pointer_store.read()
-            expected = names[0] if names else None
-            while True:
-                dirname = next_version_name(root)
-                new_dir = os.path.join(root, dirname)
-                try:
-                    os.makedirs(new_dir)
-                    break
-                except FileExistsError:
-                    continue  # competitor's dir now on disk → next name
-        try:
-            try:
-                build(
-                    os.path.join(root, expected) if expected else None, new_dir
-                )
-            except CommitConflict:
-                raise
-            except BaseException:
-                # a failed build (validation error, job failure) must
-                # not leave its claimed half-built dir behind — safe to
-                # remove here because nothing unpublished is visible
-                # and this writer exclusively owns the name; publish-
-                # side exceptions are NOT cleaned (after the pointer
-                # swap the dir is live data)
-                shutil.rmtree(new_dir, ignore_errors=True)
-                raise
-            return try_publish_version(
-                root,
-                dirname,
-                expected,
-                keep_last=keep_last,
-                grace_seconds=grace_seconds,
-                pointer_store=pointer_store,
-                op=op,
-            )
-        except CommitConflict:
-            # safe: new_dir was exclusively created by THIS writer (the
-            # flock branch allocates under the lock; the store branch
-            # claims via exclusive makedirs), so it cannot name another
-            # writer's published version
-            shutil.rmtree(new_dir, ignore_errors=True)
-    raise RuntimeError(
-        f"commit on {root!r} lost {max_attempts} consecutive races; "
-        "raise max_attempts or serialize the writers"
+    removed and ``build`` re-runs against the new current
+    (`_occ_commit`). Returns the committed version directory."""
+
+    def attempt(a: _Attempt):
+        dirname = a.claim(iter(lambda: next_version_name(root), None))
+        new_dir = os.path.join(root, dirname)
+        build(a.cur, new_dir)
+        return dirname, new_dir
+
+    return _occ_commit(
+        root,
+        attempt,
+        keep_last,
+        grace_seconds,
+        op,
+        max_attempts,
+        pointer_store=pointer_store,
     )
 
 
@@ -2268,20 +2283,17 @@ def restore_version(
     version-local ``base`` component copies its base directory the same
     way. Restoring to the version that is already current is a no-op
     returning the current directory."""
-    for attempt in range(max_attempts):
-        cur = current_version_dir(root)
-        if cur is None:
+
+    def attempt(a: _Attempt):
+        if a.cur is None:
             raise FileNotFoundError(f"nothing published under {root!r}")
-        cur_name = os.path.basename(cur)
         target = version_dir(root, version)  # KeyError if not retained
         target_name = os.path.basename(target)
-        if target_name == cur_name:
-            return cur
+        if target_name == a.expected:
+            return None, a.cur
         components = read_manifest(root, target_name)
-        vname = f"data_vx{int(time.time() * 1000)}a{attempt}"
+        vname = a.claim(_rewrite_names(a.n))
         vdir = os.path.join(root, vname)
-        shutil.rmtree(vdir, ignore_errors=True)
-        os.makedirs(vdir)
         if components is None:
             for entry in os.listdir(target):
                 src = os.path.join(target, entry)
@@ -2303,20 +2315,10 @@ def restore_version(
                 comp["changes"] = []
                 new_components[name] = comp
             write_manifest(root, vname, new_components)
-        try:
-            return try_publish_version(
-                root,
-                vname,
-                expected_current=cur_name,
-                keep_last=len(list_versions(root)) + 1,
-                grace_seconds=3600.0,
-                op="restore",
-            )
-        except CommitConflict:
-            shutil.rmtree(vdir, ignore_errors=True)
-    raise RuntimeError(
-        f"restore on {root!r} lost {max_attempts} consecutive commit "
-        "races; quiesce the writers or raise max_attempts"
+        return vname, vdir
+
+    return _occ_commit(
+        root, attempt, None, 3600.0, "restore", max_attempts, what="restore"
     )
 
 
@@ -2386,20 +2388,23 @@ def _maintenance_rewrite(
     tail=None,
     max_attempts: int = 10,
 ):
-    """Shared OCC loop for maintenance rewrites (compaction, tombstone
-    expiry): derive the rewritten state from the CURRENT version, write
-    it as one collapsed segment + manifest-only version, and publish
-    with a CAS against that same current — a sink epoch committed in
-    between surfaces as `CommitConflict` and the rewrite re-runs
-    against the new current instead of silently dropping the epoch's
-    segment from the read list (round-5 ADVICE medium). GC inside the
-    CAS publish runs with a 1h grace so a concurrent writer's in-flight
-    version directory survives.
+    """Shared attempt body for maintenance rewrites (compaction,
+    tombstone expiry), committed through `_occ_commit`: derive the
+    rewritten state from the CURRENT version, write it as one collapsed
+    segment + manifest-only version, and publish with a CAS against
+    that same current — a sink epoch committed in between surfaces as
+    `CommitConflict` and the rewrite re-runs against the new current
+    instead of silently dropping the epoch's segment from the read list
+    (round-5 ADVICE medium). GC inside the CAS publish runs with a 1h
+    grace so a concurrent writer's in-flight version directory
+    survives.
 
     ``rewrite(comp, spec, cur) -> (DataFrame, payload, align)``
     computes the collapsed state (``align`` as in
     `_write_maybe_bucketed`); ``check(comp, spec)`` validates
-    preconditions. Returns ``(committed_dir, payload)``.
+    preconditions and returns True when the component needs no rewrite
+    (nothing is committed: ``(None, None)``). Returns
+    ``(committed_dir, payload)``.
 
     ``tail(comp) -> list[str]`` (optional) names existing segments to
     CARRY OVER after the rewritten one — the minor-compaction shape:
@@ -2410,20 +2415,20 @@ def _maintenance_rewrite(
     Re-evaluated per CAS attempt, so a sink epoch that lands mid-
     rewrite keeps its segment in the next attempt's tail.
     """
-    for attempt in range(max_attempts):
-        cur = current_version_dir(root)
-        if cur is None:
+
+    def attempt(a: _Attempt):
+        if a.cur is None:
             raise FileNotFoundError(f"nothing published under {root!r}")
-        cur_name = os.path.basename(cur)
-        components = read_manifest(root, cur_name)
+        components = read_manifest(root, a.expected)
         if components is None or component not in components:
             raise ValueError(
-                f"version {cur_name!r} has no segmented component "
+                f"version {a.expected!r} has no segmented component "
                 f"{component!r}"
             )
         comp = components[component]
         spec = comp.get("reconstruct")
-        check(comp, spec)
+        if check(comp, spec):
+            return None, (None, None)
         # sibling components of a composite commit carry over verbatim —
         # only the rewritten component's read list changes. A sibling
         # whose base lives INSIDE the old version dir cannot carry over
@@ -2436,20 +2441,15 @@ def _maintenance_rewrite(
                     "cannot carry across a maintenance rewrite; compact "
                     "it into segments first"
                 )
-        folded, payload, align = rewrite(comp, spec, cur)
+        folded, payload, align = rewrite(comp, spec, a.cur)
         tail_segs = list(tail(comp)) if tail is not None else []
-        # '_x...' suffix: a rewrite, never a change (change feeds skip
-        # non-numeric epochs); the attempt index keeps retry names
-        # unique even within one millisecond
-        epoch_tag = f"x{int(time.time() * 1000)}a{attempt}"
-        seg = f"{kind}_{epoch_tag}"
+        vname = a.claim(_rewrite_names(a.n))
+        # the segment shares the version's '_x...' tag: a rewrite, never
+        # a change (change feeds skip non-numeric epochs)
+        seg = f"{kind}_{vname[len('data_v'):]}"
         sdir = segment_path(root, seg)
-        shutil.rmtree(sdir, ignore_errors=True)
+        a.created.append(sdir)
         _write_maybe_bucketed(folded, sdir, spec, align=align)
-        vname = f"data_v{epoch_tag}"
-        vdir = os.path.join(root, vname)
-        shutil.rmtree(vdir, ignore_errors=True)
-        os.makedirs(vdir)
         new_components = dict(components)
         kept = ([seg] if _has_parquet(sdir) else []) + tail_segs
         internal = {spec.get("seq_col") if spec else None, BUCKET_COL}
@@ -2487,24 +2487,13 @@ def _maintenance_rewrite(
             ),
         }
         write_manifest(root, vname, new_components)
-        try:
-            # preserve the caller's retention: prior versions (and
-            # their change-feed records) stay readable
-            committed = try_publish_version(
-                root,
-                vname,
-                expected_current=cur_name,
-                keep_last=len(list_versions(root)) + 1,
-                grace_seconds=3600.0,
-                op=kind,
-            )
-            return committed, payload
-        except CommitConflict:
-            shutil.rmtree(vdir, ignore_errors=True)
-            shutil.rmtree(sdir, ignore_errors=True)
-    raise RuntimeError(
-        f"maintenance rewrite on {root!r} lost {max_attempts} consecutive "
-        "commit races; quiesce the sink or raise max_attempts"
+        return vname, (os.path.join(root, vname), payload)
+
+    # keep_last=None preserves the caller's retention: prior versions
+    # (and their change-feed records) stay readable
+    return _occ_commit(
+        root, attempt, None, 3600.0, kind, max_attempts,
+        what="maintenance rewrite",
     )
 
 
@@ -2525,18 +2514,13 @@ def expire_tombstones(
     ``min_epoch_to_keep`` = the oldest epoch any consumer could still
     replay (e.g. the change-feed retention horizon).
 
-    Returns the number of tombstone rows reclaimed. The publish is a
-    CAS commit (`try_publish_version` against the current version the
-    rewrite was derived from): a live sink epoch that lands between
-    this op's manifest read and its publish surfaces as a conflict and
-    the rewrite re-runs against the new current — an unconditional
-    publish here would silently drop that epoch's segment from the
-    read list (a lost update). Change-feed ``changes`` records of
-    RETAINED versions are untouched (the expiry segment is a rewrite,
-    invisible to feeds). NOTE: a sink running concurrently must
-    publish with ``grace_seconds > 0`` so its GC cannot delete this
-    op's in-flight version directory (``foreach_batch_upsert_run``'s
-    ``grace_seconds`` knob).
+    Returns the number of tombstone rows reclaimed. CAS-committed like
+    every maintenance rewrite (`_maintenance_rewrite`). Change-feed
+    ``changes`` records of RETAINED versions are untouched (the expiry
+    segment is a rewrite, invisible to feeds). NOTE: a sink running
+    concurrently must publish with ``grace_seconds > 0`` so its GC
+    cannot delete this op's in-flight version directory
+    (``foreach_batch_upsert_run``'s ``grace_seconds`` knob).
     """
     from pyspark.sql import functions as F
 
@@ -2580,11 +2564,9 @@ def compact_component(
 
     Tombstones survive as physical rows (``keep_seq=True`` fold) so the
     deletion record outlives the rewrite; collapsed reads still filter
-    them. The publish is a CAS commit against the version the fold was
-    derived from (see ``expire_tombstones`` — same concurrent-sink
-    lost-update hazard, same fix); the version carries no ``changes``
-    (a rewrite is not a change, so change feeds skip it). Returns the
-    committed version directory.
+    them. CAS-committed like every maintenance rewrite; the version
+    carries no ``changes`` (a rewrite is not a change, so change feeds
+    skip it). Returns the committed version directory.
 
     ``sort_cols`` makes the rewrite CLUSTERED (the Delta ``OPTIMIZE
     ZORDER BY`` analog, single-curve form): the collapsed state is
@@ -2663,21 +2645,6 @@ def compact_component_minor(
     """
     if max_segments < 2:
         raise ValueError("max_segments must be >= 2 (use compact_component)")
-    cur = current_version_dir(root)
-    if cur is None:
-        raise FileNotFoundError(f"nothing published under {root!r}")
-    components = read_manifest(root, os.path.basename(cur)) or {}
-    comp0 = components.get(component)
-    if comp0 is None:
-        raise ValueError(
-            f"version {os.path.basename(cur)!r} has no segmented component "
-            f"{component!r}"
-        )
-    if len(comp0.get("segments", [])) <= max_segments and not comp0.get(
-        "base"
-    ):
-        return None  # read list already short enough
-
     n_keep = max_segments - 1
 
     def tail(comp):
@@ -2699,19 +2666,18 @@ def compact_component_minor(
         return reconstruct_latest(df, spec, keep_seq=True), None, False
 
     def check(comp, spec):
+        if len(comp.get("segments", [])) <= max_segments and not comp.get(
+            "base"
+        ):
+            return True  # read list already short enough
         if not spec:
             raise ValueError(
                 "minor compaction requires a latest-by-key reconstruct spec"
             )
-        if len(comp.get("segments", [])) <= n_keep and not comp.get("base"):
-            raise CommitConflict(None, None)  # shrank under us: retry/no-op
 
-    try:
-        vdir, _payload = _maintenance_rewrite(
-            spark, root, component, "minor", rewrite, check, tail=tail
-        )
-    except CommitConflict:
-        return None
+    vdir, _payload = _maintenance_rewrite(
+        spark, root, component, "minor", rewrite, check, tail=tail
+    )
     return vdir
 
 

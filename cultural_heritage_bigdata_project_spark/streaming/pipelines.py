@@ -23,6 +23,7 @@ as a stream and results compare against batch oracles
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 import shutil
@@ -407,82 +408,21 @@ def batch_upsert_commit(
     Returns the committed version name.
     """
     spec = _upsert_spec(keys, order_desc, delete_col, n_buckets)
-    order_cols = [F.col(c).desc() for c in order_desc]
-    os.makedirs(target_dir, exist_ok=True)
-    for attempt in range(max_attempts):
-        cur = txn.current_version_dir(target_dir)
-        cur_name = os.path.basename(cur) if cur else None
-        components = _segmented_manifest(target_dir, cur)
-        prior = components[""] if components else None
-        if components is not None and "" not in components:
-            raise ValueError(
-                f"{target_dir!r} is a composite table without a default "
-                "component; batch_upsert_commit targets component ''"
-            )
-        segments = list(prior["segments"]) if prior else []
-        # write-time schema policy (txn.evolve_component_schema): adds
-        # accepted, type conflicts rejected BEFORE any segment lands —
-        # re-checked per attempt because a rebase may bring a newer
-        # (evolved) prior schema
-        evolved_schema = txn.evolve_component_schema(prior, source.schema, spec)
-        # a fresh attempt re-derives the epoch after a lost race, then
-        # CLAIMS it atomically: exclusive creation of the version dir
-        # is the epoch mutex (two racing writers who derived the same
-        # next epoch would otherwise build into — and rmtree — each
-        # other's segment dir, corrupting whichever commit wins; the
-        # round-5 version-name-claim fix applied at the epoch level)
-        epoch = _next_table_epoch(target_dir, prior, cur_name)
-        while True:
-            vname = f"data_v{epoch}"
-            vdir = os.path.join(target_dir, vname)
-            try:
-                os.makedirs(vdir)
-                break
-            except FileExistsError:
-                epoch += 1  # claimed by a competitor (or crash relic)
-        latest = cleanse.dedup_first_wins(source, keys, order_cols).withColumn(
-            _SEQ_COL, F.lit(int(epoch)).cast("long")
+    # writer identity: a batch commit must never look like a streaming
+    # sink's crash replay (the sink's fallback is a name-equality check
+    # that a stamped writer field overrides)
+    writer = f"batch:{uuid.uuid4().hex[:12]}"
+
+    def attempt(a):
+        vname, _changes = _stage_upsert(
+            spark, a, _prior_component(target_dir, a.cur), source, spec,
+            compact_every, minor_every, key_blooms, writer, None,
         )
-        seg = f"upsert_v{epoch}"
-        changes = [seg] if _seg_write(target_dir, spec, latest, seg) else []
-        segments.extend(changes)
-        segments, collapsed = _roll_segments(
-            spark, target_dir, spec, segments, epoch,
-            compact_every, minor_every, n_buckets,
-        )
-        component = _upsert_component(
-            spark, target_dir, spec, segments, changes,
-            collapsed, prior, keys, key_blooms,
-            schema=evolved_schema,
-        )
-        # writer identity: a batch commit must never look like a
-        # streaming sink's crash replay (the sink's fallback is a
-        # name-equality check that a stamped writer field overrides)
-        component["writer"] = f"batch:{uuid.uuid4().hex[:12]}"
-        component["writer_epoch"] = int(epoch)
-        txn.write_manifest(target_dir, vname, {"": component})
-        try:
-            txn.try_publish_version(
-                target_dir,
-                vname,
-                expected_current=cur_name,
-                keep_last=keep_last,
-                grace_seconds=3600.0,
-                op="batch_upsert",
-            )
-            return vname
-        except txn.CommitConflict:
-            # remove only what THIS attempt created (delta + any roll
-            # segments carrying our epoch tag); carried-over segments
-            # belong to committed versions and must survive
-            shutil.rmtree(vdir, ignore_errors=True)
-            for s in set(changes) | {f"upsert_c{epoch}", f"upsert_n{epoch}"}:
-                shutil.rmtree(
-                    txn.segment_path(target_dir, s), ignore_errors=True
-                )
-    raise RuntimeError(
-        f"batch_upsert_commit on {target_dir!r} lost {max_attempts} "
-        "consecutive commit races; retry later or raise max_attempts"
+        return vname, vname
+
+    return txn._occ_commit(
+        target_dir, attempt, keep_last, 3600.0, "batch_upsert", max_attempts,
+        what="batch_upsert_commit",
     )
 
 
@@ -677,8 +617,7 @@ def _roll_segments(
 
 
 def _upsert_component(
-    spark, tdir, spec, segments, changes, collapsed, prior, keys, key_blooms,
-    schema=None,
+    spark, tdir, spec, segments, changes, collapsed, prior, key_blooms, schema,
 ) -> dict:
     """The manifest component dict for an upsert commit: read list +
     merge spec + the metadata layers (min/max stats, exact row counts,
@@ -689,7 +628,7 @@ def _upsert_component(
         "segments": segments,
         "changes": changes,
         "reconstruct": spec,
-        "schema": schema if schema is not None else (prior or {}).get("schema"),
+        "schema": schema,
         "collapsed": collapsed,
         "stats": txn.manifest_stats(
             tdir, prior.get("stats") if prior else None, segments
@@ -709,6 +648,75 @@ def _upsert_component(
             tdir, prior.get("rows") if prior else None, segments
         ),
     }
+
+
+def _prior_component(root: str, cur: str | None) -> dict | None:
+    """The default component an upsert writer appends to (None before
+    the first commit)."""
+    components = _segmented_manifest(root, cur)
+    if components is None:
+        return None
+    if "" not in components:
+        raise ValueError(
+            f"{root!r} is a composite table without a default component; "
+            "upsert writers target component ''"
+        )
+    return components[""]
+
+
+def _stage_upsert(
+    spark, a, prior, source, spec, compact_every, minor_every, key_blooms,
+    writer, writer_epoch,
+):
+    """One upsert attempt (the body `batch_upsert_commit` and the
+    streaming sink hand to ``txn._occ_commit``): claim the next table
+    epoch, write the source's latest row per key as that epoch's delta
+    segment, roll the read list, and write the manifest into the
+    claimed version dir. ``prior`` is the component read from
+    ``a.cur`` (`_prior_component`). Returns ``(vname, changes)``; the
+    loop publishes. ``writer_epoch`` None stamps the table epoch."""
+    tdir = a.root
+    # write-time schema policy (txn.evolve_component_schema): adds
+    # accepted, type conflicts rejected BEFORE any segment lands —
+    # re-checked per attempt because a rebase may bring a newer
+    # (evolved) prior schema
+    schema = txn.evolve_component_schema(prior, source.schema, spec)
+    # version/segment names carry the TABLE epoch (next numeric tail
+    # across retained versions + live segments), NOT a sink's checkpoint
+    # epoch: after an interleaved batch commit the two diverge, and
+    # checkpoint-epoch names would clobber the batch writer's version
+    # and segment. Exclusive creation of the version dir CLAIMS the
+    # epoch: two racing writers who derived the same next epoch would
+    # otherwise build into — and discard — each other's segment dirs
+    vname = a.claim(
+        f"data_v{e}"
+        for e in itertools.count(_next_table_epoch(tdir, prior, a.expected))
+    )
+    epoch = int(vname[len("data_v"):])
+    # every segment carrying our epoch tag (delta, major, minor roll)
+    # is ours; carried-over segments belong to committed versions
+    a.created += [txn.segment_path(tdir, f"upsert_{k}{epoch}") for k in "vcn"]
+    latest = cleanse.dedup_first_wins(
+        source, spec["keys"], [F.col(c).desc() for c in spec["order_desc"]]
+    ).withColumn(_SEQ_COL, F.lit(epoch).cast("long"))
+    seg = f"upsert_v{epoch}"
+    # the epoch's delta is recorded as the version's change set even
+    # when a compaction replaces it in the READ list below — the
+    # Change-Data-Feed record (txn.change_feed) must survive rewrites,
+    # and GC protects `changes` references like `segments`
+    changes = [seg] if _seg_write(tdir, spec, latest, seg) else []
+    segments, collapsed = _roll_segments(
+        spark, tdir, spec, (list(prior["segments"]) if prior else []) + changes,
+        epoch, compact_every, minor_every, spec.get("buckets"),
+    )
+    component = _upsert_component(
+        spark, tdir, spec, segments, changes, collapsed, prior, key_blooms,
+        schema,
+    )
+    component["writer"] = writer
+    component["writer_epoch"] = int(epoch if writer_epoch is None else writer_epoch)
+    txn.write_manifest(tdir, vname, {"": component})
+    return vname, changes
 
 
 def foreach_batch_upsert_run(
@@ -841,34 +849,28 @@ def foreach_batch_upsert_run(
     # stale unpublished version (or orphaned segment) must not shadow
     # the committed state
     txn.cleanup_unpublished(tdir)
-    order_cols = [F.col(c).desc() for c in order_desc]
     spec = _upsert_spec(keys, order_desc, delete_col, n_buckets)
-
-    def _write_segment(df: DataFrame, name: str, align: bool = False) -> bool:
-        return _seg_write(tdir, spec, df, name, align=align)
-
     # stable writer identity across resumes of THIS sink: the
     # checkpoint path (offsets and epochs live there)
     ckpt_id = os.path.join(tdir, "_checkpoint")
 
     def upsert_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # CAS publish + rebase loop: a batch_upsert_commit landing
-        # between this epoch's manifest read and its publish surfaces
-        # as CommitConflict and the epoch re-derives against the new
-        # current — an unconditional publish would silently drop the
-        # batch writer's segment from the read list (the same lost-
-        # update hazard the maintenance rewrites close). Pure-sink
-        # tables never conflict, so behavior and naming are unchanged.
+        # CAS publish + rebase loop (txn._occ_commit): a
+        # batch_upsert_commit landing between this epoch's manifest read
+        # and its publish surfaces as CommitConflict and the epoch
+        # re-derives against the new current — an unconditional publish
+        # would silently drop the batch writer's segment from the read
+        # list (the same lost-update hazard the maintenance rewrites
+        # close). Pure-sink tables never conflict.
         import time as _time
 
         t0 = _time.perf_counter()
         try:
-            for _attempt in range(10):
-                if _upsert_epoch_attempt(batch_df, epoch_id):
-                    return
-            raise RuntimeError(
-                f"sink epoch {epoch_id} on {tdir!r} lost 10 consecutive "
-                "commit races; quiesce concurrent batch writers"
+            txn._occ_commit(
+                tdir,
+                lambda a: _upsert_epoch_attempt(a, batch_df, epoch_id),
+                keep_last, grace_seconds, "stream_upsert", 10,
+                what=f"sink epoch {epoch_id}",
             )
         finally:
             RUN_STATS["in_batch_sec"] = RUN_STATS.get("in_batch_sec", 0.0) + (
@@ -876,11 +878,9 @@ def foreach_batch_upsert_run(
             )
             RUN_STATS["epochs"] = RUN_STATS.get("epochs", 0) + 1
 
-    def _upsert_epoch_attempt(batch_df: DataFrame, epoch_id: int) -> bool:
-        cur = txn.current_version_dir(tdir)
-        components = _segmented_manifest(tdir, cur)
-        prior = components[""] if components else None
-        if cur is not None:
+    def _upsert_epoch_attempt(a, batch_df: DataFrame, epoch_id: int):
+        prior = _prior_component(tdir, a.cur)
+        if a.cur is not None:
             # crash-window replay: THIS sink already committed THIS
             # epoch (the crash happened between our publish and Spark's
             # checkpoint commit). Detected by manifest writer identity —
@@ -892,44 +892,13 @@ def foreach_batch_upsert_run(
                 if prior.get("writer") == ckpt_id and prior.get(
                     "writer_epoch"
                 ) == int(epoch_id):
-                    return True
-            elif os.path.basename(cur) == f"data_v{epoch_id}":
-                return True
-        # write-time schema policy, BEFORE any segment lands (see
-        # txn.evolve_component_schema); per attempt — a rebase may
-        # bring a newer evolved schema
-        evolved_schema = txn.evolve_component_schema(
-            prior, batch_df.schema, spec
+                    return None, None
+            elif a.expected == f"data_v{epoch_id}":
+                return None, None
+        vname, changes = _stage_upsert(
+            spark, a, prior, batch_df, spec, compact_every, minor_every,
+            key_blooms, ckpt_id, epoch_id,
         )
-        # version/segment names carry the TABLE epoch (next numeric tail
-        # across retained versions + live segments), NOT the sink's
-        # checkpoint epoch: after an interleaved batch commit the two
-        # diverge, and checkpoint-epoch names would collide with (and
-        # clobber) the batch writer's committed version and segment.
-        # Exclusive creation of the version dir CLAIMS the epoch, so a
-        # batch writer racing this very epoch cannot share our segment
-        # names (same claim protocol as batch_upsert_commit).
-        table_epoch = _next_table_epoch(
-            tdir, prior, os.path.basename(cur) if cur else None
-        )
-        while True:
-            vname = f"data_v{table_epoch}"
-            vdir = os.path.join(tdir, vname)
-            try:
-                os.makedirs(vdir)
-                break
-            except FileExistsError:
-                table_epoch += 1  # claimed by a competitor / crash relic
-        segments = list(components[""]["segments"]) if components else []
-        latest = cleanse.dedup_first_wins(batch_df, keys, order_cols).withColumn(
-            _SEQ_COL, F.lit(int(table_epoch)).cast("long")
-        )
-        seg = f"upsert_v{table_epoch}"
-        # the epoch's delta is recorded as the version's change set even
-        # when a compaction replaces it in the READ list below — the
-        # Change-Data-Feed record (txn.change_feed) must survive
-        # rewrites, and GC protects `changes` references like `segments`
-        changes = [seg] if _write_segment(latest, seg) else []
         if view_group_cols and changes:
             # view-before-table commit order (see docstring): the
             # retract snapshot is the table AS OF the previous epoch,
@@ -937,20 +906,18 @@ def foreach_batch_upsert_run(
             vname_view = f"data_v{epoch_id}"
             cur_view = txn.current_version_dir(vdir_root)
             if cur_view is None or os.path.basename(cur_view) != vname_view:
-                from ..operators import merge as merge_ops
-
                 state = (
                     spark.read.parquet(cur_view) if cur_view is not None else None
                 )
                 old_snap = (
-                    txn.read_version(spark, tdir) if cur is not None else None
+                    txn.read_version(spark, tdir) if a.cur is not None else None
                 )
                 feed = (
                     spark.read.option("mergeSchema", "true")
                     .parquet(txn.segment_path(tdir, changes[0]))
                     .drop(txn.BUCKET_COL)
                 )
-                new_state = merge_ops.incremental_agg_maintain(
+                new_state = merge.incremental_agg_maintain(
                     state,
                     feed,
                     old_snap,
@@ -971,42 +938,7 @@ def foreach_batch_upsert_run(
                     grace_seconds=grace_seconds,
                     op="view_refresh",
                 )
-        segments.extend(changes)
-        segments, collapsed = _roll_segments(
-            spark, tdir, spec, segments, table_epoch,
-            compact_every, minor_every, n_buckets,
-        )
-        # atomic commit: manifest into the claimed version dir, then
-        # CAS-repoint CURRENT. A crash anywhere leaves the previous
-        # version committed and at worst an unreferenced segment for
-        # cleanup_unpublished.
-        component = _upsert_component(
-            spark, tdir, spec, segments, changes, collapsed,
-            prior, keys, key_blooms,
-            schema=evolved_schema,
-        )
-        component["writer"] = ckpt_id
-        component["writer_epoch"] = int(epoch_id)
-        txn.write_manifest(tdir, vname, {"": component})
-        try:
-            txn.try_publish_version(
-                tdir,
-                vname,
-                expected_current=os.path.basename(cur) if cur else None,
-                keep_last=keep_last,
-                grace_seconds=grace_seconds,
-                op="stream_upsert",
-            )
-            return True
-        except txn.CommitConflict:
-            shutil.rmtree(vdir, ignore_errors=True)
-            for s in {
-                f"upsert_v{table_epoch}",
-                f"upsert_c{table_epoch}",
-                f"upsert_n{table_epoch}",
-            }:
-                shutil.rmtree(txn.segment_path(tdir, s), ignore_errors=True)
-            return False
+        return vname, None
 
     RUN_STATS.clear()  # fresh split for this run (read by bench.py)
     writer = stream.writeStream.foreachBatch(upsert_batch).trigger(availableNow=True)

@@ -5,8 +5,9 @@ The reference delegates multi-writer isolation to Postgres transactions
 a lake; the engine's versioned-pointer layout previously documented the
 gap ("concurrent-writer isolation remains the table format's job").
 `try_publish_version` / `commit_with_retry` close it natively: a CAS on
-the CURRENT pointer under an flock critical section — the single-node
-analog of the conditional-put object-store commit Delta uses on S3.
+the CURRENT pointer through a ConditionalPutStore (locally, a check-
+then-rename under the table's pointer flock) — the single-node analog
+of the conditional-put object-store commit Delta uses on S3.
 
 The money test races N threads x K read-modify-write commits on one
 table and asserts NO lost update: the committed value equals N*K, which
@@ -132,6 +133,61 @@ def test_cleanup_grace_protects_young_segments(tmp_path):
     assert removed == [] and os.path.isdir(seg)
 
 
+def _new_version(root: str, name: str, value: int) -> None:
+    os.makedirs(os.path.join(root, name))
+    _write_value(os.path.join(root, name), value)
+
+
+@pytest.mark.parametrize("publish", ["publish_version", "try_publish_version"])
+def test_concurrent_cleanup_spares_inflight_pointer_tmp(tmp_path, monkeypatch, publish):
+    """Another writer's post-publish GC that runs while this publish sits
+    between its CURRENT.tmp write and the rename over CURRENT must not
+    delete the tmp file: the publish lands and CURRENT names it."""
+    root = str(tmp_path / "w")
+    _new_version(root, "data_v0", 0)
+    txn.publish_version(root, "data_v0")
+    _new_version(root, "data_v1", 1)
+    real_replace = os.replace
+    gc = {}
+
+    def racing_replace(src, dst, *args, **kwargs):
+        if src.endswith(txn.CURRENT + ".tmp") and "thread" not in gc:
+            gc["thread"] = threading.Thread(
+                target=lambda: gc.setdefault(
+                    "removed", txn.cleanup_unpublished(root, grace_seconds=3600)
+                )
+            )
+            gc["thread"].start()
+            # an unlocked GC finishes inside this window; one that
+            # takes the pointer lock waits for the rename
+            gc["thread"].join(2.0)
+        return real_replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", racing_replace)
+    if publish == "publish_version":
+        txn.publish_version(root, "data_v1", keep_last=2)
+    else:
+        txn.try_publish_version(root, "data_v1", "data_v0", keep_last=2)
+    gc["thread"].join(10)
+    assert txn.list_versions(root) == ["data_v1", "data_v0"]
+    assert gc["removed"] == []
+
+
+def test_publish_version_keeps_external_pins(tmp_path):
+    """publish_version retains an externally pinned version beyond
+    keep_last, like try_publish_version: GC keeps the pinned directory,
+    so the pointer must keep naming it for it to stay readable."""
+    root = str(tmp_path / "p")
+    _new_version(root, "data_v0", 0)
+    txn.publish_version(root, "data_v0")
+    txn.set_external_pins(root, ["data_v0"])
+    for i in (1, 2):
+        _new_version(root, f"data_v{i}", i)
+        txn.publish_version(root, f"data_v{i}", keep_last=1)
+    assert txn.list_versions(root) == ["data_v2", "data_v0"]
+    assert _read_value(txn.version_dir(root, "data_v0")) == 0
+
+
 def test_next_version_name_skips_inflight(tmp_path):
     root = str(tmp_path / "n")
     assert txn.next_version_name(root) == "data_v0"
@@ -140,13 +196,16 @@ def test_next_version_name_skips_inflight(tmp_path):
 
 
 def test_commit_lock_times_out(tmp_path):
+    """The pointer store's lock — the one lock every commit takes — gives
+    up with TimeoutError when another holder wedges it."""
     root = str(tmp_path / "lk")
     os.makedirs(root)
+    store = txn.FileConditionalPutStore(root)
     hold = threading.Event()
     release = threading.Event()
 
     def holder():
-        with txn._commit_lock(root):
+        with store._cas_lock():
             hold.set()
             release.wait(5)
 
@@ -155,7 +214,7 @@ def test_commit_lock_times_out(tmp_path):
     assert hold.wait(5)
     t0 = time.monotonic()
     with pytest.raises(TimeoutError):
-        with txn._commit_lock(root, timeout=0.2):
+        with store._cas_lock(timeout=0.2):
             pass
     assert time.monotonic() - t0 < 3
     release.set()
@@ -246,8 +305,8 @@ def test_commit_with_retry_conditional_put_rebases_after_race(tmp_path):
 # Multi-process soak (round-5 verdict #4): OS processes — not threads —
 # hammering commit_with_retry on ONE table. Threads share the GIL and
 # the process's open-file table; only separate processes exercise the
-# cross-process guarantees the multi-writer claim rests on (flock
-# across PIDs, exclusive-mkdir name claims, CAS pointer swaps).
+# cross-process guarantees the multi-writer claim rests on (the pointer
+# flock across PIDs, exclusive-mkdir name claims, CAS pointer swaps).
 
 
 def _soak_worker(root: str, n_commits: int, use_store: bool) -> None:
@@ -271,16 +330,18 @@ import multiprocessing as _mp
 import pytest as _pytest
 
 
-@_pytest.mark.parametrize("use_store", [False, True], ids=["flock", "cond_put"])
-def test_multiprocess_soak_no_lost_updates(tmp_path, use_store):
+@_pytest.mark.parametrize("use_store", [False, True], ids=["default", "cond_put"])
+def test_multiprocess_soak_no_lost_updates(tmp_path, monkeypatch, use_store):
     """N processes x K read-modify-write commits racing stochastically:
     every increment must land (final value == N*K — serializability),
     the retained history must be exactly the chain 1..N*K (each commit
     derived from its immediate predecessor, no forks, no overwritten
     versions), and version names must be unique (the round-5 ADVICE
     race had two writers building into the SAME data_vX and the loser
-    deleting the winner's published directory)."""
-    root = str(tmp_path / ("soak_store" if use_store else "soak_flock"))
+    deleting the winner's published directory). The ``default`` case
+    passes ``pointer_store=None``, which must resolve to the local
+    FileConditionalPutStore."""
+    root = str(tmp_path / ("soak_store" if use_store else "soak_default"))
     n_procs, n_commits = 4, 8
     ctx = _mp.get_context("fork")
     procs = [
@@ -303,6 +364,18 @@ def test_multiprocess_soak_no_lost_updates(tmp_path, use_store):
     assert values == list(range(1, total + 1)), (
         "history is not the serial chain — a commit was lost or forked"
     )
+    if not use_store:
+        puts = []
+        real_put_if = txn.FileConditionalPutStore.put_if
+
+        def spy(self, lines, tag):
+            puts.append(self.root)
+            return real_put_if(self, lines, tag)
+
+        monkeypatch.setattr(txn.FileConditionalPutStore, "put_if", spy)
+        _soak_worker(root, 1, use_store)
+        assert puts == [root]
+        assert _read_value(txn.current_version_dir(root)) == total + 1
 
 
 # ---------------------------------------------------------------------------
