@@ -652,6 +652,11 @@ def canonical_components(
     the edge checkpoint's own materialization job (observe), so the
     decision costs nothing; above the bound, the distributed loop runs
     unchanged — that path is the 100 TB design.
+
+    Raises ``RuntimeError`` when the distributed loop has not reached
+    its fixpoint after ``max_iter`` rounds: the labels at that point
+    are only partially propagated, so there is no correct answer to
+    return.
     """
     from pyspark.sql import Observation
 
@@ -755,17 +760,13 @@ def canonical_components(
     # sym here cannot recompute anything
     _unpersist_local_checkpoint(sym)
     if not converged:
-        # partially-propagated labels are silently WRONG canonical ids;
-        # surface it instead of returning them as if converged
-        import warnings
-
-        warnings.warn(
+        # partially-propagated labels are WRONG canonical ids; a caller
+        # must never receive them as if converged
+        _unpersist_local_checkpoint(labels)
+        raise RuntimeError(
             f"canonical_components did not reach its fixpoint within "
             f"max_iter={max_iter} rounds (component diameter exceeds the "
-            f"budget); canonical_id values may be partial. Raise max_iter "
-            f"or pre-contract the graph.",
-            RuntimeWarning,
-            stacklevel=2,
+            f"budget). Raise max_iter or pre-contract the graph."
         )
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("canonical_id"))
 

@@ -89,22 +89,69 @@ def threshold_similarity_join(
     sub-quadratic path is ``lsh_candidate_pairs`` + verify; this is the
     exact oracle.
 
+    Single block: when the input fits one block (``n <= block_size``)
+    the grid is one block pair, and shipping it through an explode, a
+    shuffle and one Python-worker task only adds a worker start and a
+    2n-row exchange. Instead the ``(id, vector)`` rows are collected
+    with a bounded ``limit(block_size + 1)`` (Arrow), the same ``pairs``
+    kernel runs on the driver, and the edges come back through
+    ``createDataFrame`` — identical rows, including ``cosine_sim``. The
+    driver then holds what that one task would: ``block_size × dim``
+    doubles and a ``block_size²`` similarity matrix (32 MB at the
+    default 2048). The bounded collect doubles as the size probe: a
+    ``block_size + 1``-th row means the input needs the blocked path.
+
     ``n_rows``: pass the (approximate) collection size when known — it
     only sizes the block grid, so a catalog/statistics estimate is
-    fine. The ``count()`` fallback is a full extra scan at 100 TB.
+    fine. A value above ``block_size`` goes straight to the blocked
+    path; without it, the bounded collect decides, and only an input
+    larger than one block pays the ``count()`` scan that sizes the grid.
     """
     import math
 
     import numpy as np
     import pandas as pd
 
+    thr = float(threshold)
+    rd = round_digits
+    schema = "a_id long, b_id long, cosine_sim double"
+
+    def pairs(li, lv, ri, rv) -> pd.DataFrame:
+        """Edges (lo, hi, cosine) of one L×R block: ids ``li``/``ri``,
+        vectors ``lv``/``rv`` (sequences of equal-length arrays)."""
+        if len(li) == 0 or len(ri) == 0:
+            return pd.DataFrame({"a_id": [], "b_id": [], "cosine_sim": []}).astype(
+                {"a_id": "int64", "b_id": "int64", "cosine_sim": "float64"}
+            )
+        la = np.stack(lv)
+        rb = np.stack(rv)
+        lnorm = la / np.linalg.norm(la, axis=1, keepdims=True)
+        rnorm = rb / np.linalg.norm(rb, axis=1, keepdims=True)
+        sims = lnorm @ rnorm.T
+        if rd is not None:
+            sims = np.round(sims, rd)
+        ii, jj = np.nonzero(sims >= thr)
+        a = li[ii]
+        b = ri[jj]
+        keep = a != b
+        a, b, s = a[keep], b[keep], sims[ii, jj][keep]
+        lo, hi = np.minimum(a, b), np.maximum(a, b)
+        out = pd.DataFrame({"a_id": lo, "b_id": hi, "cosine_sim": s})
+        # diagonal block pairs see (x,y) and (y,x); collapse
+        out = out.drop_duplicates(subset=["a_id", "b_id"])
+        return out
+
+    iv = vectors.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+    if n_rows is None or n_rows <= block_size:
+        head = iv.limit(block_size + 1).toPandas()
+        if len(head) <= block_size:
+            ids, vs = head["id"].to_numpy(), head["v"].to_numpy()
+            return vectors.sparkSession.createDataFrame(pairs(ids, vs, ids, vs), schema)
     n = n_rows if n_rows is not None else vectors.count()
     nb = max(1, math.ceil(n / block_size))
-    v = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).cast("int").alias("b"),
-    )
+    v = iv.withColumn("b", F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int"))
     # block-pair keys: block i meets block j (i<=j) exactly once —
     # i's rows on the L side, j's on the R side.
     left = (
@@ -126,39 +173,15 @@ def threshold_similarity_join(
         )
     )
     both = left.unionByName(right)
-    thr = float(threshold)
-    rd = round_digits
 
     def compute(pdf: pd.DataFrame) -> pd.DataFrame:
         lp = pdf[pdf["side"] == 0]
         rp = pdf[pdf["side"] == 1]
-        if len(lp) == 0 or len(rp) == 0:
-            return pd.DataFrame({"a_id": [], "b_id": [], "cosine_sim": []}).astype(
-                {"a_id": "int64", "b_id": "int64", "cosine_sim": "float64"}
-            )
-        la = np.stack(lp["v"].to_numpy())
-        rb = np.stack(rp["v"].to_numpy())
-        lnorm = la / np.linalg.norm(la, axis=1, keepdims=True)
-        rnorm = rb / np.linalg.norm(rb, axis=1, keepdims=True)
-        sims = lnorm @ rnorm.T
-        if rd is not None:
-            sims = np.round(sims, rd)
-        li = lp["id"].to_numpy()
-        ri = rp["id"].to_numpy()
-        ii, jj = np.nonzero(sims >= thr)
-        a = li[ii]
-        b = ri[jj]
-        keep = a != b
-        a, b, s = a[keep], b[keep], sims[ii, jj][keep]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        out = pd.DataFrame({"a_id": lo, "b_id": hi, "cosine_sim": s})
-        # diagonal block pairs see (x,y) and (y,x); collapse
-        out = out.drop_duplicates(subset=["a_id", "b_id"])
-        return out
+        return pairs(
+            lp["id"].to_numpy(), lp["v"].to_numpy(), rp["id"].to_numpy(), rp["v"].to_numpy()
+        )
 
-    return both.groupBy("bp").applyInPandas(
-        compute, "a_id long, b_id long, cosine_sim double"
-    )
+    return both.groupBy("bp").applyInPandas(compute, schema)
 
 
 def _plane_matrix(n_planes: int, dim: int):

@@ -167,12 +167,13 @@ def representative_map(verdicts: DataFrame) -> DataFrame:
 def curated_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3 steps 4-5 + serving projection, end to end."""
     # localCheckpoint the stage outputs that feed multiple downstream
-    # branches (eu → metadata join + rep-objects; deduped → union +
-    # anti-join): without it each branch re-executes the whole
-    # cleanse lineage. This is the reference's cache() bracketing
-    # (join_eu_ugc_qdrant_merge.py:148,169) done lineage-safe.
+    # branches (eu → metadata join + rep-objects; ugc → the P8 split's
+    # two branches; deduped → union + anti-join): without it each
+    # branch re-executes the whole cleanse lineage. This is the
+    # reference's cache() bracketing (join_eu_ugc_qdrant_merge.py:148,
+    # 169) done lineage-safe.
     eu = cleanse_eu(derive_eu_raw(spark, sf_dir)).localCheckpoint(eager=False)
-    ugc = cleanse_ugc(derive_ugc_raw(spark, sf_dir))
+    ugc = cleanse_ugc(derive_ugc_raw(spark, sf_dir)).localCheckpoint(eager=False)
     rep = representative_map(derive_verdicts(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -186,10 +187,15 @@ def curated_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("rep_guid").isNotNull())
 
     # J1/J3: annotations joined to the representative's metadata.
-    # (No checkpoint here: the P8 split's two branches duplicate this
-    # subtree in the plan, but ReuseExchange computes the underlying
-    # shuffles once — a measured localCheckpoint attempt was NET SLOWER
-    # at sf0.1, round-5 drift diagnosis.)
+    # The P8 split below filters on ``comment``, a key of the UGC dedup
+    # window, and the join infers ``isnotnull(guid)``: over an
+    # unmaterialized ugc, Catalyst pushes those filters through the
+    # window and the from_json projection into the events scans, so
+    # each branch gets its own dedup exchange (the two differ, so
+    # ReuseExchange cannot merge them) and re-parses every envelope in
+    # its scan filters. The ugc checkpoint above is the barrier: the
+    # envelopes are parsed and deduped once, and the filters run over
+    # the parsed rows.
     joined = ann.join(eu, ann.rep_guid == eu.guid).select(
         ann.rep_guid.alias("guid"),
         "user_id",

@@ -27,10 +27,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_nrows(sf_dir: str) -> int | None:
     """Exact embeddings row count from the parquet FOOTER, driver-side
     (optimization round 13, guide §5/§6): `threshold_similarity_join`
-    only needs the count to size its block grid, and the `count()`
-    fallback is one full extra Spark job per invocation. The footer's
-    ``num_rows`` is exact for parquet; None (unreadable) falls back to
-    the operator's own count()."""
+    only needs the count to pick its single-block path or size its
+    block grid, and its own size probe is one extra Spark job per
+    invocation. The footer's ``num_rows`` is exact for parquet; None
+    (unreadable) falls back to that probe."""
     try:
         import os as _os
 

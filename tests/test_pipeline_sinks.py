@@ -4,6 +4,7 @@ operators (mirroring the reference's audits, SURVEY.md §5)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,6 +56,34 @@ def test_curated_flow_pending_excluded(spark):
     pending = {r.guid for r in verd.filter("status = 'pending'").collect()}
     out_guids = {r.guid for r in curated.curated_flow(spark, SF_DIR).select("guid").distinct().collect()}
     assert not (pending & out_guids)
+
+
+def test_curated_flow_parses_each_envelope_once(spark, monkeypatch):
+    """The UGC envelopes are parsed and deduped once: across every plan
+    the flow executes (each localCheckpoint's input, then the output),
+    no Filter re-evaluates ``from_json`` (a filter pushed through the
+    dedup window into the events scan) and the 4-key UGC dedup
+    Exchange appears exactly once (not once per P8 branch)."""
+    frame_cls = type(spark.range(1))
+    plans = []
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    out = curated.curated_flow(spark, SF_DIR)
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+
+    lines = [line for plan in plans for line in plan.splitlines()]
+    parse_filters = [
+        line for line in lines
+        if re.match(r"[\s:+-]*Filter ", line) and "from_json" in line
+    ]
+    assert not parse_filters, parse_filters[0][:300]
+    ugc_dedup = r"Exchange hashpartitioning\(guid#\d+, user_id#\d+, comment#\d+, ts_us#\d+L?,"
+    assert sum(bool(re.search(ugc_dedup, line)) for line in lines) == 1
 
 
 def test_keyed_landing_idempotent(spark, tmp_path):

@@ -82,24 +82,35 @@ def test_minhash_scales_to_20k_docs(spark):
     assert elapsed < 180, f"minhash at 20k docs too slow: {elapsed:.0f}s"
 
 
-def test_canonical_components_deep_chain(spark):
-    """A 2000-node path graph (diameter 2000) must converge inside the
-    default 20-round budget — pointer doubling gives O(log diameter)
-    rounds where bare min-propagation needs one round per hop."""
-    import warnings
-
-    from cultural_heritage_bigdata_project_spark.operators import dedup
-
-    n = 2000
+def _path_graph(spark, n):
     nodes = spark.range(n).select(F.col("id").alias("vid"))
     edges = spark.range(n - 1).select(
         F.col("id").alias("a_id"), (F.col("id") + 1).alias("b_id")
     )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # non-convergence warning = failure
-        labels = dedup.canonical_components(edges, nodes, "vid")
-        got = {r.vid: r.canonical_id for r in labels.collect()}
+    return edges, nodes
+
+
+def test_canonical_components_deep_chain(spark):
+    """A 2000-node path graph (diameter 2000) must converge inside the
+    default 20-round budget — pointer doubling gives O(log diameter)
+    rounds where bare min-propagation needs one round per hop.
+    ``driver_edges_max=0`` keeps the 2000 edges off the driver
+    union-find, so the distributed loop is what runs."""
+    n = 2000
+    edges, nodes = _path_graph(spark, n)
+    labels = dedup.canonical_components(edges, nodes, "vid", driver_edges_max=0)
+    got = {r.vid: r.canonical_id for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
+
+
+def test_canonical_components_raises_when_not_converged(spark):
+    """One round cannot collapse a 64-node path: the loop must raise
+    rather than return partially propagated canonical ids."""
+    edges, nodes = _path_graph(spark, 64)
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        dedup.canonical_components(
+            edges, nodes, "vid", max_iter=1, driver_edges_max=0
+        )
 
 
 def test_hot_bucket_cap_adversarial_corpus(spark):

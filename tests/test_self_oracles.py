@@ -138,6 +138,30 @@ def test_canonical_components_invariants(spark):
         assert c == min(vs), f"canonical {c} != min member {min(vs)}"
 
 
+def test_threshold_join_single_block_matches_blocked(spark):
+    """An input that fits one block is joined on the driver; it must
+    return exactly the rows (cosine_sim included) of the distributed
+    block-pair grid, and degenerate inputs an empty, typed frame."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    single = similarity.threshold_similarity_join(emb, threshold=0.42)
+    blocked = similarity.threshold_similarity_join(emb, threshold=0.42, block_size=256)
+    assert "FlatMapGroupsInPandas" not in plan(single)
+    assert "FlatMapGroupsInPandas" in plan(blocked)
+    rows = sorted(single.collect())
+    assert rows, "fixture should have cos >= 0.42 pairs"
+    assert rows == sorted(blocked.collect())
+    for k in (0, 1):
+        out = similarity.threshold_similarity_join(emb.limit(k), threshold=0.42)
+        assert out.schema.simpleString() == (
+            "struct<a_id:bigint,b_id:bigint,cosine_sim:double>"
+        )
+        assert out.count() == 0
+
+
 def test_hash_embedder_deterministic(spark):
     df1 = CATALOG["hash_embed_knn"].fn(spark, SF_DIR).collect()
     df2 = CATALOG["hash_embed_knn"].fn(spark, SF_DIR).collect()
