@@ -12,15 +12,20 @@ Scale shapes:
 - n-gram Jaccard: inverted-index candidate join (shared shingle) →
   verify; never an O(n²) cross join.
 - MinHash-LSH: signature → band keys → shuffle on band key →
-  within-bucket pairs → verify with exact Jaccard.
+  within-bucket pairs → verify with exact Jaccard; an input that fits
+  one block (``MINHASH_DRIVER_MAX_DOCS``, ``MINHASH_DRIVER_MAX_PAIRS``)
+  runs the same steps in numpy on the driver instead.
 - SimHash: 64-bit signature via bitwise aggregation, chunk-keyed
   candidate join, Hamming verify.
 - canonical groups: iterative min-label propagation to the connected-
   component fixpoint (deterministic replacement for the reference's
   order-dependent first-seen rule; SURVEY.md §7 hard-list #2).
 
-All token/hash work is built-in expressions (xxhash64/md5, transform,
-aggregate) — no Python in the hot path. MinHash/SimHash accept a
+Token/hash work is built-in expressions (xxhash64/md5, transform,
+aggregate), except where a numpy kernel is cheaper: the md5-portable
+MinHash signature runs in a ``mapInPandas`` kernel (``_md5_minhash``),
+and a single-block MinHash input runs entirely on the driver (numpy,
+with xxhash64 hashes from one Spark projection). MinHash/SimHash accept a
 ``hash_family``: "xxhash64" (fast JVM default) or "md5-portable"
 (every hash derived from md5 hex digits, reproducible in any engine
 with md5 — the catalog queries use it so the DuckDB oracle replays
@@ -34,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+
+from .localrel import collect_at_most
 
 # ------------------------------------------------- portable hash family
 #
@@ -216,6 +223,33 @@ def jaccard_pairs(
 
 # ------------------------------------------------------------- MinHash
 
+# Inputs of at most this many rows with a non-NULL id run
+# ``minhash_lsh_pairs`` on the driver; larger ones take the distributed
+# plan. Measured on local[4] over pre-shingled sf0.1 documents amplified
+# 4x (tools/amplify_docs.py) and already checkpointed, so neither column
+# includes computing the input; median wall time driver / distributed:
+#   docs     md5-portable   xxhash64
+#     500    0.36 / 1.86 s  0.51 / 1.57 s
+#   5,000    1.45 / 1.74 s  0.97 / 2.08 s
+#  10,000    3.19 / 3.07 s  1.89 / 4.14 s
+#  20,000    8.36 / 7.36 s  5.00 / 9.07 s
+# The driver used less CPU at every size (e.g. 3.4 vs 10.1 s at 10,000,
+# md5-portable); the bound sits below md5-portable's wall-time crossover.
+MINHASH_DRIVER_MAX_DOCS = 8192
+# The driver's cost and memory grow with candidate pairs, not documents:
+# an input whose band buckets hold more than this many member pairs
+# (sum of k·(k-1)/2 over buckets) falls back to the distributed plan.
+# Measured on the same host, 2,000 docs in clusters of k identical docs,
+# xxhash64, wall driver / distributed and the driver's peak RSS growth:
+#   bucket pairs   pairs out   wall             driver RSS
+#       0.8M          49k      0.77 /  2.66 s
+#       3.2M         199k      1.83 /  4.26 s      +85 MB
+#        16M         999k      9.53 / 16.4 s      +269 MB
+#        32M         2.0M     19.4  / 37.4 s      +508 MB
+# The driver stays faster throughout; the bound caps its memory: at
+# ~250 B per distinct pair, even 2M all-distinct pairs stay near 500 MB.
+MINHASH_DRIVER_MAX_PAIRS = 2_000_000
+
 
 def minhash_signature(h1_col: str, h2_col: str, n_hashes: int) -> Column:
     """k min-hashes via Kirsch-Mitzenmacher double hashing:
@@ -238,6 +272,188 @@ def minhash_signature(h1_col: str, h2_col: str, n_hashes: int) -> Column:
     )
 
 
+def _signature(h1, h2, n_hashes: int):
+    """``minhash_signature`` in numpy for one document: int64 arrays of
+    its shingles' h1/h2 → sig_i = min_j(h1[j] + i·h2[j]), i < n_hashes."""
+    import numpy as np
+
+    i = np.arange(n_hashes, dtype=np.int64)
+    return (h1[:, None] + i[None, :] * h2[:, None]).min(axis=0)
+
+
+def _md5_minhash(shingle_arrays, n_hashes: int, bands: int, memo: dict):
+    """The md5-portable MinHash of a sequence of shingle arrays, yielding
+    ``(j, sig, band_keys)`` for the j-th array unless it is NULL or
+    empty (those have no signature and never pair). The arithmetic is
+    bit-identical to the DuckDB oracle:
+      h1/h2 = first/second 8 md5 hex chars & 2^31-1,
+      sig_i = min(h1 + i·h2),
+      band key = md5(','.join(sig[band*r : (band+1)*r])).
+
+    ``memo`` maps a shingle to its (h1, h2) for as long as the caller
+    keeps it: shingles repeat heavily across docs in exactly the corpora
+    worth deduping, so each distinct shingle is md5'd once per memo, not
+    once per occurrence (cleared past 1M entries to bound memory)."""
+    import hashlib
+
+    import numpy as np
+
+    rows = n_hashes // bands
+    for j, shingles in enumerate(shingle_arrays):
+        if shingles is None or len(shingles) == 0:
+            continue
+        if len(memo) > 1_000_000:
+            memo.clear()
+        h = np.empty((len(shingles), 2), dtype=np.int64)
+        for k, s in enumerate(shingles):
+            hv = memo.get(s)
+            if hv is None:
+                hx = hashlib.md5(s.encode("utf-8")).hexdigest()
+                hv = memo[s] = (
+                    int(hx[:8], 16) & 0x7FFFFFFF,
+                    int(hx[8:16], 16) & 0x7FFFFFFF,
+                )
+            h[k] = hv
+        sig = _signature(h[:, 0], h[:, 1], n_hashes)
+        vals = sig.tolist()
+        keys = [
+            hashlib.md5(
+                ",".join(map(str, vals[b * rows : (b + 1) * rows])).encode()
+            ).hexdigest()
+            for b in range(bands)
+        ]
+        yield j, sig, keys
+
+
+def _spark_hash_bands(sigs, bands: int):
+    """Spark's ``hash()`` (Murmur3 x86_32, seed 42) of every band's
+    slice of every signature: (docs × n_hashes) int64 → (docs × bands)
+    uint32. Spark hashes an array<bigint> by folding ``hashLong`` over
+    its elements, the running hash as the next seed."""
+    import numpy as np
+
+    u32 = np.uint32
+
+    def rotl(x, r):
+        return (x << u32(r)) | (x >> u32(32 - r))
+
+    def mix(h, k):
+        k = rotl(k * u32(0xCC9E2D51), 15) * u32(0x1B873593)
+        return rotl(h ^ k, 13) * u32(5) + u32(0xE6546B64)
+
+    # rows = n_hashes // bands; hashes past bands·rows are in no band
+    rows = sigs.shape[1] // bands
+    v = sigs[:, : bands * rows].reshape(len(sigs), bands, rows).view(np.uint64)
+    h = np.full(v.shape[:2], 42, dtype=u32)
+    for e in range(v.shape[2]):
+        x = v[:, :, e]
+        h = mix(h, (x & np.uint64(0xFFFFFFFF)).astype(u32))
+        h = mix(h, (x >> np.uint64(32)).astype(u32))
+        h ^= u32(8)
+        h ^= h >> u32(16)
+        h *= u32(0x85EBCA6B)
+        h ^= h >> u32(13)
+        h *= u32(0xC2B2AE35)
+        h ^= h >> u32(16)
+    return h
+
+
+def _xxhash64_band_keys(spark, shs: list, el_type: str, n_hashes: int, bands: int):
+    """The xxhash64 family's band keys of each collected shingle array,
+    as (docs × bands) Murmur3 ints. h1/h2 come from one lambda-free
+    Spark projection over the distinct shingles — the same xxhash64
+    values the distributed plan's ``transform`` computes, each hashed
+    once."""
+    import itertools
+
+    import numpy as np
+    import pandas as pd
+
+    if not shs:
+        return np.empty((0, bands), dtype=np.uint32)
+    code: dict = {}
+    codes = np.fromiter(
+        (code.setdefault(s, len(code)) for s in itertools.chain.from_iterable(shs)),
+        dtype=np.int64,
+    )
+    hashed = (
+        spark.createDataFrame(
+            pd.DataFrame({"k": np.arange(len(code)), "s": list(code)}),
+            f"k long, s {el_type}",
+        )
+        .select(
+            "k",
+            F.expr("xxhash64(42, s) & 2147483647").alias("h1"),
+            F.expr("xxhash64(43, s) & 2147483647").alias("h2"),
+        )
+        .toPandas()
+    )
+    h = np.empty((len(code), 2), dtype=np.int64)
+    h[hashed["k"].to_numpy()] = hashed[["h1", "h2"]].to_numpy()
+    ends = np.cumsum([len(s) for s in shs])
+    sigs = np.stack(
+        [_signature(h[c, 0], h[c, 1], n_hashes) for c in np.split(codes, ends[:-1])]
+    )
+    return _spark_hash_bands(sigs, bands)
+
+
+def _minhash_pairs_on_driver(
+    spark, pdf, schema: str, el_type: str, n_hashes: int, bands: int,
+    threshold: float, hash_family: str,
+) -> DataFrame:
+    """``minhash_lsh_pairs`` over collected ``(id, sh)`` rows, row for
+    row what the distributed plan returns: candidates are the distinct
+    (lo, hi) id pairs of every (band, key) bucket's sorted members (a
+    duplicated id pairs with itself), and each candidate is verified
+    over every row of ``lo`` × every row of ``hi``. None when the
+    buckets hold more than ``MINHASH_DRIVER_MAX_PAIRS`` member pairs."""
+    import itertools
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import pandas as pd
+
+    keep = [s is not None and len(s) > 0 for s in pdf["sh"]]
+    ids, shs = pdf["id"][keep].tolist(), pdf["sh"][keep].tolist()
+    if hash_family == "md5-portable":
+        keyed = ((j, keys) for j, _, keys in _md5_minhash(shs, n_hashes, bands, {}))
+    else:
+        keys = _xxhash64_band_keys(spark, shs, el_type, n_hashes, bands)
+        keyed = enumerate(keys.tolist())
+    buckets: dict = {}
+    for j, keys in keyed:
+        for b, key in enumerate(keys):
+            buckets.setdefault((b, key), []).append(ids[j])
+    if sum(len(m) * (len(m) - 1) // 2 for m in buckets.values()) > MINHASH_DRIVER_MAX_PAIRS:
+        return None
+    cand = set()
+    for members in buckets.values():
+        if len(members) > 1:
+            cand.update(itertools.combinations(sorted(members), 2))
+    rows_of: dict = {}
+    for j, i in enumerate(ids):
+        rows_of.setdefault(i, []).append(j)
+    sets = [set(s) for s in shs]
+    # Spark's round(x, 6) on a double is HALF_UP on its decimal repr
+    # (1/128 = 0.0078125 → 0.007813), which numpy's round is not
+    quantum, jac_of = Decimal("0.000001"), {}
+    out = []
+    for a, b in cand:
+        for ja in rows_of[a]:
+            for jb in rows_of[b]:
+                inter = len(sets[ja] & sets[jb])
+                union = len(sets[ja]) + len(sets[jb]) - inter
+                jac = jac_of.get((inter, union))
+                if jac is None:
+                    jac = jac_of[inter, union] = float(
+                        Decimal(repr(inter / union)).quantize(quantum, ROUND_HALF_UP)
+                    )
+                if jac >= threshold:
+                    out.append((a, b, jac))
+    return spark.createDataFrame(
+        pd.DataFrame(out, columns=["a_id", "b_id", "jaccard"]), schema
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -256,7 +472,8 @@ def minhash_lsh_pairs(
     b=16, r=4 → S-curve midpoint (1/16)^(1/4) ≈ 0.5: pairs above 0.6
     are caught w.h.p., pairs below 0.4 mostly skipped. Shuffle volume
     is bands × n_rows band keys — sub-quadratic; the exact verify runs
-    only on candidates.
+    only on candidates. Rows with a NULL id or a NULL or empty shingle
+    array are dropped first: they have no signature and never pair.
 
     ``hash_family``: "xxhash64" (fast JVM default) or "md5-portable"
     (hashes + band keys derived from md5 hex digits → any md5-capable
@@ -264,22 +481,76 @@ def minhash_lsh_pairs(
     oracle for the catalog query replays). ``max_bucket`` df-prunes hot
     band buckets (see ``_bucket_pair_occurrences``) — off by default so
     the oracle can replay candidate generation exactly.
+
+    Single block: the input is checkpointed and its ids probed with one
+    bounded ``limit(N + 1)`` collect (``localrel.collect_at_most``, which
+    ``threshold_similarity_join`` uses too). An input of at most
+    ``N = MINHASH_DRIVER_MAX_DOCS`` documents is collected from the
+    checkpoint (Arrow), and the driver computes the signatures, band
+    keys, bucket pairs and the exact verify in numpy; the edges come
+    back through ``createDataFrame``. That route runs no shuffle, no
+    Python worker and no higher-order-function lambda; on a few hundred
+    documents the distributed plan's nine jobs cost more in scheduling
+    and codegen than the work. Its rows equal the distributed plan's
+    bit for bit, ``jaccard`` included: xxhash64 takes h1/h2 from a
+    lambda-free Spark projection and band keys are Spark's Murmur3
+    ``hash()`` of each signature slice; md5-portable runs the same md5
+    kernel as the distributed plan; ``round(·, 6)`` is HALF_UP on the
+    decimal repr, as Spark rounds.
+
+    The distributed plan, the scale design, runs for larger inputs, for
+    inputs whose band buckets hold more than ``MINHASH_DRIVER_MAX_PAIRS``
+    member pairs (duplicate-heavy; the driver stops before expanding
+    them), and for calls passing ``max_bucket`` or an ``observation``
+    (whose metrics a driver route would not publish; these are not
+    probed). Because the probe reads the checkpoint, the distributed
+    plan reuses the partitions it computed: the probe adds the caching
+    of the input and a collect of ``N + 1`` ids, not a second pass over
+    the caller's lineage. The bounds and their measurements are at the
+    constants.
     """
     if hash_family not in ("xxhash64", "md5-portable"):
         raise ValueError(f"unknown hash_family {hash_family!r}")
     rows = n_hashes // bands
-    par = df.sparkSession.sparkContext.defaultParallelism
-    # the shingled input feeds the signature AND both verify sides —
-    # checkpoint once (also spreads single-file inputs, see below).
-    # ``pre_partitioned=True`` (optimization round 12, guide §2.3):
-    # callers that already spread the text before shingling skip the
-    # entry exchange — it round-robins the heavy shingle arrays a
-    # second time for no layout gain (the band join re-shuffles on its
-    # own keys regardless); the checkpoint alone still cuts the
-    # multi-branch lineage.
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    df = df.select(F.col(id_col), F.col(shingle_col)).filter(
+        F.col(id_col).isNotNull()
+    )
+    # the shingled input feeds the size probe, the signature AND both
+    # verify sides — checkpoint it, so the distributed plan reads the
+    # partitions the probe computed instead of computing them again
+    probe = max_bucket is None and observation is None
+    if probe or pre_partitioned:
+        df = df.localCheckpoint(eager=False)
+    # the probe collects ids only: above the bound, a multi-partition
+    # limit gathers up to N + 1 rows of every partition in one task
+    if probe and collect_at_most(df.select(id_col), MINHASH_DRIVER_MAX_DOCS) is not None:
+        id_type = (
+            "long" if hash_family == "md5-portable"
+            else df.schema[id_col].dataType.simpleString()
+        )
+        pairs = _minhash_pairs_on_driver(
+            spark,
+            df.select(F.col(id_col).alias("id"), F.col(shingle_col).alias("sh")).toPandas(),
+            f"a_id {id_type}, b_id {id_type}, jaccard double",
+            df.schema[shingle_col].dataType.elementType.simpleString(),
+            n_hashes, bands, threshold, hash_family,
+        )
+        if pairs is not None:
+            return pairs
+    # Spread single-file inputs across cores, and checkpoint the spread
+    # copy. ``pre_partitioned=True`` (optimization round 12, guide
+    # §2.3): callers that already spread the text before shingling skip
+    # this exchange — it round-robins the heavy shingle arrays a second
+    # time for no layout gain (the band join re-shuffles on its own
+    # keys regardless).
     if not pre_partitioned:
-        df = df.repartition(par)
-    df = df.localCheckpoint(eager=False)
+        df = df.repartition(par).localCheckpoint(eager=False)
+    # filtered above the checkpoint: below it, the filter would be
+    # pushed into the caller's shingle projection and evaluate its
+    # lambda a second time
+    df = df.filter(F.size(shingle_col) > 0)
     # The repartitions below are real barriers, not just parallelism:
     # without an exchange between the string-hash projection and the
     # signature projection, CollapseProject inlines __h1/__h2 into the
@@ -291,57 +562,25 @@ def minhash_lsh_pairs(
         # md5s (C hashlib) and a (n_shingles × n_hashes) numpy min per
         # doc — replacing the interpreted per-i zip_with lambdas that
         # dominated this stage (same fix class as the LSH-signature GEMM
-        # in similarity.py; measured ~2× on the bench query). The
-        # arithmetic is bit-identical to the DuckDB oracle:
-        #   h1/h2 = first/second 8 md5 hex chars & 2^31-1,
-        #   sig_i = min(h1 + i·h2),
-        #   band key = md5(','.join(sig[band*r : (band+1)*r])).
-        import hashlib
-
-        import numpy as np
+        # in similarity.py; measured ~2× on the bench query).
         import pandas as pd
 
-        nh, nb, nr = n_hashes, bands, rows
-
         def band_keys(batches):
-            i_arr = np.arange(nh, dtype=np.int64)
-            # per-task memo: shingles repeat heavily across docs in
-            # exactly the corpora worth deduping, so each distinct
-            # shingle is md5'd once per partition, not once per
-            # occurrence (bounded by the partition's distinct-shingle
-            # count; freed with the task)
-            memo: dict[str, tuple[int, int]] = {}
+            memo: dict = {}  # per task, see _md5_minhash
             for pdf in batches:
-                out_id, out_band, out_bkey = [], [], []
-                for rid, shingles in zip(pdf["__id"], pdf["__sh"]):
-                    k = len(shingles)
-                    if k == 0:
-                        continue
-                    h1 = np.empty(k, dtype=np.int64)
-                    h2 = np.empty(k, dtype=np.int64)
-                    if len(memo) > 1_000_000:
-                        memo.clear()  # bound worker memory on huge partitions
-                    for j, s in enumerate(shingles):
-                        hv = memo.get(s)
-                        if hv is None:
-                            hx = hashlib.md5(s.encode("utf-8")).hexdigest()
-                            hv = (
-                                int(hx[:8], 16) & 0x7FFFFFFF,
-                                int(hx[8:16], 16) & 0x7FFFFFFF,
-                            )
-                            memo[s] = hv
-                        h1[j], h2[j] = hv
-                    sig = (h1[:, None] + i_arr[None, :] * h2[:, None]).min(axis=0)
-                    for b in range(nb):
-                        joined = ",".join(
-                            str(int(v)) for v in sig[b * nr : (b + 1) * nr]
-                        )
-                        out_id.append(rid)
-                        out_band.append(b)
-                        out_bkey.append(hashlib.md5(joined.encode()).hexdigest())
-                yield pd.DataFrame(
-                    {"__id": out_id, "band": out_band, "bkey": out_bkey}
-                )
+                ids = pdf["__id"].tolist()
+                out_id, out_bkey = [], []
+                for j, _, keys in _md5_minhash(pdf["__sh"], n_hashes, bands, memo):
+                    out_id += [ids[j]] * bands
+                    out_bkey += keys
+                if out_id:  # an untyped empty frame fails the Arrow cast
+                    yield pd.DataFrame(
+                        {
+                            "__id": out_id,
+                            "band": list(range(bands)) * (len(out_id) // bands),
+                            "bkey": out_bkey,
+                        }
+                    )
 
         keyed = (
             df.select(
@@ -800,56 +1039,29 @@ def minhash_index(
     same arithmetic as ``minhash_lsh_pairs`` (hash_family
     "md5-portable"), so any md5-capable engine replays it.
     """
-    import hashlib
-
-    import numpy as np
     import pandas as pd
 
-    rows = n_hashes // bands
-    if rows * bands != n_hashes:
+    if (n_hashes // bands) * bands != n_hashes:
         raise ValueError("bands must divide n_hashes")
 
     def index_rows(batches):
-        i_arr = np.arange(n_hashes, dtype=np.int64)
-        memo: dict[str, tuple[int, int]] = {}  # see minhash_lsh_pairs
+        memo: dict = {}  # per task, see _md5_minhash
         for pdf in batches:
-            out_id, out_sig, out_band, out_bkey = [], [], [], []
-            for rid, shingles in zip(pdf["__id"], pdf["__sh"]):
-                k = len(shingles)
-                if k == 0:
-                    continue
-                h1 = np.empty(k, dtype=np.int64)
-                h2 = np.empty(k, dtype=np.int64)
-                if len(memo) > 1_000_000:
-                    memo.clear()  # bound worker memory on huge partitions
-                for j, s in enumerate(shingles):
-                    hv = memo.get(s)
-                    if hv is None:
-                        hx = hashlib.md5(s.encode("utf-8")).hexdigest()
-                        hv = (
-                            int(hx[:8], 16) & 0x7FFFFFFF,
-                            int(hx[8:16], 16) & 0x7FFFFFFF,
-                        )
-                        memo[s] = hv
-                    h1[j], h2[j] = hv
-                sig = (h1[:, None] + i_arr[None, :] * h2[:, None]).min(axis=0)
-                sig_list = [int(v) for v in sig]
-                for b in range(bands):
-                    joined = ",".join(
-                        str(int(v)) for v in sig[b * rows : (b + 1) * rows]
-                    )
-                    out_id.append(rid)
-                    out_sig.append(sig_list)
-                    out_band.append(b)
-                    out_bkey.append(hashlib.md5(joined.encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "__id": out_id,
-                    "sig": out_sig,
-                    "band": out_band,
-                    "bkey": out_bkey,
-                }
-            )
+            ids = pdf["__id"].tolist()
+            out_id, out_sig, out_bkey = [], [], []
+            for j, sig, keys in _md5_minhash(pdf["__sh"], n_hashes, bands, memo):
+                out_id += [ids[j]] * bands
+                out_sig += [sig.tolist()] * bands
+                out_bkey += keys
+            if out_id:  # an untyped empty frame fails the Arrow cast
+                yield pd.DataFrame(
+                    {
+                        "__id": out_id,
+                        "sig": out_sig,
+                        "band": list(range(bands)) * (len(out_id) // bands),
+                        "bkey": out_bkey,
+                    }
+                )
 
     # ``pre_partitioned=True`` (optimization round 12, guide §2.3):
     # callers that already spread the text before shingling skip the

@@ -140,3 +140,16 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, numSlices=1), schema
     )
+
+
+def collect_at_most(df: DataFrame, n: int):
+    """``df``'s rows as a pandas frame when it has at most ``n`` rows,
+    else None.
+
+    One bounded ``limit(n + 1)`` collect (Arrow when the session enables
+    it) is the size probe, and for a caller that selects the columns its
+    driver-side route needs, also that route's collect: an input that
+    fits is collected once, a larger one costs a job that stops after
+    ``n + 1`` rows (of every partition, when it has several)."""
+    head = df.limit(n + 1).toPandas()
+    return head if len(head) <= n else None

@@ -29,7 +29,7 @@ from ..functions.vectors import (
     l2_norm,
     py_l2_norm,
 )
-from .localrel import local_df
+from .localrel import collect_at_most, local_df
 
 
 def knn_brute_force(
@@ -145,8 +145,8 @@ def threshold_similarity_join(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     if n_rows is None or n_rows <= block_size:
-        head = iv.limit(block_size + 1).toPandas()
-        if len(head) <= block_size:
+        head = collect_at_most(iv, block_size)
+        if head is not None:
             ids, vs = head["id"].to_numpy(), head["v"].to_numpy()
             return vectors.sparkSession.createDataFrame(pairs(ids, vs, ids, vs), schema)
     n = n_rows if n_rows is not None else vectors.count()

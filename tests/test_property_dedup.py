@@ -13,6 +13,7 @@ random token corpora validated against exhaustive in-Python referees.
 
 from __future__ import annotations
 
+import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -100,14 +101,15 @@ def test_minhash_sound_and_subset_of_exact(spark, docs):
         assert jac == round(_jaccard(shmap[a], shmap[b]), 6)
 
 
-def test_minhash_xxh_codegen_signature_matches_legacy(spark):
-    """The round-12 explode+groupBy xxh signature (64 partial-agg `min`
-    columns) must equal the legacy interpreted-lambda formula
-    sig_i = min_j(h1[j] + i*h2[j]) element-for-element, and the public
-    pair output must be unchanged for corpora that include empty and
-    NULL shingle arrays (legacy gave those all-NULL signatures whose
-    candidate pairs a NULL/zero jaccard discarded; the rewrite drops
-    them at the explode)."""
+def test_minhash_xxh_codegen_signature_matches_legacy(spark, monkeypatch):
+    """The driver route's numpy xxhash64 signature and band keys must
+    equal the distributed plan's element for element: the interpreted
+    per-i lambda (``minhash_signature``, sig_i = min_j(h1[j] + i*h2[j]))
+    and Spark's Murmur3 ``hash()`` of each 4-long band slice. Empty and
+    NULL shingle arrays must never pair, in either hash family or route
+    (two empty arrays used to share every all-NULL xxhash64 bucket and
+    fail the verify with DIVIDE_BY_ZERO; a NULL array crashed the md5
+    kernel's ``len``)."""
     rows = [
         (0, ["a b c", "b c d", "c d e"]),
         (1, ["a b c", "b c d", "c d e"]),
@@ -115,52 +117,166 @@ def test_minhash_xxh_codegen_signature_matches_legacy(spark):
         (3, []),  # empty shingle set: must never pair
         (4, None),  # NULL shingle array: must never pair
         (5, ["a b c", "b c d", "q r s"]),
+        (6, []),
     ]
     df = spark.createDataFrame(rows, "doc_id long, sh array<string>")
-    legacy_sig = {
-        r.doc_id: r.sig
-        for r in df.filter(F.size("sh") > 0)
+    legacy = (
+        df.filter(F.size("sh") > 0)
         .select(
-            "doc_id",
-            F.expr(
-                "transform(sequence(0, 63), i -> array_min("
-                "zip_with("
-                "transform(sh, s -> xxhash64(42, s) & 2147483647),"
-                "transform(sh, s -> xxhash64(43, s) & 2147483647),"
-                "(h1, h2) -> h1 + i * h2)))"
-            ).alias("sig"),
+            F.expr("transform(sh, s -> xxhash64(42, s) & 2147483647)").alias("h1"),
+            F.expr("transform(sh, s -> xxhash64(43, s) & 2147483647)").alias("h2"),
+        )
+        .withColumn("sig", dedup.minhash_signature("h1", "h2", 64))
+        .withColumn(
+            "keys", F.array(*[F.hash(F.slice("sig", b * 4 + 1, 4)) for b in range(16)])
         )
         .collect()
-    }
-    exploded = df.select("doc_id", F.explode("sh").alias("__s"))
-    hashed = exploded.select(
-        "doc_id",
-        F.expr("xxhash64(42, __s) & 2147483647").alias("__h1"),
-        F.expr("xxhash64(43, __s) & 2147483647").alias("__h2"),
     )
-    new_sig = {
-        r.doc_id: r.sig
-        for r in hashed.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(F.col("__h1") + F.lit(i) * F.col("__h2")).alias(f"__s{i}")
-                for i in range(64)
-            ]
+    assert len(legacy) == 4
+    for r in legacy:
+        sig = dedup._signature(
+            np.array(r.h1, dtype=np.int64), np.array(r.h2, dtype=np.int64), 64
         )
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"__s{i}") for i in range(64)]).alias("sig"),
+        assert sig.tolist() == r.sig
+        keys = dedup._spark_hash_bands(sig[None, :], 16)[0].view(np.int32)
+        assert keys.tolist() == r.keys
+    for bound in (dedup.MINHASH_DRIVER_MAX_DOCS, 0):
+        monkeypatch.setattr(dedup, "MINHASH_DRIVER_MAX_DOCS", bound)
+        for family in ("xxhash64", "md5-portable"):
+            pairs = {
+                (r.a_id, r.b_id)
+                for r in dedup.minhash_lsh_pairs(
+                    df, "doc_id", "sh", threshold=0.5, hash_family=family
+                ).collect()
+            }
+            assert pairs == {(0, 1)}, (bound, family, pairs)
+
+
+def test_minhash_index_skips_null_and_empty_arrays(spark):
+    """NULL and empty shingle arrays have no signature: ``minhash_index``
+    gives them no rows (a NULL array crashed the md5 kernel's ``len``)."""
+    df = spark.createDataFrame(
+        [(0, ["a b c", "b c d"]), (1, []), (2, None)], "doc_id long, sh array<string>"
+    )
+    got = dedup.minhash_index(df, "doc_id", "sh").collect()
+    assert sorted((r.doc_id, r.band) for r in got) == [(0, b) for b in range(16)]
+
+
+def _minhash_edge_rows() -> list[tuple[int, list[str]]]:
+    """Rows the single-block parity test adds to the fixture corpus.
+
+    - a duplicated id: 10000 appears twice, once identical to 10001, so
+      (10000, 10001) is a candidate that is verified against BOTH rows
+      of 10000 — the second at Jaccard 1/128 = 0.0078125, a tie at the
+      7th digit that Spark's HALF_UP round makes 0.007813;
+    - a bucket of three members: 10002-10004 share every band key;
+    - a second tie, 77/128 = 0.6015625 → 0.601563, above 0.6: 10005's
+      two rows are near-duplicates of each other, so the id can also
+      pair with itself.
+    """
+
+    def sh(tag, lo, hi):
+        return [f"{tag}{i} {tag}{i + 1} {tag}{i + 2}" for i in range(lo, hi)]
+
+    s1, t = sh("p", 0, 64), sh("p", 63, 64) + sh("q", 0, 64)  # |∩|=1, |∪|=128
+    a, b = sh("r", 0, 102), sh("r", 0, 77) + sh("s", 0, 26)  # |∩|=77, |∪|=128
+    return [
+        (10000, s1), (10000, t), (10001, s1),
+        (10002, sh("u", 0, 40)), (10003, sh("u", 0, 40)), (10004, sh("u", 0, 40)),
+        (10005, a), (10005, b), (10006, b),
+    ]
+
+
+def _fixture_with_edges(spark):
+    from cultural_heritage_bigdata_project_spark.sources.tables import load_table
+
+    from .conftest import SF_DIR
+
+    docs = (
+        load_table(spark, SF_DIR, "documents")
+        .select("doc_id", F.split(F.trim(F.lower("text")), " +").alias("t"))
+        .filter(F.size("t") >= 3)
+        .select("doc_id", dedup.shingles_expr("t", 3).alias("sh"))
+    )
+    edges = spark.createDataFrame(_minhash_edge_rows(), "doc_id long, sh array<string>")
+    return docs.unionByName(edges).localCheckpoint()
+
+
+def test_minhash_single_block_matches_distributed(spark, monkeypatch):
+    """An input of at most ``MINHASH_DRIVER_MAX_DOCS`` documents is paired
+    on the driver; it must return exactly the rows (``jaccard``
+    included) of the distributed plan, in both hash families."""
+    docs = _fixture_with_edges(spark)
+    assert docs.count() <= dedup.MINHASH_DRIVER_MAX_DOCS
+    thresholds = (0.6, 0.3, 0.1, 0.007813)
+
+    def run(family):
+        return {
+            t: sorted(
+                dedup.minhash_lsh_pairs(
+                    docs, "doc_id", "sh", threshold=t, hash_family=family
+                ).collect()
+            )
+            for t in thresholds
+        }
+
+    for family in ("xxhash64", "md5-portable"):
+        single = run(family)
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "MINHASH_DRIVER_MAX_DOCS", 0)
+            assert run(family) == single, family
+        low = {tuple(r) for r in single[0.007813]}
+        assert (10000, 10001, 0.007813) in low and (10000, 10001, 1.0) in low
+        assert {(10002, 10003, 1.0), (10002, 10004, 1.0), (10003, 10004, 1.0)} <= low
+        assert (10005, 10006, 0.601563) in {tuple(r) for r in single[0.6]}
+
+
+def test_minhash_single_block_plan_has_no_exchange(spark, monkeypatch):
+    """The driver route's executed plan has no shuffle and no Python
+    worker, and 0/1-row inputs give an empty, typed frame; the forced
+    distributed plan has both (md5-portable)."""
+    docs = _fixture_with_edges(spark)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for family in ("xxhash64", "md5-portable"):
+        p = plan(dedup.minhash_lsh_pairs(docs, "doc_id", "sh", hash_family=family))
+        assert "Exchange" not in p and "MapInPandas" not in p, p
+        for k in (0, 1):
+            out = dedup.minhash_lsh_pairs(docs.limit(k), "doc_id", "sh", hash_family=family)
+            assert out.schema.simpleString() == (
+                "struct<a_id:bigint,b_id:bigint,jaccard:double>"
+            )
+            assert out.count() == 0
+    monkeypatch.setattr(dedup, "MINHASH_DRIVER_MAX_DOCS", 0)
+    p = plan(dedup.minhash_lsh_pairs(docs, "doc_id", "sh", hash_family="md5-portable"))
+    assert "Exchange" in p and "MapInPandas" in p, p
+
+
+def test_minhash_driver_fallback_and_uneven_bands_match_distributed(spark, monkeypatch):
+    """Buckets holding more than ``MINHASH_DRIVER_MAX_PAIRS`` member
+    pairs send a small input to the distributed plan, with the same
+    rows; and ``bands`` that does not divide ``n_hashes`` (64/10: the
+    last 4 hashes are in no band) gives the same rows on both routes
+    (the driver's xxhash64 band keys used to fail to reshape)."""
+    docs = spark.createDataFrame(_minhash_edge_rows(), "doc_id long, sh array<string>")
+
+    def run(**kw):
+        out = dedup.minhash_lsh_pairs(docs, "doc_id", "sh", threshold=0.007813, **kw)
+        return out, sorted(out.collect())
+
+    _, driver = run()
+    _, uneven = run(bands=10)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "MINHASH_DRIVER_MAX_PAIRS", 2)
+        out, fallback = run()
+        assert "Exchange hashpartitioning(band" in (
+            out._jdf.queryExecution().executedPlan().toString()
         )
-        .collect()
-    }
-    assert new_sig == legacy_sig
-    pairs = {
-        (r.a_id, r.b_id)
-        for r in dedup.minhash_lsh_pairs(
-            df, "doc_id", "sh", threshold=0.5, hash_family="xxhash64"
-        ).collect()
-    }
-    assert pairs == {(0, 1)}, pairs
+        assert fallback == driver
+        m.setattr(dedup, "MINHASH_DRIVER_MAX_DOCS", 0)
+        assert run(bands=10)[1] == uneven
 
 
 def test_simhash_codegen_signature_matches_legacy_and_edges(spark):

@@ -51,7 +51,8 @@ def test_lsh_candidates_sub_quadratic_at_40k(spark, big_vectors):
 def test_minhash_scales_to_20k_docs(spark):
     """5k fixture docs replicated 4x (ids shifted): each replica keeps
     its planted near-dup pairs, so the pair count must scale ~4x and
-    the run stays minutes-free."""
+    the run stays minutes-free. 20k docs is above the driver route's
+    bound, so this runs the distributed plan and its band shuffle."""
     docs = load_table(spark, SF_BIG, "documents").select(
         "doc_id", F.split(F.trim(F.lower("text")), " +").alias("t")
     )
@@ -66,6 +67,8 @@ def test_minhash_scales_to_20k_docs(spark):
     )
     t0 = time.perf_counter()
     pairs = dedup.minhash_lsh_pairs(shingled, "doc_id", "sh", threshold=0.9)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(band" in plan, plan
     got = pairs.count()
     elapsed = time.perf_counter() - t0
     base_pairs = dedup.minhash_lsh_pairs(

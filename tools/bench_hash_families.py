@@ -12,7 +12,9 @@ Usage:
 
 DOCS_DIR defaults to $SPARK_GRAFT_BENCH_SF (a directory containing
 documents.parquet), else /root/testdata/sf0.1. Amplify a fixture with
-tools/amplify_docs.py first for the large point. Prints one JSON line:
+tools/amplify_docs.py first for the large point. Both families run
+their distributed plans at every size (the driver route is off). Prints
+one JSON line:
   {"docs_dir": ..., "n_docs": N,
    "md5_portable_sec": median, "xxhash64_sec": median,
    "repeats": {...}}
@@ -53,6 +55,9 @@ def main() -> None:
     )
     n_repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     spark = get_spark(app_name="bench-hash-families")
+    # the subject is each family's distributed plan, so force it also
+    # for inputs small enough for minhash_lsh_pairs' driver route
+    dedup.MINHASH_DRIVER_MAX_DOCS = 0
     n_docs = spark.read.parquet(
         os.path.join(docs_dir, "documents.parquet")
     ).count()
