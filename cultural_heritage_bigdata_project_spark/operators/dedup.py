@@ -19,7 +19,11 @@ Scale shapes:
   candidate join, Hamming verify.
 - canonical groups: iterative min-label propagation to the connected-
   component fixpoint (deterministic replacement for the reference's
-  order-dependent first-seen rule; SURVEY.md §7 hard-list #2).
+  order-dependent first-seen rule; SURVEY.md §7 hard-list #2); an edge
+  list of at most ``COMPONENTS_DRIVER_MAX_EDGES`` rows is solved with a
+  driver union-find instead.
+
+Both driver routes choose by size through ``localrel.collect_or_checkpoint``.
 
 Token/hash work is built-in expressions (xxhash64/md5, transform,
 aggregate), except where a numpy kernel is cheaper: the md5-portable
@@ -40,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
-from .localrel import collect_at_most
+from .localrel import _unpersist_local_checkpoint, collect_or_checkpoint
 
 # ------------------------------------------------- portable hash family
 #
@@ -249,6 +253,11 @@ MINHASH_DRIVER_MAX_DOCS = 8192
 # The driver stays faster throughout; the bound caps its memory: at
 # ~250 B per distinct pair, even 2M all-distinct pairs stay near 500 MB.
 MINHASH_DRIVER_MAX_PAIRS = 2_000_000
+# ``canonical_components`` solves an edge list of at most this many rows
+# with a driver union-find; the collected edges are factorized to numpy
+# codes (~16 B per endpoint), so the bound caps that state near tens of
+# MB. Larger graphs run the distributed min-label loop.
+COMPONENTS_DRIVER_MAX_EDGES = 2_000_000
 
 
 def minhash_signature(h1_col: str, h2_col: str, n_hashes: int) -> Column:
@@ -482,32 +491,29 @@ def minhash_lsh_pairs(
     band buckets (see ``_bucket_pair_occurrences``) — off by default so
     the oracle can replay candidate generation exactly.
 
-    Single block: the input is checkpointed and its ids probed with one
-    bounded ``limit(N + 1)`` collect (``localrel.collect_at_most``, which
-    ``threshold_similarity_join`` uses too). An input of at most
-    ``N = MINHASH_DRIVER_MAX_DOCS`` documents is collected from the
-    checkpoint (Arrow), and the driver computes the signatures, band
-    keys, bucket pairs and the exact verify in numpy; the edges come
-    back through ``createDataFrame``. That route runs no shuffle, no
-    Python worker and no higher-order-function lambda; on a few hundred
-    documents the distributed plan's nine jobs cost more in scheduling
-    and codegen than the work. Its rows equal the distributed plan's
-    bit for bit, ``jaccard`` included: xxhash64 takes h1/h2 from a
-    lambda-free Spark projection and band keys are Spark's Murmur3
-    ``hash()`` of each signature slice; md5-portable runs the same md5
-    kernel as the distributed plan; ``round(·, 6)`` is HALF_UP on the
-    decimal repr, as Spark rounds.
+    Single block: the ``(id, shingles)`` rows go through
+    ``localrel.collect_or_checkpoint`` with the bound
+    ``MINHASH_DRIVER_MAX_DOCS``. An input that fits is collected, and
+    the driver computes the signatures, band keys, bucket pairs and the
+    exact verify in numpy; the edges come back through
+    ``createDataFrame``. That route runs no shuffle, no Python worker
+    and no higher-order-function lambda; on a few hundred documents the
+    distributed plan's nine jobs cost more in scheduling and codegen
+    than the work. Its rows equal the distributed plan's bit for bit,
+    ``jaccard`` included: xxhash64 takes h1/h2 from a lambda-free Spark
+    projection and band keys are Spark's Murmur3 ``hash()`` of each
+    signature slice; md5-portable runs the same md5 kernel as the
+    distributed plan; ``round(·, 6)`` is HALF_UP on the decimal repr,
+    as Spark rounds.
 
-    The distributed plan, the scale design, runs for larger inputs, for
+    The distributed plan, the scale design, runs for larger inputs (on
+    the helper's checkpoint, so the caller's lineage runs once), for
     inputs whose band buckets hold more than ``MINHASH_DRIVER_MAX_PAIRS``
     member pairs (duplicate-heavy; the driver stops before expanding
-    them), and for calls passing ``max_bucket`` or an ``observation``
-    (whose metrics a driver route would not publish; these are not
-    probed). Because the probe reads the checkpoint, the distributed
-    plan reuses the partitions it computed: the probe adds the caching
-    of the input and a collect of ``N + 1`` ids, not a second pass over
-    the caller's lineage. The bounds and their measurements are at the
-    constants.
+    them and the plan reads the collected rows), and for calls passing
+    ``max_bucket`` or an ``observation`` (whose metrics a driver route
+    would not publish; their input is checkpointed lazily instead). The
+    bounds and their measurements are at the constants.
     """
     if hash_family not in ("xxhash64", "md5-portable"):
         raise ValueError(f"unknown hash_family {hash_family!r}")
@@ -517,36 +523,37 @@ def minhash_lsh_pairs(
     df = df.select(F.col(id_col), F.col(shingle_col)).filter(
         F.col(id_col).isNotNull()
     )
-    # the shingled input feeds the size probe, the signature AND both
-    # verify sides — checkpoint it, so the distributed plan reads the
-    # partitions the probe computed instead of computing them again
-    probe = max_bucket is None and observation is None
-    if probe or pre_partitioned:
-        df = df.localCheckpoint(eager=False)
-    # the probe collects ids only: above the bound, a multi-partition
-    # limit gathers up to N + 1 rows of every partition in one task
-    if probe and collect_at_most(df.select(id_col), MINHASH_DRIVER_MAX_DOCS) is not None:
+    # the input feeds the signature AND both verify sides: checkpoint
+    # it once, so the distributed plan reads it instead of the caller's
+    # lineage three times
+    if max_bucket is None and observation is None:
+        pdf, ckpt, _ = collect_or_checkpoint(df, MINHASH_DRIVER_MAX_DOCS)
+    else:
+        pdf, ckpt = None, df.localCheckpoint(eager=False)
+    if pdf is not None:
         id_type = (
             "long" if hash_family == "md5-portable"
             else df.schema[id_col].dataType.simpleString()
         )
         pairs = _minhash_pairs_on_driver(
             spark,
-            df.select(F.col(id_col).alias("id"), F.col(shingle_col).alias("sh")).toPandas(),
+            pdf.set_axis(["id", "sh"], axis=1),
             f"a_id {id_type}, b_id {id_type}, jaccard double",
             df.schema[shingle_col].dataType.elementType.simpleString(),
             n_hashes, bands, threshold, hash_family,
         )
         if pairs is not None:
             return pairs
-    # Spread single-file inputs across cores, and checkpoint the spread
-    # copy. ``pre_partitioned=True`` (optimization round 12, guide
-    # §2.3): callers that already spread the text before shingling skip
-    # this exchange — it round-robins the heavy shingle arrays a second
-    # time for no layout gain (the band join re-shuffles on its own
-    # keys regardless).
-    if not pre_partitioned:
-        df = df.repartition(par).localCheckpoint(eager=False)
+        # the helper freed the checkpoint; the plan reads the collected rows
+        ckpt = spark.createDataFrame(pdf, df.schema)
+    # Spread single-file inputs across cores. ``pre_partitioned=True``
+    # (optimization round 12, guide §2.3): callers that already spread
+    # the text before shingling skip this exchange — it round-robins the
+    # heavy shingle arrays a second time for no layout gain (the band
+    # join re-shuffles on its own keys regardless). The three reads
+    # below share one copy of the exchange (ReuseExchange), so the
+    # spread copy needs no cache of its own.
+    df = ckpt if pre_partitioned else ckpt.repartition(par)
     # filtered above the checkpoint: below it, the filter would be
     # pushed into the caller's shingle projection and evaluate its
     # lambda a second time
@@ -777,39 +784,20 @@ def simhash_pairs(
 # ------------------------------------- canonical connected components
 
 
-def _unpersist_local_checkpoint(df: DataFrame) -> None:
-    """Free the block storage behind a ``localCheckpoint(eager=True)``
-    DataFrame once it is superseded. ``DataFrame.unpersist`` only
-    covers ``persist()`` caches; the checkpoint's blocks live on the
-    underlying ``LogicalRDD`` — without this, every iteration of an
-    iterative operator leaks a persistent RDD for the session's
-    lifetime (executor-memory erosion in a long-lived 100 TB job).
-    Best-effort: internal-API drift must degrade to the old leak, not
-    break correctness."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _components_via_driver(sym: DataFrame, nodes: DataFrame, id_col: str) -> DataFrame:
-    """Exact connected components for a BOUNDED edge list, sized for
-    the driver it actually runs on: the edges land via Arrow
-    (``toPandas`` — two flat columns, no per-row ``Row`` objects) and
-    are factorized to dense int codes, so union-find state is two
-    numpy arrays (~16 bytes/edge endpoint), not Python dicts — the
-    collected footprint of the 2M-edge default is tens of MB, as the
-    ``driver_edges_max`` contract claims (round-7 ADVICE, low). Labels
-    are the min node id per component, shipped back as one broadcast
-    left join; nodes without edges are their own canonicals via the
-    coalesce."""
+def _components_via_driver(pdf, nodes: DataFrame, id_col: str) -> DataFrame:
+    """Exact connected components for a BOUNDED collected edge list
+    ``pdf`` (pandas, columns a_id, b_id), sized for the driver it
+    actually runs on: the edges are factorized to dense int codes, so
+    union-find state is two numpy arrays (~16 bytes/edge endpoint), not
+    Python dicts — the footprint at ``COMPONENTS_DRIVER_MAX_EDGES`` is
+    tens of MB (round-7 ADVICE, low). Labels are the min node id per
+    component, shipped back as one broadcast left join; nodes without
+    edges are their own canonicals via the coalesce."""
     import numpy as np
     import pandas as pd
 
-    spark = sym.sparkSession
+    spark = nodes.sparkSession
     id_type = nodes.schema[id_col].dataType.simpleString()
-    pdf = sym.toPandas()
     if len(pdf) == 0:
         mapping = spark.createDataFrame([], f"{id_col} {id_type}, __canon {id_type}")
     else:
@@ -857,7 +845,6 @@ def canonical_components(
     nodes: DataFrame,
     id_col: str,
     max_iter: int = 20,
-    driver_edges_max: int = 2_000_000,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
@@ -881,46 +868,33 @@ def canonical_components(
     0.42-threshold graph over 2000 fixture vectors has ~440 edges; a
     production near-dup graph is bounded by the pair-expansion caps),
     and the iterative loop's per-round cost is scheduler floor, not
-    data. So when the materialized edge list is small
-    (``<= driver_edges_max`` rows, default 2M — collected via Arrow and
-    factorized to numpy codes, ~tens of MB on the driver, never Row
-    objects) the components are solved EXACTLY with a driver-side
-    union-find over the collected edges and joined back as one
-    broadcast map — same answer, zero iterations, profiled 2x faster
-    end-to-end at sf0.1 (round-6 VERDICT item 2). The edge count rides
-    the edge checkpoint's own materialization job (observe), so the
-    decision costs nothing; above the bound, the distributed loop runs
-    unchanged — that path is the 100 TB design.
+    data. So the edge list goes through ``localrel.collect_or_checkpoint``
+    with the bound ``COMPONENTS_DRIVER_MAX_EDGES``: a list that fits is
+    collected (Arrow, two flat columns, never Row objects) and solved
+    EXACTLY with a driver-side union-find, joined back as one broadcast
+    map — same answer, zero iterations, profiled 2x faster end-to-end
+    at sf0.1 (round-6 VERDICT item 2). Above the bound, the distributed
+    loop runs on the helper's checkpoint, with its exact edge count
+    sizing the loop's partitions — that path is the 100 TB design.
 
     Raises ``RuntimeError`` when the distributed loop has not reached
     its fixpoint after ``max_iter`` rounds: the labels at that point
     are only partially propagated, so there is no correct answer to
     return.
     """
-    from pyspark.sql import Observation
-
     # Materialize the EDGE list once, before symmetrizing (optimization
     # round 13, guide §2.4): the sym union below references the edge
     # subtree twice (a→b and b→a), so checkpointing sym executed the
     # edge computation — the block-GEMM threshold join, the Jaccard
     # pair expansion — TWICE inside one job (measured: the 5×-amplified
-    # text dedup spent ~2× its pair cost here). One eager checkpoint of
-    # the raw edges makes both directions read the cached blocks; the
-    # edge count rides its materialization job unchanged.
-    obs_e = Observation()
-    e = edges.select(F.col("a_id"), F.col("b_id")).observe(
-        obs_e, F.count(F.lit(1)).alias("n")
+    # text dedup spent ~2× its pair cost here). The driver route
+    # collects the RAW edge list (union-find is undirected; half the
+    # Arrow transfer sym carried).
+    pdf, e, n_edges = collect_or_checkpoint(
+        edges.select(F.col("a_id"), F.col("b_id")), COMPONENTS_DRIVER_MAX_EDGES
     )
-    e = e.localCheckpoint(eager=True)
-    n_edges = obs_e.get["n"]
-    if n_edges <= driver_edges_max:
-        # union-find is undirected: the driver path collects the RAW
-        # edge list (half the Arrow transfer sym carried)
-        out = _components_via_driver(e, nodes, id_col)
-        # the collect inside already happened; the returned plan joins
-        # a broadcast local mapping and never references the checkpoint
-        _unpersist_local_checkpoint(e)
-        return out
+    if pdf is not None:
+        return _components_via_driver(pdf, nodes, id_col)
     sym = e.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     ).unionByName(
@@ -981,8 +955,6 @@ def canonical_components(
         # via observe() — one Spark job per round, not two (the probe
         # was ~half of each round's wall time at small scale, and at
         # cluster scale it saves a full scheduler round-trip per round).
-        from pyspark.sql import Observation
-
         obs = Observation()
         new_labels = new_labels.observe(obs, F.sum("label").alias("s"))
         new_labels = new_labels.localCheckpoint(eager=True)

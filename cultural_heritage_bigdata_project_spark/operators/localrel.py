@@ -17,6 +17,13 @@ launches no job at all). Anything the VALUES path cannot express
 bit-faithfully (bytes, decimals, nested structs/maps, datetimes, >1k
 rows) falls back to the 1-slice RDD path: identical rows, schema, and
 semantics either way, pinned by tests/test_plans.py's localrel tests.
+
+``collect_or_checkpoint`` is the one small-input route of the operators
+that fork on input size (``similarity.threshold_similarity_join``,
+``dedup.minhash_lsh_pairs``, ``dedup.canonical_components``): each
+passes its input and its bound (a module constant next to the
+operator) and runs its driver route on the returned rows, or its
+distributed plan on the returned checkpoint.
 """
 
 from __future__ import annotations
@@ -24,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 # VALUES-path guard: a page/shortlist is tens of rows; anything larger
 # is cheaper through one RDD slice than a giant parsed SQL string.
@@ -142,14 +150,38 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     )
 
 
-def collect_at_most(df: DataFrame, n: int):
-    """``df``'s rows as a pandas frame when it has at most ``n`` rows,
-    else None.
+def _unpersist_local_checkpoint(df: DataFrame) -> None:
+    """Free the block storage behind a ``localCheckpoint`` DataFrame
+    once nothing reads it. ``DataFrame.unpersist`` only covers
+    ``persist()`` caches; the checkpoint's blocks live on the
+    underlying ``LogicalRDD`` — without this, every iteration of an
+    iterative operator leaks a persistent RDD for the session's
+    lifetime (executor-memory erosion in a long-lived 100 TB job).
+    Best-effort: internal-API drift must degrade to the old leak, not
+    break correctness."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        plan.rdd().unpersist(False)
+    except Exception:
+        pass
 
-    One bounded ``limit(n + 1)`` collect (Arrow when the session enables
-    it) is the size probe, and for a caller that selects the columns its
-    driver-side route needs, also that route's collect: an input that
-    fits is collected once, a larger one costs a job that stops after
-    ``n + 1`` rows (of every partition, when it has several)."""
-    head = df.limit(n + 1).toPandas()
-    return head if len(head) <= n else None
+
+def collect_or_checkpoint(df: DataFrame, max_rows: int):
+    """``(rows, None, n)`` when ``df`` has at most ``max_rows`` rows,
+    else ``(None, checkpoint, n)``; ``n`` is the exact row count.
+
+    ``df`` is checkpointed once, eagerly, and the count rides that
+    materialization job (an ``Observation``), so the caller's lineage
+    runs once whichever route wins. At or below the bound the
+    checkpoint is collected (Arrow, when the session enables it) into a
+    pandas frame and freed; above it, the checkpoint is returned for
+    the distributed plan to read, and no row is gathered into one
+    task."""
+    obs = Observation()
+    ckpt = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    n = obs.get["n"]
+    if n > max_rows:
+        return None, ckpt, n
+    rows = ckpt.toPandas()
+    _unpersist_local_checkpoint(ckpt)
+    return rows, None, n

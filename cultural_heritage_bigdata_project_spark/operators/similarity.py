@@ -29,7 +29,14 @@ from ..functions.vectors import (
     l2_norm,
     py_l2_norm,
 )
-from .localrel import collect_at_most, local_df
+from .localrel import collect_or_checkpoint, local_df
+
+# ``threshold_similarity_join`` block edge: an input of at most this
+# many vectors is one block pair, joined on the driver, which then holds
+# what that one task would: ``block × dim`` doubles and a ``block²``
+# similarity matrix (32 MB at 2,048). Larger inputs are hashed into
+# ``ceil(n / block)`` blocks joined pairwise in ``applyInPandas``.
+THRESHOLD_JOIN_BLOCK_ROWS = 2048
 
 
 def knn_brute_force(
@@ -71,8 +78,6 @@ def threshold_similarity_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int | None = 6,
-    block_size: int = 2048,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """J9/M3: all pairs (a<b) with cosine ≥ threshold — exact, via
     block-matrix BLAS.
@@ -89,23 +94,15 @@ def threshold_similarity_join(
     sub-quadratic path is ``lsh_candidate_pairs`` + verify; this is the
     exact oracle.
 
-    Single block: when the input fits one block (``n <= block_size``)
-    the grid is one block pair, and shipping it through an explode, a
-    shuffle and one Python-worker task only adds a worker start and a
-    2n-row exchange. Instead the ``(id, vector)`` rows are collected
-    with a bounded ``limit(block_size + 1)`` (Arrow), the same ``pairs``
-    kernel runs on the driver, and the edges come back through
-    ``createDataFrame`` — identical rows, including ``cosine_sim``. The
-    driver then holds what that one task would: ``block_size × dim``
-    doubles and a ``block_size²`` similarity matrix (32 MB at the
-    default 2048). The bounded collect doubles as the size probe: a
-    ``block_size + 1``-th row means the input needs the blocked path.
-
-    ``n_rows``: pass the (approximate) collection size when known — it
-    only sizes the block grid, so a catalog/statistics estimate is
-    fine. A value above ``block_size`` goes straight to the blocked
-    path; without it, the bounded collect decides, and only an input
-    larger than one block pays the ``count()`` scan that sizes the grid.
+    Single block: the ``(id, vector)`` rows go through
+    ``localrel.collect_or_checkpoint`` with the bound
+    ``THRESHOLD_JOIN_BLOCK_ROWS``. An input that fits one block is
+    collected, the same ``pairs`` kernel runs on the driver, and the
+    edges come back through ``createDataFrame`` — identical rows,
+    including ``cosine_sim``, without an explode, a shuffle and a
+    Python-worker start. A larger input's block grid is sized from the
+    exact count the helper returns, and both sides of the grid read its
+    checkpoint, so the caller's lineage runs once either way.
     """
     import math
 
@@ -144,14 +141,12 @@ def threshold_similarity_join(
     iv = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    if n_rows is None or n_rows <= block_size:
-        head = collect_at_most(iv, block_size)
-        if head is not None:
-            ids, vs = head["id"].to_numpy(), head["v"].to_numpy()
-            return vectors.sparkSession.createDataFrame(pairs(ids, vs, ids, vs), schema)
-    n = n_rows if n_rows is not None else vectors.count()
-    nb = max(1, math.ceil(n / block_size))
-    v = iv.withColumn("b", F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int"))
+    head, ckpt, n = collect_or_checkpoint(iv, THRESHOLD_JOIN_BLOCK_ROWS)
+    if head is not None:
+        ids, vs = head["id"].to_numpy(), head["v"].to_numpy()
+        return vectors.sparkSession.createDataFrame(pairs(ids, vs, ids, vs), schema)
+    nb = math.ceil(n / THRESHOLD_JOIN_BLOCK_ROWS)
+    v = ckpt.withColumn("b", F.pmod(F.xxhash64(F.col("id")), F.lit(nb)).cast("int"))
     # block-pair keys: block i meets block j (i<=j) exactly once —
     # i's rows on the L side, j's on the R side.
     left = (

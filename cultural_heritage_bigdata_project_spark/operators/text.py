@@ -20,6 +20,7 @@ from ..functions.text import (
 )
 
 from ..functions.langid import LANGS, profile_rows
+from .localrel import _unpersist_local_checkpoint
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1379,8 +1380,6 @@ def bpe_train_merges(
         ).alias("syms"),
         F.col("cnt"),
     ).localCheckpoint(eager=True)
-
-    from ..operators.dedup import _unpersist_local_checkpoint
 
     if incremental is None:
         incremental = seg.count() >= incremental_threshold

@@ -24,27 +24,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _emb_nrows(sf_dir: str) -> int | None:
-    """Exact embeddings row count from the parquet FOOTER, driver-side
-    (optimization round 13, guide §5/§6): `threshold_similarity_join`
-    only needs the count to pick its single-block path or size its
-    block grid, and its own size probe is one extra Spark job per
-    invocation. The footer's ``num_rows`` is exact for parquet; None
-    (unreadable) falls back to that probe."""
-    try:
-        import os as _os
-
-        import pyarrow.parquet as _pq
-
-        return int(
-            _pq.ParquetFile(
-                _os.path.join(sf_dir, "embeddings.parquet")
-            ).metadata.num_rows
-        )
-    except Exception:
-        return None
-
-
 def _query_list(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
     """The query vector as a plain Python list (driver-side: lets ANN
     operators compute buckets/probe lists without a Spark job).
@@ -127,9 +106,7 @@ WHERE round(list_dot_product(a.v, b.v) / (a.nrm * b.nrm), 6) >= 0.4
 """,
 )
 def threshold_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.threshold_similarity_join(
-        _emb(spark, sf_dir), threshold=0.4, n_rows=_emb_nrows(sf_dir)
-    )
+    return similarity.threshold_similarity_join(_emb(spark, sf_dir), threshold=0.4)
 
 
 @register(
@@ -159,9 +136,7 @@ FROM reach GROUP BY src
 )
 def semantic_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    edges = similarity.threshold_similarity_join(
-        emb, threshold=0.42, n_rows=_emb_nrows(sf_dir)
-    )
+    edges = similarity.threshold_similarity_join(emb, threshold=0.42)
     return dedup.canonical_components(edges, emb, "vec_id")
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import cleanse, merge, txn
+from ..operators.localrel import _unpersist_local_checkpoint
 
 # Per-run instrumentation (round-8 VERDICT item 5): time spent INSIDE
 # foreachBatch bodies for the most recent foreach_batch_upsert_run, so
@@ -1228,9 +1229,9 @@ def streaming_corpus_dedup_run(
             txn.write_manifest(tdir, vname, manifest)
             txn.publish_version(tdir, vname, keep_last=keep_last, op="stream_dedup")
         finally:
-            dedup._unpersist_local_checkpoint(batch_df)
+            _unpersist_local_checkpoint(batch_df)
             if idx_ckpt is not None:
-                dedup._unpersist_local_checkpoint(idx_ckpt)
+                _unpersist_local_checkpoint(idx_ckpt)
 
     writer = stream.writeStream.foreachBatch(dedup_batch).trigger(availableNow=True)
     with _scoped_shuffle_partitions(spark):

@@ -330,10 +330,10 @@ def test_bm25_serve_memo_parity_and_staleness(spark, tmp_path):
     assert {r[0] for r in second} == {0, 1, 2, 50}
 
 
-def test_canonical_components_distributed_loop_parity(spark):
+def test_canonical_components_distributed_loop_parity(spark, monkeypatch):
     """Round-13 canonical_components rework (edges checkpointed once
     before symmetrizing; scale-adaptive loop repartition): the
-    distributed fixpoint loop (forced via driver_edges_max=0) and the
+    distributed fixpoint loop (forced with a 0 edge bound) and the
     driver union-find return identical labels over a graph with chains,
     a clique, and edge-less singletons."""
     from cultural_heritage_bigdata_project_spark.operators import dedup
@@ -350,13 +350,9 @@ def test_canonical_components_distributed_loop_parity(spark):
     drv = sorted(
         map(tuple, dedup.canonical_components(edges, nodes, "vec_id").collect())
     )
+    monkeypatch.setattr(dedup, "COMPONENTS_DRIVER_MAX_EDGES", 0)
     dist = sorted(
-        map(
-            tuple,
-            dedup.canonical_components(
-                edges, nodes, "vec_id", driver_edges_max=0
-            ).collect(),
-        )
+        map(tuple, dedup.canonical_components(edges, nodes, "vec_id").collect())
     )
     assert drv == dist
     expect = {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 12: 10,

@@ -6,6 +6,7 @@ inputs (nulls included)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -103,12 +104,12 @@ def test_dedup_first_wins_matches_reference(spark, rows):
         st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(lambda e: e[0] != e[1]),
         max_size=10,
     ),
-    driver_edges_max=st.sampled_from([0, 2_000_000]),
+    max_edges=st.sampled_from([0, dedup.COMPONENTS_DRIVER_MAX_EDGES]),
 )
-def test_canonical_components_matches_union_find(spark, edges, driver_edges_max):
-    # driver_edges_max=0 forces the distributed min-label loop (the
-    # 100 TB path); the default takes the round-7 driver union-find
-    # fallback — both must match the reference union-find exactly
+def test_canonical_components_matches_union_find(spark, edges, max_edges):
+    # a bound of 0 forces the distributed min-label loop (the 100 TB
+    # path); the default takes the round-7 driver union-find fallback
+    # — both must match the reference union-find exactly
     nodes = list(range(10))
     ndf = spark.createDataFrame([(n,) for n in nodes], "vec_id int")
     edf = spark.createDataFrame(
@@ -116,12 +117,12 @@ def test_canonical_components_matches_union_find(spark, edges, driver_edges_max)
     )
     if not edges:
         edf = edf.filter("a_id <> a_id")  # empty edge set
-    labels = {
-        r.vec_id: r.canonical_id
-        for r in dedup.canonical_components(
-            edf, ndf, "vec_id", driver_edges_max=driver_edges_max
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(dedup, "COMPONENTS_DRIVER_MAX_EDGES", max_edges)
+        labels = {
+            r.vec_id: r.canonical_id
+            for r in dedup.canonical_components(edf, ndf, "vec_id").collect()
+        }
     # reference union-find
     parent = {n: n for n in nodes}
 

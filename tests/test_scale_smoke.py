@@ -93,27 +93,27 @@ def _path_graph(spark, n):
     return edges, nodes
 
 
-def test_canonical_components_deep_chain(spark):
+def test_canonical_components_deep_chain(spark, monkeypatch):
     """A 2000-node path graph (diameter 2000) must converge inside the
     default 20-round budget — pointer doubling gives O(log diameter)
     rounds where bare min-propagation needs one round per hop.
-    ``driver_edges_max=0`` keeps the 2000 edges off the driver
-    union-find, so the distributed loop is what runs."""
+    A bound of 0 keeps the 2000 edges off the driver union-find, so
+    the distributed loop is what runs."""
     n = 2000
     edges, nodes = _path_graph(spark, n)
-    labels = dedup.canonical_components(edges, nodes, "vid", driver_edges_max=0)
+    monkeypatch.setattr(dedup, "COMPONENTS_DRIVER_MAX_EDGES", 0)
+    labels = dedup.canonical_components(edges, nodes, "vid")
     got = {r.vid: r.canonical_id for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
 
 
-def test_canonical_components_raises_when_not_converged(spark):
+def test_canonical_components_raises_when_not_converged(spark, monkeypatch):
     """One round cannot collapse a 64-node path: the loop must raise
     rather than return partially propagated canonical ids."""
     edges, nodes = _path_graph(spark, 64)
+    monkeypatch.setattr(dedup, "COMPONENTS_DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        dedup.canonical_components(
-            edges, nodes, "vid", max_iter=1, driver_edges_max=0
-        )
+        dedup.canonical_components(edges, nodes, "vid", max_iter=1)
 
 
 def test_hot_bucket_cap_adversarial_corpus(spark):

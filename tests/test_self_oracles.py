@@ -138,7 +138,7 @@ def test_canonical_components_invariants(spark):
         assert c == min(vs), f"canonical {c} != min member {min(vs)}"
 
 
-def test_threshold_join_single_block_matches_blocked(spark):
+def test_threshold_join_single_block_matches_blocked(spark, monkeypatch):
     """An input that fits one block is joined on the driver; it must
     return exactly the rows (cosine_sim included) of the distributed
     block-pair grid, and degenerate inputs an empty, typed frame."""
@@ -148,7 +148,9 @@ def test_threshold_join_single_block_matches_blocked(spark):
         return df._jdf.queryExecution().executedPlan().toString()
 
     single = similarity.threshold_similarity_join(emb, threshold=0.42)
-    blocked = similarity.threshold_similarity_join(emb, threshold=0.42, block_size=256)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "THRESHOLD_JOIN_BLOCK_ROWS", 256)
+        blocked = similarity.threshold_similarity_join(emb, threshold=0.42)
     assert "FlatMapGroupsInPandas" not in plan(single)
     assert "FlatMapGroupsInPandas" in plan(blocked)
     rows = sorted(single.collect())
