@@ -67,6 +67,19 @@ def cosine_similarity_qnorm(v: Column, qlit: Column, q_norm: float) -> Column:
     return dot_product(v, qlit) / (l2_norm(v) * F.lit(float(q_norm)))
 
 
+def _hamming_distance(words: Column, qwords: Column) -> Column:
+    """Σ popcount(wᵢ XOR qᵢ) over two packed sign-bit word arrays
+    (``array<long>``, `similarity._bq_words_expr`): the BQ codec's
+    shortlist surrogate, one XOR + popcount per 63 dims."""
+    return F.aggregate(
+        F.zip_with(
+            words, qwords, lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long")
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
 def normalize(a: Column) -> Column:
     """Unit-normalize; with normalized vectors cosine == dot, and
     Euclidean LSH bucketing approximates cosine neighborhoods."""

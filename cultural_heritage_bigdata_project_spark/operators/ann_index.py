@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import _hamming_distance, cosine_similarity
 from . import segment_index as sx
 from . import txn
 from .localrel import local_df
@@ -52,6 +53,7 @@ from .similarity import (
     pq_codebook,
     py_l2_norm,
 )
+from .windows import top_k_per_group
 
 META_COMPONENT = "meta"
 CODES_COMPONENT = "codes"
@@ -852,15 +854,7 @@ def _shortlist_rerank(
             )
         qwords = _bq_query_words([float(x) for x in query])
         qarr = F.array(*[F.lit(int(w)).cast("long") for w in qwords])
-        hamming = F.aggregate(
-            F.zip_with(
-                F.col("bq_words"),
-                qarr,
-                lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
+        hamming = _hamming_distance(F.col("bq_words"), qarr)
         short = (
             probed.withColumn("hamming", hamming)
             .select(id_col, "hamming")
@@ -1009,28 +1003,24 @@ def ann_index_top_k_all(
     ``codec`` picks the shortlist surrogate, as in the single-query
     path: ``"bq"`` (default — the cheapest-I/O batch shape) XOR+
     popcounts stored sign words against each query's own packed
-    words; ``"pq"`` (round 11 — closing the single/batch recommend
-    parity gap) scores stored PQ codes against a PER-QUERY integer
+    words; ``"pq"`` scores stored PQ codes against a PER-QUERY integer
     ADC table that RIDES THE QUERY ROWS as an array<long> column
     (`similarity._assign_probe_lists_adc` emits it from the same
     Arrow GEMM that assigns probe lists, bit-identical to the
     single-query LUT), so the per-candidate score is m JVM
-    ``element_at`` lookups — the "per-query driver literals" blocker
-    the r9 docstring cited is gone. Output carries the surrogate
-    column (``hamming`` or ``adc_micro``).
+    ``element_at`` lookups. Output carries the surrogate column
+    (``hamming`` or ``adc_micro``).
 
     Shape: per-query probe lists come from one Arrow GEMM over the
     stored centroids (``similarity._assign_probe_lists``); the index's
     probed rows (union of all queries' lists, still segment-pruned +
     delta tail, same fold as the single-query path) join the
-    assignments on the list id; the shortlist surrogate is the stored
-    BQ sign words against each query's own packed words — a pure
-    column-to-column XOR/popcount, which is what makes BATCH serving
-    JVM-only (PQ's per-query ADC tables would be driver literals per
-    query and cannot ride a column). Exact cosine re-ranks each
-    query's shortlist; two q_id-partitioned windows do shortlist and
-    top-k. Returns (q_id, vec_id, hamming, cosine_sim) rows, k per
-    query.
+    assignments on the list id. The hamming and cosine expressions are
+    the single-query path's own (`functions.vectors`), and two
+    q_id-partitioned `windows.top_k_per_group` windows do shortlist
+    and top-k, so each query's rows equal its single-query serve
+    (tested for both codecs). Returns (q_id, vec_id, surrogate,
+    cosine_sim) rows, k per query.
 
     ``payload_filter`` / ``payload_out`` behave exactly as in the
     single-query path (round 10 — previously batch callers had to
@@ -1046,8 +1036,6 @@ def ann_index_top_k_all(
     key is the list id (bounded distinct values) — AQE's skew split
     handles a hot list, and the assignment side is ~|Q|·n_probe rows,
     broadcast when small."""
-    from pyspark.sql import Window
-
     from .similarity import (
         _assign_probe_lists,
         _assign_probe_lists_adc,
@@ -1136,15 +1124,7 @@ def ann_index_top_k_all(
         )
     cand = rows.join(qside, rows.ann_list == qside["__list"])
     if codec == "bq":
-        score = F.aggregate(
-            F.zip_with(
-                F.col("bq_words"),
-                F.col("__qwords"),
-                lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
+        score = _hamming_distance(F.col("bq_words"), F.col("__qwords"))
         short_order = [F.col(surrogate).asc(), F.col(id_col).asc()]
     else:
         # m element_at lookups into the riding ADC table — whole-stage
@@ -1156,55 +1136,21 @@ def ann_index_top_k_all(
             ).cast("long")
             score = term if score is None else score + term
         short_order = [F.col(surrogate).desc(), F.col(id_col).asc()]
-    scored = cand.withColumn(surrogate, score)
-    w_short = Window.partitionBy("__qid").orderBy(*short_order)
-    shortlisted = scored.withColumn(
-        "__rn", F.row_number().over(w_short)
-    ).filter(F.col("__rn") <= shortlist)
-    sim = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col(vec_col).cast("array<double>"),
-                F.col("__qv"),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (
-            F.sqrt(
-                F.aggregate(
-                    F.transform(
-                        F.col(vec_col).cast("array<double>"), lambda x: x * x
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-            * F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("__qv"), lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-        ),
-        6,
+    shortlisted = top_k_per_group(
+        cand.withColumn(surrogate, score), ["__qid"], short_order, shortlist
     )
-    w_top = Window.partitionBy("__qid").orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        shortlisted.withColumn("cosine_sim", sim)
-        .withColumn("__rk", F.row_number().over(w_top))
-        .filter(F.col("__rk") <= k)
-        .select(
-            F.col("__qid").alias(q_id_col),
-            F.col(id_col),
-            surrogate,
-            "cosine_sim",
-            *[F.col(c) for c in (payload_out or [])],
-        )
+    sim = F.round(cosine_similarity(F.col(vec_col), F.col("__qv")), 6)
+    return top_k_per_group(
+        shortlisted.withColumn("cosine_sim", sim),
+        ["__qid"],
+        [F.col("cosine_sim").desc(), F.col(id_col).asc()],
+        k,
+    ).select(
+        F.col("__qid").alias(q_id_col),
+        F.col(id_col),
+        surrogate,
+        "cosine_sim",
+        *[F.col(c) for c in (payload_out or [])],
     )
 
 
@@ -1402,13 +1348,43 @@ def ann_index_dedup_purge(
     scan is governed by ``n_probe``/``shortlist``/``top_n`` exactly as
     in serving; near-identical vectors land in the same IVF list, so
     modest probes find them (exhaustive probe = exact, how the test
-    pins it)."""
-    live = txn.read_version(spark, root, subdir=CODES_COMPONENT).select(
-        F.col(id_col), F.col(vec_col)
+    pins it). CURRENT resolves once: the candidates and the batch serve
+    read the same version (`_duplicate_ids`, shared with the
+    collection purge)."""
+    losers = _duplicate_ids(
+        spark, root, None, threshold, n_probe, shortlist, top_n,
+        candidate_ids, id_col, vec_col,
     )
-    qs = live
+    if losers.limit(1).count():
+        ann_index_delete(spark, losers, root, id_col=id_col, keep_last=keep_last)
+    return losers
+
+
+def _duplicate_ids(
+    spark: SparkSession,
+    root: str,
+    version: str | None,
+    threshold: float,
+    n_probe: int,
+    shortlist: int,
+    top_n: int,
+    candidate_ids: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The detection pass of both dedup purges (this module's and
+    `collection.collection_dedup_purge`): pin ``version`` (CURRENT when
+    None) once, batch-serve the live candidates' vectors against the
+    index at that pin, and return every candidate with a SMALLER-id
+    neighbor at ``cosine >= threshold`` as an eagerly pinned
+    ``(id_col)`` frame — pinned before the caller's delete commits,
+    because a lazy plan would re-serve the post-delete index."""
+    version = sx.pin(root, version)
+    qs = ann_index_live(spark, root, id_col, version=version).select(
+        id_col, vec_col
+    )
     if candidate_ids is not None:
-        qs = live.join(
+        qs = qs.join(
             candidate_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
         )
     res = ann_index_top_k_all(
@@ -1422,19 +1398,17 @@ def ann_index_dedup_purge(
         vec_col=vec_col,
         q_id_col="__q",
         q_vec_col=vec_col,
+        version=version,
     )
-    losers = (
+    return (
         res.filter(
             (F.col("cosine_sim") >= F.lit(float(threshold)))
             & (F.col(id_col) < F.col("__q"))
         )
         .select(F.col("__q").alias(id_col))
         .distinct()
-        .localCheckpoint(eager=True)  # pin before the index mutates
+        .localCheckpoint(eager=True)
     )
-    if losers.limit(1).count():
-        ann_index_delete(spark, losers, root, id_col=id_col, keep_last=keep_last)
-    return losers
 
 
 def ann_index_live(
@@ -1875,159 +1849,6 @@ def ann_index_describe(spark: SparkSession, root: str, with_count: bool = False)
             ann_index_count(spark, root).first()["n_points"]
         )
     return out
-
-
-def ann_index_recommend_all(
-    spark: SparkSession,
-    root: str,
-    examples: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    user_col: str = "user_id",
-    positive_col: str = "is_positive",
-    allowed_ids: DataFrame | None = None,
-    payload_filter=None,
-    codec: str = "pq",
-    version: str | None = None,
-) -> DataFrame:
-    """Batch recommend: `ann_index_recommend` for EVERY user in one
-    job — the recommendation-refresh shape (the reference's ML-model
-    loops per-user HTTP recommends; this is that nightly job as one
-    DataFrame program). ``examples`` carries
-    ``(user_col, id_col, positive_col: bool)`` example points per
-    user; each user gets the ``average_vector`` search point
-    ``P + (P - N)`` (``P`` when the user has no negatives) and k
-    results excluding their own examples.
-
-    Distributed end to end — nothing per-user happens on the driver:
-    ONE columns-pruned pass over the live fold fetches every example
-    vector for the whole batch (a semi-join, amortizing what the
-    single-query path does with a pushed-IN read), the per-user
-    averages are a posexplode → (user, sign, position) partial agg →
-    array re-assembly (rows bounded by |examples| x dim), the serve is
-    the shared `ann_index_top_k_all` batch probe (index read ONCE for
-    all users), and the example exclusion is an anti-join on
-    (user, id) with the per-user top-k window re-applied after it (the
-    serve over-fetches by the batch's max examples-per-user so
-    exclusion can never under-fill k).
-
-    Example ids missing from the live index (tombstoned or never
-    upserted) raise KeyError — the same 404 semantics as the
-    single-user path's `ann_index_fetch_vectors`; silently dropping
-    them would skew the average, and a user whose examples are ALL
-    missing would silently vanish from the output.
-
-    ``codec`` defaults to ``"pq"`` (round 11 — the r9/r10 verdicts'
-    single/batch parity gap, closed): the batch serve now shortlists
-    by the SAME PQ ADC surrogate as `ann_index_recommend`'s default
-    (per-user ADC tables ride the query rows,
-    `similarity._assign_probe_lists_adc`), so the two paths agree at
-    the DEFAULT shortlist, not just exhaustive ones — pinned by
-    `test_batch_recommend_matches_single_user_at_default_shortlist`.
-    Remaining divergence, honestly: the distributed average
-    reassociates float64 adds, so the derived query vector (and with
-    it, scores) can differ from the single-user path in the last
-    bits. Pass ``codec="bq"`` for the cheapest-I/O shortlist when
-    bit-agreement with the single path does not matter."""
-    from pyspark.sql import Window
-
-    # one CURRENT resolve for the example fold AND the batch probe
-    # (round 12 — the single-path fix, batch twin)
-    version = sx.pin(root, version)
-    ex = examples.select(
-        F.col(user_col).alias("__u"),
-        F.col(id_col),
-        F.col(positive_col).cast("boolean").alias("__pos"),
-    )
-    live = ann_index_live(spark, root, id_col, version=version).select(
-        id_col, vec_col
-    )
-    missing = (
-        ex.select(id_col)
-        .distinct()
-        .join(live.select(id_col), on=id_col, how="left_anti")
-        .limit(5)
-        .collect()
-    )
-    if missing:
-        raise KeyError(
-            "example ids not in the live index: "
-            f"{sorted(int(r[id_col]) for r in missing)} (tombstoned or "
-            "never upserted) — matching ann_index_recommend's KeyError "
-            "for missing example points"
-        )
-    exvec = ex.join(live, on=id_col, how="inner")
-
-    # per-user, per-sign elementwise mean over the example vectors
-    cell = exvec.select(
-        "__u", "__pos", F.posexplode(F.col(vec_col).cast("array<double>"))
-    ).groupBy("__u", "__pos", "pos").agg(F.avg("col").alias("__m"))
-    comp = (
-        cell.groupBy("__u", "pos")
-        .agg(
-            F.max(F.when(F.col("__pos"), F.col("__m"))).alias("__p"),
-            F.max(F.when(~F.col("__pos"), F.col("__m"))).alias("__n"),
-        )
-        .withColumn(
-            "__q",
-            F.when(F.col("__n").isNull(), F.col("__p")).otherwise(
-                F.col("__p") + (F.col("__p") - F.col("__n"))
-            ),
-        )
-    )
-    queries = comp.groupBy("__u").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "__q"))),
-            lambda s: s["__q"],
-        ).alias(vec_col)
-    )
-    # users with ONLY negative examples have a NULL query vector —
-    # refuse them the way the single path's ValueError does
-    bad = queries.filter(
-        F.exists(F.col(vec_col), lambda x: x.isNull())
-    ).limit(1).count()
-    if bad:
-        raise ValueError(
-            "recommend requires at least one positive example per user"
-        )
-
-    n_ex_max = int(
-        ex.groupBy("__u").count().agg(F.max("count")).first()[0] or 0
-    )
-    res = ann_index_top_k_all(
-        spark,
-        root,
-        queries,
-        k=int(k) + n_ex_max,
-        n_probe=n_probe,
-        shortlist=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        q_id_col="__u",
-        q_vec_col=vec_col,
-        allowed_ids=allowed_ids,
-        payload_filter=payload_filter,
-        codec=codec,
-        version=version,
-    )
-    surrogate = "hamming" if codec == "bq" else "adc_micro"
-    res = res.join(ex.select("__u", id_col), on=["__u", id_col], how="left_anti")
-    w = Window.partitionBy("__u").orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        res.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= int(k))
-        .select(
-            F.col("__u").alias(user_col),
-            F.col(id_col),
-            surrogate,
-            "cosine_sim",
-        )
-    )
 
 
 def ann_index_drift(spark: SparkSession, root: str) -> dict:

@@ -663,35 +663,6 @@ def collection_search(
     )
 
 
-def collection_search_all(
-    spark: SparkSession,
-    root: str,
-    space: str,
-    queries: DataFrame,
-    **kwargs,
-) -> DataFrame:
-    """BATCH kNN against one named space — `ann_index_top_k_all`'s
-    one-pass-per-index amortized shape, served at the collection's
-    pinned pair (round 12, the collection-surface completion: every
-    per-space primitive is reachable from the collection without
-    reading CURRENT). ``queries`` carries ``(q_id, embedding)`` rows;
-    all batch-serve knobs (k / n_probe / shortlist / codec /
-    payload_filter / payload_out / q_id_col / q_vec_col) pass
-    through."""
-    pins, meta = _read_spaces(root)
-    if space not in pins:
-        raise KeyError(f"unknown space {space!r}; collection has {sorted(pins)}")
-    return ann_index.ann_index_top_k_all(
-        spark,
-        _space_root(root, space),
-        queries,
-        id_col=meta["id_col"],
-        vec_col="embedding",
-        version=pins[space],
-        **kwargs,
-    )
-
-
 def collection_recommend(
     spark: SparkSession,
     root: str,
@@ -715,30 +686,6 @@ def collection_recommend(
         _space_root(root, space),
         positive_ids,
         negative_ids=negative_ids,
-        id_col=meta["id_col"],
-        vec_col="embedding",
-        version=pins[space],
-        **kwargs,
-    )
-
-
-def collection_recommend_all(
-    spark: SparkSession,
-    root: str,
-    space: str,
-    examples: DataFrame,
-    **kwargs,
-) -> DataFrame:
-    """Batch recommend against one named space at the collection pin —
-    the nightly recommendation-refresh job over the collection surface
-    (`ann_index_recommend_all`: one index read for every user)."""
-    pins, meta = _read_spaces(root)
-    if space not in pins:
-        raise KeyError(f"unknown space {space!r}; collection has {sorted(pins)}")
-    return ann_index.ann_index_recommend_all(
-        spark,
-        _space_root(root, space),
-        examples,
         id_col=meta["id_col"],
         vec_col="embedding",
         version=pins[space],
@@ -1053,37 +1000,9 @@ def collection_dedup_purge(
     pins, meta = _read_spaces(root)
     if space not in pins:
         raise KeyError(f"unknown space {space!r}; collection has {sorted(pins)}")
-    id_col = meta["id_col"]
-    sroot = _space_root(root, space)
-    live = ann_index.ann_index_live(
-        spark, sroot, id_col, version=pins[space]
-    ).select(id_col, "embedding")
-    qs = live
-    if candidate_ids is not None:
-        qs = live.join(
-            candidate_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
-        )
-    res = ann_index.ann_index_top_k_all(
-        spark,
-        sroot,
-        qs.select(F.col(id_col).alias("__q"), F.col("embedding")),
-        k=top_n,
-        n_probe=n_probe,
-        shortlist=shortlist,
-        id_col=id_col,
-        vec_col="embedding",
-        q_id_col="__q",
-        q_vec_col="embedding",
-        version=pins[space],
-    )
-    losers = (
-        res.filter(
-            (F.col("cosine_sim") >= F.lit(float(threshold)))
-            & (F.col(id_col) < F.col("__q"))
-        )
-        .select(F.col("__q").alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)  # pin before the collection mutates
+    losers = ann_index._duplicate_ids(
+        spark, _space_root(root, space), pins[space], threshold, n_probe,
+        shortlist, top_n, candidate_ids, meta["id_col"], "embedding",
     )
     if losers.limit(1).count():
         collection_delete(spark, losers, root, keep_last=keep_last)

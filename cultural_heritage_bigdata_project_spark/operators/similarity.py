@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions.vectors import (
+    _hamming_distance,
     cosine_similarity,
     cosine_similarity_qnorm,
     dot_product,
@@ -30,6 +31,7 @@ from ..functions.vectors import (
     py_l2_norm,
 )
 from .localrel import collect_or_checkpoint, local_df
+from .windows import top_k_per_group
 
 # ``threshold_similarity_join`` block edge: an input of at most this
 # many vectors is one block pair, joined on the driver, which then holds
@@ -1536,15 +1538,7 @@ def bq_deterministic_top_k(
         raise ValueError(f"query dim {len(qv)} != collection dim {dim}")
     qwords = _bq_query_words(qv)
     qarr = F.array(*[F.lit(int(w)).cast("long") for w in qwords])
-    hamming = F.aggregate(
-        F.zip_with(
-            _bq_words_expr(vec_col, dim),
-            qarr,
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    hamming = _hamming_distance(_bq_words_expr(vec_col, dim), qarr)
     short = (
         vectors.withColumn("hamming", hamming)
         .select(id_col, "hamming")
@@ -1694,39 +1688,50 @@ def _rrf_fuse(
     rrf_k: int,
     k: int,
     sem_carry: list[str] | None = None,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """Shared fusion tail: rank each branch (its own score order, id
     tiebreak), full-outer join on the doc id, sum 1/(rrf_k+rank) —
     absent-from-a-list = rank 0, contributing nothing. ``sem_carry``
     names semantic-branch columns (index-stored payload riding the
     hits) projected through the fusion — NULL on lexical-only rows,
-    the grouped hybrid's zero-extra-read label source."""
-    w_l = W.orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+    the grouped hybrid's zero-extra-read label source. ``by`` names
+    query-id columns both branches carry (the batch serve): ranks,
+    fusion and top-k then run per query."""
+    by = list(by or [])
+
+    def window(*order):
+        return (W.partitionBy(*by) if by else W).orderBy(*order)
+
+    w_l = window(F.col("bm25").desc(), F.col(id_col).asc())
     lex_r = lex.select(
+        *by,
         F.col(id_col),
         F.row_number().over(w_l).cast("long").alias("lex_rank"),
     )
-    w_s = W.orderBy(F.col("cosine_sim").desc(), F.col(vec_id_col).asc())
+    w_s = window(F.col("cosine_sim").desc(), F.col(vec_id_col).asc())
     sem_r = sem.select(
+        *by,
         F.col(vec_id_col).alias(id_col),
         F.row_number().over(w_s).cast("long").alias("sem_rank"),
         *[F.col(c) for c in (sem_carry or [])],
     )
-    fused = lex_r.join(sem_r, on=id_col, how="full_outer")
+    fused = lex_r.join(sem_r, on=[*by, id_col], how="full_outer")
     term = lambda c: F.coalesce(  # noqa: E731 - tiny local shape
         F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(c).cast("double")), F.lit(0.0)
     )
-    return (
-        fused.select(
-            F.col(id_col),
-            F.coalesce(F.col("lex_rank"), F.lit(0).cast("long")).alias("lex_rank"),
-            F.coalesce(F.col("sem_rank"), F.lit(0).cast("long")).alias("sem_rank"),
-            (term("lex_rank") + term("sem_rank")).alias("rrf_score"),
-            *[F.col(c) for c in (sem_carry or [])],
-        )
-        .orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
-        .limit(k)
+    out = fused.select(
+        *by,
+        F.col(id_col),
+        F.coalesce(F.col("lex_rank"), F.lit(0).cast("long")).alias("lex_rank"),
+        F.coalesce(F.col("sem_rank"), F.lit(0).cast("long")).alias("sem_rank"),
+        (term("lex_rank") + term("sem_rank")).alias("rrf_score"),
+        *[F.col(c) for c in (sem_carry or [])],
     )
+    order = [F.col("rrf_score").desc(), F.col(id_col).asc()]
+    if by:
+        return top_k_per_group(out, by, order, k)
+    return out.orderBy(*order).limit(k)
 
 
 def hybrid_rrf_search_indexed(
@@ -2053,9 +2058,8 @@ def hybrid_rrf_search_all(
     (tested under an exhaustive probe).
 
     Returns ``(q_id, doc_id, lex_rank, sem_rank, rrf_score)``, ``k``
-    rows per query, rank 0 = absent from that branch's top-``top_n``."""
-    from pyspark.sql import Window
-
+    rows per query, rank 0 = absent from that branch's top-``top_n``.
+    The fusion is the single-query `_rrf_fuse`, partitioned by query."""
     from . import ann_index
     from .text_index import text_index_search_all
 
@@ -2084,46 +2088,4 @@ def hybrid_rrf_search_all(
             else None
         ),
     )
-    w_l = Window.partitionBy("__q").orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
-    )
-    lex_r = (
-        lex.select(F.col(q_id_col).alias("__q"), F.col(id_col), F.col("bm25"))
-        .withColumn("lex_rank", F.row_number().over(w_l).cast("long"))
-        .select("__q", id_col, "lex_rank")
-    )
-    w_s = Window.partitionBy("__q").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    sem_r = (
-        sem.select(
-            F.col(q_id_col).alias("__q"), F.col("vec_id"), F.col("cosine_sim")
-        )
-        .withColumn("sem_rank", F.row_number().over(w_s).cast("long"))
-        .select("__q", F.col("vec_id").alias(id_col), "sem_rank")
-    )
-    fused = lex_r.join(sem_r, on=["__q", id_col], how="full_outer")
-    term = lambda c: F.coalesce(  # noqa: E731 - tiny local shape
-        F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(c).cast("double")), F.lit(0.0)
-    )
-    w_top = Window.partitionBy("__q").orderBy(
-        F.col("rrf_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        fused.select(
-            F.col("__q"),
-            F.col(id_col),
-            F.coalesce(F.col("lex_rank"), F.lit(0).cast("long")).alias("lex_rank"),
-            F.coalesce(F.col("sem_rank"), F.lit(0).cast("long")).alias("sem_rank"),
-            (term("lex_rank") + term("sem_rank")).alias("rrf_score"),
-        )
-        .withColumn("__rk", F.row_number().over(w_top))
-        .filter(F.col("__rk") <= k)
-        .select(
-            F.col("__q").alias(q_id_col),
-            F.col(id_col),
-            "lex_rank",
-            "sem_rank",
-            "rrf_score",
-        )
-    )
+    return _rrf_fuse(lex, sem, id_col, "vec_id", rrf_k, k, by=[q_id_col])

@@ -9,6 +9,8 @@ Python), so it runs at scan speed on 100 TB.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -969,23 +971,42 @@ def bm25_rank_hits(
     path (`bm25_search`) and the persisted inverted-index path
     (`text_index.text_index_search`) run the IDENTICAL IEEE expression
     tree — their scores are bit-equal by construction, not by luck."""
-    dfreq = hits.groupBy("__term").agg(F.count(F.lit(1)).alias("__df"))
+    return (
+        _bm25_scores(hits, corpus, k1, b, id_col)
+        .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+        .limit(top_k)
+    )
+
+
+def _bm25_scores(
+    hits: DataFrame,
+    corpus: DataFrame,
+    k1: float,
+    b: float,
+    id_col: str,
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """``(*by, id_col, bm25, n_terms_hit)``: one BM25 score per
+    ``(*by, doc)``, with per-term df counted per ``(*by, term)``. The
+    batch serve (`text_index.text_index_search_all`) passes its query
+    id as ``by``; each query's terms are distinct, so its df per
+    ``(query, term)`` is the term's df and its scores equal the
+    single-query serve's bit for bit."""
+    dfreq = hits.groupBy(*by, "__term").agg(F.count(F.lit(1)).alias("__df"))
     n_docs = F.col("__n_docs").cast("double")
     idf = (n_docs - F.col("__df") + F.lit(0.5)) / (F.col("__df") + F.lit(0.5))
     tf = F.col("__tf").cast("double")
     dl_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("__dl") / F.col("__avgdl"))
     term_score = idf * ((tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * dl_norm))
     return (
-        hits.join(F.broadcast(dfreq), on="__term")
+        hits.join(F.broadcast(dfreq), on=[*by, "__term"])
         .crossJoin(F.broadcast(corpus))
-        .select(F.col(id_col), term_score.alias("__s"))
-        .groupBy(id_col)
+        .select(*by, F.col(id_col), term_score.alias("__s"))
+        .groupBy(*by, id_col)
         .agg(
             F.sum(F.col("__s").cast("decimal(38,6)")).cast("double").alias("bm25"),
             F.count(F.lit(1)).alias("n_terms_hit"),
         )
-        .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
-        .limit(top_k)
     )
 
 

@@ -57,7 +57,8 @@ from ..functions.text import tokenize
 from . import segment_index as sx
 from . import txn
 from .localrel import local_df
-from .text import bm25_rank_hits
+from .text import _bm25_scores, bm25_rank_hits
+from .windows import top_k_per_group
 
 POSTINGS_COMPONENT = "postings"
 DOCLEN_COMPONENT = "doclen"
@@ -578,8 +579,8 @@ def text_index_compact(
     tokenization runs. After compaction every probe is back to the
     pruned build shape: |terms| bucket segments, zero delta files.
 
-    Mechanics: the doc-supersede fold (identical to the serving fold in
-    `_probed_rows` — base postings of any delta doc drop, the delta's
+    Mechanics: the doc-supersede fold (`_fold_postings`, the serving
+    fold itself — base postings of any delta doc drop, the delta's
     newest posting set per doc survives) materializes once, re-homed
     into per-bucket segments via one ``partitionBy`` write + renames
     (delta rows already carry ``term_bucket``, so no re-hash of terms);
@@ -600,7 +601,7 @@ def text_index_compact(
     if not tix0.get("delta_segments") and not tix0.get("dl_delta_segments"):
         return None  # nothing to fold (racing upserts re-checked inside)
 
-    def write(components, _cur_name, vname, _epoch):
+    def write(components, cur_name, vname, _epoch):
         tix = sx.block_of(TEXT, components)
         if not tix.get("bucket_segments") and components[POSTINGS_COMPONENT].get(
             "segments"
@@ -614,65 +615,7 @@ def text_index_compact(
         base_rows = sx.segment_rows(
             spark, root, [bucket_map[k] for k in sorted(bucket_map, key=int)]
         )
-        delta_segs = list(tix.get("delta_segments", []))
-        dl_delta_segs = list(tix.get("dl_delta_segments", []))
-        folded = base_rows
-        if delta_segs or dl_delta_segs:
-            delta_rows = sx.segment_rows(spark, root, delta_segs)
-            if dl_delta_segs and not all(
-                os.path.isdir(txn.segment_path(root, s)) for s in dl_delta_segs
-            ):
-                # degraded state: a generic doclen compaction folded the
-                # dl deltas and GC removed their files while the tix
-                # block still names them (serving handles this at
-                # O(docs) per probe — see _probed_rows). Compaction is
-                # the RESTORE tool for exactly this state, so fold from
-                # the same source of truth: keep each posting row iff
-                # its epoch equals the doc's doclen-latest epoch, then
-                # re-home — no rebuild, and probes get pruning back.
-                latest_dl = txn.read_version(
-                    spark, root, subdir=DOCLEN_COMPONENT
-                ).select("doc_id", F.col("tix_epoch").alias("__keep"))
-                cand = base_rows
-                if delta_rows is not None:
-                    cand = (
-                        cand.unionByName(delta_rows, allowMissingColumns=True)
-                        if cand is not None
-                        else delta_rows
-                    )
-                folded = (
-                    cand.join(latest_dl, on="doc_id")
-                    .filter(F.col("tix_epoch") == F.col("__keep"))
-                    .drop("__keep")
-                )
-                return _compact_rehome(spark, root, vname, components, tix, folded)
-            key_src = (
-                sx.segment_rows(spark, root, dl_delta_segs)
-                if dl_delta_segs
-                else delta_rows
-            )
-            latest_key = key_src.groupBy("doc_id").agg(
-                F.max(_SEQ).alias("__keep")
-            )
-            delta_latest = (
-                delta_rows.join(F.broadcast(latest_key), on="doc_id")
-                .filter(F.col(_SEQ) == F.col("__keep"))
-                .drop("__keep")
-                if delta_rows is not None
-                else None
-            )
-            if base_rows is not None:
-                folded = base_rows.join(
-                    F.broadcast(latest_key.select("doc_id")),
-                    on="doc_id",
-                    how="left_anti",
-                )
-                if delta_latest is not None:
-                    folded = folded.unionByName(
-                        delta_latest, allowMissingColumns=True
-                    )
-            else:
-                folded = delta_latest
+        folded = _fold_postings(spark, root, cur_name, base_rows, tix)
         if folded is None:
             raise FileNotFoundError(
                 f"index under {root!r} has no posting segments to compact"
@@ -680,6 +623,80 @@ def text_index_compact(
         return _compact_rehome(spark, root, vname, components, tix, folded)
 
     return sx.commit(TEXT, root, write, keep_last, "text_index_compact")
+
+
+def _fold_postings(
+    spark: SparkSession, root: str, version: str, base_rows, tix: dict
+):
+    """The doc-supersede fold shared by serving (`_probed_rows`) and
+    `text_index_compact`: ``base_rows`` (base posting segments, or None)
+    ∪ the delta tail named in ``tix``, where a delta doc's newest
+    postings REPLACE its base postings entirely (terms may have left
+    the doc). Rows keep their ``_SEQ``; None when there are no rows.
+
+    The per-doc supersede key is the DOCLEN delta tail: every writer
+    that appends a posting delta appends a doclen delta too
+    (`text_index_upsert`), and the doclen delta also carries a doc
+    whose new content is all stop terms (zero delta postings) and a
+    deleted doc's tombstone. Its max epoch per doc keeps only the
+    newest posting set when one doc was upserted twice.
+
+    Degraded state: a generic compaction of the DOCLEN component
+    rewrote its read list and GC took the delta files ``tix`` still
+    names. Then each posting row is kept iff its epoch equals the
+    doc's latest epoch in the folded doclen at ``version`` — O(docs)
+    instead of the O(changes) keyset; `text_index_compact` restores
+    the pruned shape. ``version`` is the manifest ``tix`` came from, so
+    every input is a function of that one pinned version (the serving
+    plan memo relies on it)."""
+    delta_segs = list(tix.get("delta_segments", []))
+    dl_delta_segs = list(tix.get("dl_delta_segments", []))
+    if not dl_delta_segs:
+        if delta_segs:
+            raise ValueError(
+                f"index under {root!r} names posting deltas without a "
+                "doclen delta tail; run build_text_index to rebuild it"
+            )
+        return base_rows
+    delta_rows = sx.segment_rows(spark, root, delta_segs)
+    if not all(os.path.isdir(txn.segment_path(root, s)) for s in dl_delta_segs):
+        latest_dl = txn.read_version(
+            spark, root, version=version, subdir=DOCLEN_COMPONENT
+        ).select("doc_id", F.col("tix_epoch").alias("__keep"))
+        cand = base_rows
+        if delta_rows is not None:
+            cand = (
+                cand.unionByName(delta_rows, allowMissingColumns=True)
+                if cand is not None
+                else delta_rows
+            )
+        if cand is None:
+            return None
+        return (
+            cand.join(latest_dl, on="doc_id")
+            .filter(F.col("tix_epoch") == F.col("__keep"))
+            .drop("__keep")
+        )
+    latest_key = (
+        sx.segment_rows(spark, root, dl_delta_segs)
+        .groupBy("doc_id")
+        .agg(F.max(_SEQ).alias("__keep"))
+    )
+    delta_latest = (
+        delta_rows.join(F.broadcast(latest_key), on="doc_id")
+        .filter(F.col(_SEQ) == F.col("__keep"))
+        .drop("__keep")
+        if delta_rows is not None
+        else None
+    )
+    if base_rows is None:
+        return delta_latest
+    survivors = base_rows.join(
+        F.broadcast(latest_key.select("doc_id")), on="doc_id", how="left_anti"
+    )
+    if delta_latest is None:
+        return survivors
+    return survivors.unionByName(delta_latest, allowMissingColumns=True)
 
 
 def _compact_rehome(spark, root, vname, components, tix, folded) -> dict:
@@ -797,19 +814,7 @@ def text_index_search(
             payload_filter=payload_filter,
             version=version,
         )
-        n_docs, sum_dl = _corpus_stats(spark, root, tix, version=version)
-        # metadata-only corpus stats; the division is the same long/long
-        # double division the scan path computes. Built over a one-row
-        # LocalRelation so the broadcast side of the scoring crossJoin is
-        # collected driver-side — zero extra stages per serve (round 12;
-        # spark.range(1) was a 1-task RDD stage in every BM25 serve).
-        corpus_ = txn.literal_local_relation(spark).select(
-            F.lit(n_docs).cast("long").alias("__n_docs"),
-            (F.lit(sum_dl).cast("long") / F.lit(n_docs).cast("long")).alias(
-                "__avgdl"
-            ),
-        )
-        return hits_, corpus_
+        return hits_, _corpus_relation(spark, root, tix, version)
 
     if allowed_ids is None and (
         payload_filter is None or isinstance(payload_filter, str)
@@ -911,14 +916,18 @@ def text_index_current_version(root: str) -> str:
     return sx.pin(root)
 
 
-def _corpus_stats(
-    spark: SparkSession, root: str, tix: dict, version: str | None = None
-) -> tuple[int, int]:
-    """Exact ``(n_docs, sum_dl)`` for scoring: metadata-only from the
-    ``tix`` block in the normal case; when the block is gone (a generic
-    component rewrite rebuilt the dict) recompute from the doclen
-    component instead of silently scoring NULL (round-8 ADVICE). A
-    genuinely empty corpus raises — avgdl is undefined."""
+def _corpus_relation(spark: SparkSession, root: str, tix: dict, version: str):
+    """The one-row ``(__n_docs, __avgdl)`` relation BM25 scoring
+    cross-joins. ``(n_docs, sum_dl)`` are exact and metadata-only from
+    the ``tix`` block in the normal case; when the block is gone (a
+    generic component rewrite rebuilt the dict) they are recomputed
+    from the doclen component instead of silently scoring NULL
+    (round-8 ADVICE). A genuinely empty corpus raises — avgdl is
+    undefined. The division is the same long/long double division the
+    scan path computes. Built over a one-row LocalRelation so the
+    broadcast side of the scoring crossJoin is collected driver-side —
+    zero extra stages per serve (round 12; spark.range(1) was a 1-task
+    RDD stage in every BM25 serve)."""
     n_docs = int(tix.get("n_docs", 0))
     sum_dl = int(tix.get("sum_dl", 0))
     if n_docs == 0:
@@ -935,7 +944,12 @@ def _corpus_stats(
             "stats (avgdl) are undefined — build the index over a "
             "non-empty corpus"
         )
-    return n_docs, sum_dl
+    return txn.literal_local_relation(spark).select(
+        F.lit(n_docs).cast("long").alias("__n_docs"),
+        (F.lit(sum_dl).cast("long") / F.lit(n_docs).cast("long")).alias(
+            "__avgdl"
+        ),
+    )
 
 
 def _probed_rows(
@@ -978,102 +992,28 @@ def _probed_rows_build(
     bucket_map = tix.get("bucket_segments", {})
     probe = sorted({_bucket_py(t, n_buckets) for t in terms})
     probe_segs = [bucket_map[str(p)] for p in probe if str(p) in bucket_map]
-    delta_segs = list(tix.get("delta_segments", []))
-    dl_delta_segs = list(tix.get("dl_delta_segments", []))
 
     if not comp.get("segments"):
         raise FileNotFoundError(f"index under {root!r} has no segments")
-    if not probe_segs and not delta_segs and not dl_delta_segs:
-        if bucket_map:
-            # bucket map INTACT, probed buckets simply hold no base
-            # segment (every query term is corpus-absent) and there is
-            # no delta tail: the terms provably have no postings —
-            # empty result, zero files listed (round-8 ADVICE: the old
-            # fallback scanned ALL segments here, defeating pruning)
-            schema = ", ".join(
-                f"{n} {t}" for n, t in (comp.get("schema") or [])
-            ) or "term string, doc_id bigint, tf bigint, dl int, tix_epoch bigint"
-            return local_df(spark, [], schema), tix
+    rows = None
+    if probe_segs or tix.get("delta_segments") or tix.get("dl_delta_segments"):
+        rows = _fold_postings(
+            spark, root, version, sx.segment_rows(spark, root, probe_segs), tix
+        )
+    elif not bucket_map:
         # posting-list map gone (a generic rewrite rebuilt the component
         # dict) and no delta tail: serve correctly, unpruned
-        rows = sx.segment_rows(spark, root, comp["segments"])
-    else:
-        base_rows = sx.segment_rows(spark, root, probe_segs)
-        if delta_segs or dl_delta_segs:
-            # doc-supersede fold: a delta doc's postings REPLACE its
-            # base postings entirely (terms may have left the doc).
-            # The authoritative per-doc supersede key is the DOCLEN
-            # delta tail — it carries every upserted doc, including one
-            # whose new content is all stop terms (zero delta postings)
-            # — and its max epoch per doc keeps only the newest posting
-            # set when one doc was upserted twice. Pre-dl-delta
-            # manifests fall back to the posting-delta doc set.
-            delta_rows = sx.segment_rows(spark, root, delta_segs)
-            if dl_delta_segs and not all(
-                os.path.isdir(txn.segment_path(root, s)) for s in dl_delta_segs
-            ):
-                # a generic compact of the DOCLEN component rewrote its
-                # read list and GC took the delta files this tix block
-                # still names — serve CORRECTLY from the folded doclen:
-                # keep each posting row iff its epoch equals the doc's
-                # doclen-latest epoch (O(docs) join instead of the
-                # O(changes) keyset — the same graceful degradation as
-                # the ann_index post-compaction path; rebuild to restore
-                # the pruned shape). Pinned to the SAME version as the
-                # posting rows (round 13): resolving CURRENT here could
-                # mix vintages under a concurrent commit, and the
-                # (version, terms)-keyed plan memo requires every input
-                # to be a function of the pinned manifest.
-                latest_dl = txn.read_version(
-                    spark, root, version=version, subdir=DOCLEN_COMPONENT
-                ).select("doc_id", F.col("tix_epoch").alias("__keep"))
-                cand = base_rows
-                if delta_rows is not None:
-                    cand = (
-                        cand.unionByName(delta_rows, allowMissingColumns=True)
-                        if cand is not None
-                        else delta_rows
-                    )
-                return (
-                    cand.join(latest_dl, on="doc_id")
-                    .filter(F.col("tix_epoch") == F.col("__keep"))
-                    .drop("__keep", _SEQ)
-                ), tix
-            key_src = (
-                sx.segment_rows(spark, root, dl_delta_segs)
-                if dl_delta_segs
-                else delta_rows
-            )
-            latest_key = key_src.groupBy("doc_id").agg(
-                F.max(_SEQ).alias("__keep")
-            )
-            delta_latest = (
-                delta_rows.join(F.broadcast(latest_key), on="doc_id")
-                .filter(F.col(_SEQ) == F.col("__keep"))
-                .drop("__keep", _SEQ)
-                if delta_rows is not None
-                else None
-            )
-            if base_rows is not None:
-                survivors = base_rows.join(
-                    F.broadcast(latest_key.select("doc_id")),
-                    on="doc_id",
-                    how="left_anti",
-                ).drop(_SEQ)
-                rows = (
-                    survivors.unionByName(delta_latest, allowMissingColumns=True)
-                    if delta_latest is not None
-                    else survivors
-                )
-            else:
-                if delta_latest is None:
-                    raise FileNotFoundError(
-                        f"index under {root!r} has no posting segments to probe"
-                    )
-                rows = delta_latest
-        else:
-            rows = base_rows.drop(_SEQ)
-    return rows, tix
+        return sx.segment_rows(spark, root, comp["segments"]), tix
+    if rows is None:
+        # no probed bucket holds a base segment (every query term is
+        # corpus-absent) and no delta adds postings: the terms provably
+        # have no postings — empty result, zero files listed (round-8
+        # ADVICE: the old fallback scanned ALL segments here)
+        schema = ", ".join(
+            f"{n} {t}" for n, t in (comp.get("schema") or [])
+        ) or "term string, doc_id bigint, tf bigint, dl int, tix_epoch bigint"
+        return local_df(spark, [], schema), tix
+    return rows.drop(_SEQ), tix
 
 
 def text_index_search_all(
@@ -1098,20 +1038,19 @@ def text_index_search_all(
 
     Shape: the batch's distinct terms are collected (bounded by the
     query batch, the same contract as the ANN batch's probe-list
-    collect) to pick probe buckets driver-side; the probed rows fold
-    once (shared with the single-query path), per-term df and the
-    metadata corpus stats attach once, and each query joins its terms
-    to the postings — per-(q, doc) scores run the SAME expression tree
-    as `text.bm25_rank_hits`, so every query's rows are bit-equal to
-    its single-query serve (tested). Two q_id windows do the ranking;
-    skew note: the join key is the term — a hot term fans out to its
-    queries, which AQE's skew split handles, and the query side is
-    |Q|·|terms| rows, broadcast when small.
+    collect) to pick probe buckets driver-side; the probed hits
+    (`_search_hits`, the single-query path's own) fold once, and each
+    query joins its terms to them. Scoring is the single-query path's
+    `text._bm25_scores` grouped by query id, and
+    `windows.top_k_per_group` ranks each query, so every query's rows
+    are bit-equal to its single-query serve (tested). Skew note: the
+    join key is the term — a hot term fans out to its queries, which
+    AQE's skew split handles, and the query side is |Q|·|terms| rows,
+    broadcast when small. CURRENT resolves once for the whole batch.
 
     Returns ``(q_id, doc_id, bm25, n_terms_hit)``, ``top_k`` rows per
     query with the (bm25 desc, id asc) tie-break."""
-    from pyspark.sql import Window
-
+    version = sx.pin(root, version)
     qterms = queries.select(
         F.col(q_id_col).alias("__qid"),
         F.explode(F.array_distinct(F.col(terms_col))).alias("__term"),
@@ -1127,62 +1066,20 @@ def text_index_search_all(
             f"{q_id_col} {q_type}, {id_col} bigint, bm25 double, "
             "n_terms_hit bigint",
         )
-    rows, tix = _probed_rows(spark, root, terms, version=version)
-    hits = rows.filter(F.col("term").isin(terms)).select(
-        F.col("doc_id"),
-        F.col("dl").cast("int").alias("dl"),
-        F.col("term"),
-        F.col("tf"),
+    hits, tix = _search_hits(
+        spark, root, terms, id_col=id_col, allowed_ids=allowed_ids,
+        payload_filter=payload_filter, version=version,
     )
-    # resolved once for the whole batch, then the same semi-join path
-    # as allowed_ids
-    allowed_ids = _allowed_by_payload(
-        spark, root, version, id_col, allowed_ids, payload_filter
+    # the scorer references its hits twice (per-term df + score join):
+    # cut the lineage once so the probed fold is scanned once per batch
+    qhits = hits.join(qterms, on="__term").localCheckpoint(eager=False)
+    scored = _bm25_scores(
+        qhits, _corpus_relation(spark, root, tix, version), k1, b, id_col,
+        by=["__qid"],
     )
-    if allowed_ids is not None:
-        # same pre-ranking semi-join semantics as the single-query path
-        # (one shared filter for the whole batch): df over the filtered
-        # universe, top-k of the filtered set
-        hits = hits.join(
-            allowed_ids.select(F.col(id_col).alias("doc_id")).distinct(),
-            on="doc_id",
-            how="leftsemi",
-        )
-    # same double-reference shape as the single-query path: cut the
-    # lineage once so the probed fold is scanned once per batch, not
-    # once for df and again for the score join
-    hits = hits.localCheckpoint(eager=False)
-    dfreq = hits.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
-    n_docs, sum_dl = _corpus_stats(spark, root, tix, version=version)
-    n_docs_d = F.lit(n_docs).cast("long").cast("double")
-    avgdl = F.lit(sum_dl).cast("long") / F.lit(n_docs).cast("long")
-    idf = (n_docs_d - F.col("__df") + F.lit(0.5)) / (F.col("__df") + F.lit(0.5))
-    tf = F.col("tf").cast("double")
-    dl_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl") / avgdl)
-    term_score = idf * ((tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * dl_norm))
-    scored = (
-        hits.join(F.broadcast(dfreq), on="term")
-        .join(qterms, hits.term == qterms["__term"])
-        .select(F.col("__qid"), F.col("doc_id"), term_score.alias("__s"))
-        .groupBy("__qid", "doc_id")
-        .agg(
-            F.sum(F.col("__s").cast("decimal(38,6)")).cast("double").alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("bm25").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= top_k)
-        .select(
-            F.col("__qid").alias(q_id_col),
-            F.col("doc_id").alias(id_col),
-            "bm25",
-            "n_terms_hit",
-        )
-    )
+    return top_k_per_group(
+        scored, ["__qid"], [F.col("bm25").desc(), F.col(id_col).asc()], top_k
+    ).select(F.col("__qid").alias(q_id_col), id_col, "bm25", "n_terms_hit")
 
 
 def _doclen_with_payload(

@@ -205,47 +205,6 @@ def test_grouped_topk_qdrant_semantics(spark, built):
         assert rins == list(range(1, len(rins) + 1)) and len(rins) <= 2
 
 
-def test_batch_recommend_matches_single_user_path(spark, built):
-    root, base = built
-    rows = [
-        ("alice", 7, True), ("alice", 11, True), ("alice", 13, True),
-        ("alice", 5, False),
-        ("bob", 4, True), ("bob", 8, True),
-    ]
-    ex = spark.createDataFrame(
-        rows, "user_id string, vec_id long, is_positive boolean"
-    )
-    # exhaustive shortlist: both paths reduce to exact cosine ranking,
-    # so the only cross-path difference left is float reassociation in
-    # the distributed average (last-bit scale)
-    got = ann_index.ann_index_recommend_all(
-        spark, root, ex, k=8, n_probe=16, shortlist=10_000
-    ).collect()
-    by_user = {}
-    for r in got:
-        by_user.setdefault(r["user_id"], []).append(r)
-
-    for user, pos, neg in [("alice", [7, 11, 13], [5]), ("bob", [4, 8], [])]:
-        want = ann_index.ann_index_recommend(
-            spark, root, positive_ids=pos, negative_ids=neg or None,
-            k=8, n_probe=16, shortlist=10_000,
-        ).collect()
-        g = by_user[user]
-        assert [r["vec_id"] for r in g] == [r["vec_id"] for r in want]
-        for a, b in zip(g, want):
-            assert abs(a["cosine_sim"] - b["cosine_sim"]) < 1e-6
-        assert {r["vec_id"] for r in g}.isdisjoint(pos + neg)
-
-
-def test_batch_recommend_rejects_negative_only_user(spark, built):
-    root, _ = built
-    ex = spark.createDataFrame(
-        [("carol", 5, False)], "user_id string, vec_id long, is_positive boolean"
-    )
-    with pytest.raises(ValueError):
-        ann_index.ann_index_recommend_all(spark, root, ex, k=3)
-
-
 def test_alias_blue_green_reindex(spark, tmp_path):
     """Qdrant update-collection-aliases flow: serve via an alias, build
     a replacement index, repoint atomically — readers see old or new,
@@ -504,54 +463,6 @@ def test_list_segments_are_id_sorted_for_keyset_pruning(spark, built):
     ann_index.ann_index_upsert(spark, base.limit(20), scratch)
     ann_index.ann_index_compact(spark, scratch)
     assert_sorted(scratch)
-
-
-def test_batch_recommend_raises_on_missing_example_ids(spark, built):
-    """Round-10 ADVICE: an example id that is tombstoned or was never
-    upserted must raise KeyError (the single-user path's
-    ann_index_fetch_vectors 404 semantics) — silently dropping it
-    skews the average, and an all-missing user would silently vanish
-    from the batch output."""
-    root, _ = built
-    ex = spark.createDataFrame(
-        [("dave", 7, True), ("dave", 999_999, True)],
-        "user_id string, vec_id long, is_positive boolean",
-    )
-    with pytest.raises(KeyError, match="999999"):
-        ann_index.ann_index_recommend_all(spark, root, ex, k=3)
-
-
-def test_batch_recommend_matches_single_user_at_default_shortlist(spark, built):
-    """Round-11 (r10 verdict item 6): the batch recommend now defaults
-    to the SAME PQ-ADC shortlist surrogate as the single-user path —
-    the two agree at the DEFAULT shortlist/probes, not only under the
-    exhaustive settings the older parity test used (the remaining
-    divergence is last-bit float reassociation in the distributed
-    average, which the deterministic fixture never amplifies across
-    an integer ADC boundary)."""
-    root, _base = built
-    rows = [
-        ("alice", 7, True), ("alice", 11, True), ("alice", 13, True),
-        ("alice", 5, False),
-        ("bob", 4, True), ("bob", 8, True),
-    ]
-    ex = spark.createDataFrame(
-        rows, "user_id string, vec_id long, is_positive boolean"
-    )
-    got = ann_index.ann_index_recommend_all(spark, root, ex, k=8).collect()
-    assert got and "adc_micro" in got[0].asDict()
-    by_user = {}
-    for r in got:
-        by_user.setdefault(r["user_id"], []).append(r)
-    for user, pos, neg in [("alice", [7, 11, 13], [5]), ("bob", [4, 8], [])]:
-        want = ann_index.ann_index_recommend(
-            spark, root, positive_ids=pos, negative_ids=neg or None, k=8
-        ).collect()
-        assert [r["vec_id"] for r in by_user[user]] == [
-            r["vec_id"] for r in want
-        ]
-        for a, b in zip(by_user[user], want):
-            assert abs(a["cosine_sim"] - b["cosine_sim"]) < 1e-6
 
 
 def test_batch_pq_codec_matches_single_query_serve(spark, built):

@@ -361,32 +361,11 @@ def test_collection_streaming_upkeep_advances_pins_and_compacts(spark, tmp_path)
         assert d["n_delta_segments"] == 0, (space, d)
 
 
-def test_collection_search_all_and_recommend_serve_at_pins(spark, coll):
-    """Round-12 surface completion: the batch probe and the recommend
-    composition are reachable from the collection (served at the
-    published pin pair) and agree with their per-space primitives."""
-    root, pts = coll
-    q32 = _q(spark, 32)
-    qdf = spark.createDataFrame(
-        [("qa", q32), ("qb", [float(x) for x in reversed(q32)])],
-        "q_id string, embedding array<double>",
-    )
-    batch = collection.collection_search_all(
-        spark, root, "image", qdf, k=5, n_probe=16, shortlist=10_000
-    ).collect()
-    single = collection.collection_search(
-        spark, root, "image", q32, k=5, n_probe=16, shortlist=10_000
-    ).collect()
-    got_a = [
-        r["vec_id"]
-        for r in sorted(
-            (r for r in batch if r["q_id"] == "qa"),
-            key=lambda r: (-r["cosine_sim"], r["vec_id"]),
-        )
-    ]
-    assert got_a == [r["vec_id"] for r in single]
-    assert len([r for r in batch if r["q_id"] == "qb"]) == 5
-
+def test_collection_recommend_serves_at_pin(spark, coll):
+    """The recommend composition is reachable from the collection,
+    served at the published pin, and agrees with its per-space
+    primitive at that pin."""
+    root, _pts = coll
     pins = collection.collection_pins(root)
     rec = collection.collection_recommend(
         spark, root, "combined", [11, 21], negative_ids=[31],
@@ -399,17 +378,6 @@ def test_collection_search_all_and_recommend_serve_at_pins(spark, coll):
     ).collect()
     assert [r["vec_id"] for r in rec] == [r["vec_id"] for r in want]
     assert not {11, 21, 31} & {r["vec_id"] for r in rec}
-
-    ex = spark.createDataFrame(
-        [("u1", 11, True), ("u1", 21, True), ("u2", 41, True)],
-        "user_id string, vec_id long, is_positive boolean",
-    )
-    ball = collection.collection_recommend_all(
-        spark, root, "combined", ex, k=3, n_probe=16, shortlist=10_000
-    ).collect()
-    assert {r["user_id"] for r in ball} == {"u1", "u2"}
-    assert all(len([r for r in ball if r["user_id"] == u]) == 3
-               for u in ("u1", "u2"))
 
 
 def test_collection_hybrid_page_fuses_named_spaces(spark, coll):

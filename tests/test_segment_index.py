@@ -122,3 +122,34 @@ def test_ann_retrieve_pins_version_before_payload_cols(spark, tmp_path, monkeypa
         (1, "label1"),
         (2, "label0"),
     ]
+
+
+def test_ann_dedup_purge_detects_at_one_version(spark, tmp_path, monkeypatch):
+    """The purge's candidate read and its batch self-serve see one
+    version: a rebuild committing right after the purge resolves
+    CURRENT must not pair one version's candidates with the next
+    version's index."""
+    rnd = random.Random(13)
+    base = {i: [rnd.uniform(-1, 1) for _ in range(8)] for i in range(40)}
+
+    def vecs(rows: dict):
+        return spark.createDataFrame(
+            sorted(rows.items()), "vec_id long, embedding array<double>"
+        )
+
+    # v1: ids 100 and 101 copy ids 1 and 2; v2: ids 1 and 2 move away
+    root = str(tmp_path / "ann")
+    ann_index.build_ann_index(
+        spark, vecs({**base, 100: base[1], 101: base[2]}), root, n_lists=4, m=4
+    )
+    v1 = os.path.basename(txn.current_version_dir(root))
+    moved = {i: [rnd.uniform(-1, 1) for _ in range(8)] for i in (1, 2)}
+    ann_index.build_ann_index(
+        spark, vecs({**base, **moved, 100: base[1], 101: base[2]}), root,
+        n_lists=4, m=4,
+    )
+    _racing_current(monkeypatch, v1)
+    losers = ann_index.ann_index_dedup_purge(
+        spark, root, threshold=0.999999, n_probe=4, shortlist=10_000, top_n=5
+    )
+    assert sorted(r["vec_id"] for r in losers.collect()) == [100, 101]

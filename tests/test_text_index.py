@@ -451,6 +451,11 @@ def test_corpus_absent_terms_probe_zero_files(spark, tmp_path, monkeypatch):
     assert not any(
         any("/tix" in x for x in paths) for paths in seen
     ), "corpus-absent term listed index segments"
+    # a delete-only tail (doclen tombstones, no posting delta) adds no
+    # postings either: still an empty answer, not an error
+    text_index.text_index_delete(spark, [2], root)
+    out = text_index.text_index_search(spark, root, [probe_term], top_k=5)
+    assert out.count() == 0
 
 
 def test_null_and_empty_text_docs_keep_stats_and_parity(spark, tmp_path):
