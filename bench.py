@@ -163,14 +163,12 @@ def _docs_tokenized(spark, sf_dir):
 def _minhash_lsh_dedup_xxh(spark, sf_dir):
     """minhash_lsh_dedup with the production xxhash64 family
     (operators/dedup.py default) — identical stages, JVM-side hashing."""
-    from pyspark.sql import functions as F
-
     from cultural_heritage_bigdata_project_spark.operators import dedup
-
-    docs = _docs_tokenized(spark, sf_dir)
-    docs = docs.filter(F.size("t") >= 3).select(
-        "doc_id", dedup.shingles_expr("t", 3).alias("sh")
+    from cultural_heritage_bigdata_project_spark.plans.queries_text import (
+        _docs_parallel,
     )
+
+    docs = dedup.shingled_docs(_docs_parallel(spark, sf_dir))
     return dedup.minhash_lsh_pairs(
         docs,
         "doc_id",

@@ -1,11 +1,10 @@
-from .vectors import cosine_similarity, dot_product, l2_norm, normalize
+from .vectors import cosine_sql, dot_product, l2_norm
 from .text import tokenize, token_count_regex, stopword_ratio, fingerprint_prefix
 
 __all__ = [
-    "cosine_similarity",
+    "cosine_sql",
     "dot_product",
     "l2_norm",
-    "normalize",
     "tokenize",
     "token_count_regex",
     "stopword_ratio",

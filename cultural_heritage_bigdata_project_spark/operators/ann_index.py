@@ -42,16 +42,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import _hamming_distance, cosine_similarity
+from ..functions.vectors import cosine_sql, hamming_sql, isin_sql, query_cosine
 from . import segment_index as sx
 from . import txn
 from .localrel import local_df
 from .similarity import (
     _deterministic_centroids,
-    cosine_similarity_qnorm,
     pq_adc_shortlist,
     pq_codebook,
-    py_l2_norm,
 )
 from .windows import top_k_per_group
 
@@ -87,7 +85,7 @@ def _encode_pass(
     nearest-centroid list assignment (squared L2, ties → lowest list),
     the m PQ codes (on the L2-normalized vector, as pq_encode), AND the
     packed BQ sign-bit words (63 per long, first-element-most-
-    significant — bit-identical to ``similarity._bq_words_expr``) —
+    significant — bit-identical to ``similarity._bq_words_sql``) —
     the vectors are streamed through a single mapInPandas GEMM instead
     of the three passes the per-query operators run. Also emits
     ``__qd``: the exact squared L2 distance to the assigned centroid
@@ -682,12 +680,12 @@ def _probed_filtered(
     latest = _probed_latest(
         spark, root, comp, ann, probe_ids, id_col, version=version
     )
-    probed = latest.filter(F.col("ann_list").isin(probe_ids))
+    probed = latest.filter(isin_sql("ann_list", probe_ids))
     if exclude_ids:
         # small literal NOT IN (recommend's example exclusion) —
         # a pushed-down filter, never a join
         probed = probed.filter(
-            ~F.col(id_col).isin([int(i) for i in exclude_ids])
+            f"NOT ({isin_sql(id_col, [int(i) for i in exclude_ids])})"
         )
     if payload_filter is not None:
         # predicate over STORED payload columns (build_ann_index
@@ -822,21 +820,24 @@ def _shortlist_rerank(
     ``payload_out`` columns project through from the probed rows."""
     if allowed_ids is not None:
         probed = probed.join(
-            allowed_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
+            allowed_ids.select(id_col), on=id_col, how="leftsemi"
         )
     # probed is referenced twice below — once under the shortlist
     # (codes columns) and once as the re-rank join stream (embedding
     # column) — and the two legs share no exchange, so without a
     # lineage cut the whole probed fold subtree executed twice per
     # serve (plan-verified: base∪delta appeared once with
-    # ReadSchema=codes and again with ReadSchema=embedding). The lazy
-    # local checkpoint materializes the probed rows once — bounded by
-    # the probed lists + delta tail, the set the serve must read
-    # anyway — and both legs reuse it.
+    # ReadSchema=codes and again with ReadSchema=embedding). The local
+    # checkpoint materializes the probed rows once — bounded by the
+    # probed lists + delta tail, the set the serve must read anyway —
+    # and both legs reuse it. eager=False defers the row scan to the
+    # action, but not the exchanges: under AQE the call itself runs
+    # every exchange beneath it (an ``allowed_ids`` semi-join's
+    # broadcast is one job), so those jobs count as construction time.
     probed = probed.localCheckpoint(eager=False)
     if codec == "pq":
         short = pq_adc_shortlist(
-            probed.select(id_col, *[f"c{j}" for j in range(m)]),
+            probed.selectExpr(id_col, *[f"c{j}" for j in range(m)]),
             codebook,
             query,
             m=m,
@@ -845,7 +846,7 @@ def _shortlist_rerank(
         )
         surrogate = "adc_micro"
     elif codec == "bq":
-        from .similarity import _bq_query_words
+        from .similarity import _bq_query_words, bq_words_literal
 
         if "bq_words" not in probed.columns:
             raise ValueError(
@@ -853,27 +854,24 @@ def _shortlist_rerank(
                 "rebuild with build_ann_index"
             )
         qwords = _bq_query_words([float(x) for x in query])
-        qarr = F.array(*[F.lit(int(w)).cast("long") for w in qwords])
-        hamming = _hamming_distance(F.col("bq_words"), qarr)
+        hamming = hamming_sql("bq_words", bq_words_literal(qwords))
         short = (
-            probed.withColumn("hamming", hamming)
-            .select(id_col, "hamming")
-            .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
+            probed.selectExpr(id_col, f"{hamming} AS hamming")
+            .orderBy(F.asc("hamming"), F.asc(id_col))
             .limit(shortlist)
         )
         surrogate = "hamming"
     else:
         raise ValueError(f"unknown codec {codec!r}: expected 'pq' or 'bq'")
-    qlit = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-    sim = F.round(
-        cosine_similarity_qnorm(F.col(vec_col), qlit, py_l2_norm(query)), 6
-    )
-    out_cols = [F.col(id_col), F.col(surrogate), sim.alias("cosine_sim")]
-    out_cols += [F.col(c) for c in (payload_out or [])]
     return (
         probed.join(short, on=id_col)
-        .select(*out_cols)
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .selectExpr(
+            id_col,
+            surrogate,
+            f"{query_cosine(vec_col, query)} AS cosine_sim",
+            *(payload_out or []),
+        )
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -1039,7 +1037,7 @@ def ann_index_top_k_all(
     from .similarity import (
         _assign_probe_lists,
         _assign_probe_lists_adc,
-        _bq_words_expr,
+        _bq_words_sql,
     )
 
     if codec not in ("bq", "pq"):
@@ -1091,7 +1089,7 @@ def ann_index_top_k_all(
     code_cols = (
         ["bq_words"] if codec == "bq" else [f"c{j}" for j in range(m)]
     )
-    rows = latest.filter(F.col("ann_list").isin(probe_ids)).select(
+    rows = latest.filter(isin_sql("ann_list", probe_ids)).select(
         id_col, "ann_list", *code_cols, vec_col, *(payload_out or [])
     )
     if allowed_ids is not None:
@@ -1099,58 +1097,43 @@ def ann_index_top_k_all(
         # traversal semantics, as the single-query path): every query's
         # k fills from the filtered candidates
         rows = rows.join(
-            allowed_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
+            allowed_ids.select(id_col), on=id_col, how="leftsemi"
         )
+    qcols = [f"{q_id_col} AS __qid", f"CAST({q_vec_col} AS array<double>) AS __qv"]
     if codec == "bq":
-        qside = queries.select(
-            F.col(q_id_col).alias("__qid"),
-            F.col(q_vec_col).cast("array<double>").alias("__qv"),
-            _bq_words_expr(q_vec_col, dim).alias("__qwords"),
-        ).join(
-            assign.select(F.col(q_id_col).alias("__qid"), "__list"),
-            on="__qid",
-        )
+        qside = queries.selectExpr(
+            *qcols, f"{_bq_words_sql(q_vec_col, dim)} AS __qwords"
+        ).join(assign.selectExpr(f"{q_id_col} AS __qid", "__list"), on="__qid")
     else:
         # the per-query ADC table rides the assignment rows; __qv joins
         # back from the query frame for the exact re-rank
-        qside = queries.select(
-            F.col(q_id_col).alias("__qid"),
-            F.col(q_vec_col).cast("array<double>").alias("__qv"),
-        ).join(
-            assign.select(
-                F.col(q_id_col).alias("__qid"), "__list", "__adc"
-            ),
+        qside = queries.selectExpr(*qcols).join(
+            assign.selectExpr(f"{q_id_col} AS __qid", "__list", "__adc"),
             on="__qid",
         )
-    cand = rows.join(qside, rows.ann_list == qside["__list"])
+    cand = rows.join(qside, F.expr("ann_list = __list"))
     if codec == "bq":
-        score = _hamming_distance(F.col("bq_words"), F.col("__qwords"))
-        short_order = [F.col(surrogate).asc(), F.col(id_col).asc()]
+        score = hamming_sql("bq_words", "__qwords")
+        short_order = f"{surrogate} ASC, {id_col} ASC"
     else:
         # m element_at lookups into the riding ADC table — whole-stage
         # codegen, bit-identical to pq_adc_shortlist's LUT scoring
-        score = None
-        for j in range(m):
-            term = F.element_at(
-                F.col("__adc"), F.col(f"c{j}") + F.lit(j * n_codes) + 1
-            ).cast("long")
-            score = term if score is None else score + term
-        short_order = [F.col(surrogate).desc(), F.col(id_col).asc()]
+        score = " + ".join(
+            f"CAST(element_at(__adc, c{j} + {j * n_codes} + 1) AS BIGINT)"
+            for j in range(m)
+        )
+        short_order = f"{surrogate} DESC, {id_col} ASC"
     shortlisted = top_k_per_group(
-        cand.withColumn(surrogate, score), ["__qid"], short_order, shortlist
+        cand.withColumn(surrogate, F.expr(score)), ["__qid"], short_order, shortlist
     )
-    sim = F.round(cosine_similarity(F.col(vec_col), F.col("__qv")), 6)
+    sim = F.expr(f"round({cosine_sql(vec_col, '__qv')}, 6)")
     return top_k_per_group(
         shortlisted.withColumn("cosine_sim", sim),
         ["__qid"],
-        [F.col("cosine_sim").desc(), F.col(id_col).asc()],
+        f"cosine_sim DESC, {id_col} ASC",
         k,
-    ).select(
-        F.col("__qid").alias(q_id_col),
-        F.col(id_col),
-        surrogate,
-        "cosine_sim",
-        *[F.col(c) for c in (payload_out or [])],
+    ).selectExpr(
+        f"__qid AS {q_id_col}", id_col, surrogate, "cosine_sim", *(payload_out or [])
     )
 
 
@@ -1201,12 +1184,12 @@ def mmr_rerank_indexed(
     latest = _probed_latest(
         spark, root, comp, ann, probe_ids, id_col, version=version
     )
-    probed = latest.filter(F.col("ann_list").isin(probe_ids)).select(
+    probed = latest.filter(isin_sql("ann_list", probe_ids)).select(
         id_col, vec_col
     )
     if allowed_ids is not None:
         probed = probed.join(
-            allowed_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
+            allowed_ids.select(id_col), on=id_col, how="leftsemi"
         )
     return mmr_rerank(
         probed, query, k=k, lambda_=lambda_, top_n=top_n,
@@ -1385,7 +1368,7 @@ def _duplicate_ids(
     )
     if candidate_ids is not None:
         qs = qs.join(
-            candidate_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
+            candidate_ids.select(id_col), on=id_col, how="leftsemi"
         )
     res = ann_index_top_k_all(
         spark,
@@ -1478,7 +1461,7 @@ def ann_index_count(
     live = live.select(id_col)
     if allowed_ids is not None:
         live = live.join(
-            allowed_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
+            allowed_ids.select(id_col), on=id_col, how="leftsemi"
         )
     return live.agg(F.count(F.lit(1)).alias("n_points"))
 
@@ -1529,7 +1512,7 @@ def ann_index_scroll(
         live = live.filter(sx.predicate(payload_filter))
     if allowed_ids is not None:
         live = live.join(
-            allowed_ids.select(id_col).distinct(), on=id_col, how="leftsemi"
+            allowed_ids.select(id_col), on=id_col, how="leftsemi"
         )
     cols = [F.col(id_col), F.col("ann_list")]
     if with_payload:
@@ -1607,7 +1590,7 @@ def ann_index_fetch_vectors(
     want = sorted(int(i) for i in ids)
     rows = (
         ann_index_live(spark, root, id_col, version=version)
-        .filter(F.col(id_col).isin(want))
+        .filter(isin_sql(id_col, want))
         .select(id_col, vec_col)
         .collect()
     )

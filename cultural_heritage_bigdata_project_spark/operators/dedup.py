@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from ..functions.text import tokenize
 from .localrel import _unpersist_local_checkpoint, collect_or_checkpoint
 
 # ------------------------------------------------- portable hash family
@@ -72,6 +73,26 @@ def shingles_expr(token_col: str, n: int = 3) -> Column:
             f"transform(sequence(1, greatest(size({token_col}) - {n - 1}, 0)),"
             f" i -> concat_ws(' ', slice({token_col}, i, {n})))"
         )
+    )
+
+
+def shingled_docs(
+    docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """``(id_col, sh)``: the `shingles_expr` n-grams of every document
+    with at least ``n`` tokens (`functions.text.tokenize` of the
+    lower-cased text) — the MinHash and Jaccard callers' shared input.
+
+    The token array comes out of a one-element ``explode`` (a
+    Generate), because the optimizer cannot push the size filter below
+    a Generate: the split runs once per row. Under a plain projection
+    the filter would be pushed into the scan with the split inlined,
+    and the split would run twice per row."""
+    toks = docs.select(
+        id_col, F.explode(F.array(tokenize(F.lower(F.col(text_col))))).alias("t")
+    )
+    return toks.filter(F.size("t") >= n).select(
+        id_col, shingles_expr("t", n).alias("sh")
     )
 
 

@@ -23,12 +23,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..functions.vectors import (
-    _hamming_distance,
-    cosine_similarity,
-    cosine_similarity_qnorm,
+    array_literal,
+    cosine_sql,
     dot_product,
+    hamming_sql,
     l2_norm,
     py_l2_norm,
+    query_cosine,
+    sql_literal,
 )
 from .localrel import collect_or_checkpoint, local_df
 from .windows import top_k_per_group
@@ -43,7 +45,7 @@ THRESHOLD_JOIN_BLOCK_ROWS = 2048
 
 def knn_brute_force(
     vectors: DataFrame,
-    query_vec: Column,
+    query_vec,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -60,16 +62,20 @@ def knn_brute_force(
     ``query_norm``: the query's l2 norm when the caller knows the raw
     vector (``py_l2_norm``) — skips the per-ROW interpreted norm(q)
     aggregate (Catalyst does not constant-fold HOFs); bit-identical.
+    ``query_vec`` is a Python vector (bound as one DOUBLE array
+    literal) or an array Column; either way it is bound as one
+    projected column, so the cosine tree is one SQL string whatever
+    the query's dimension.
     """
-    if query_norm is not None:
-        sim = cosine_similarity_qnorm(F.col(vec_col), query_vec, query_norm)
-    else:
-        sim = cosine_similarity(F.col(vec_col), query_vec)
+    if not isinstance(query_vec, Column):
+        query_vec = F.expr(array_literal([float(x) for x in query_vec]))
+    sim = cosine_sql(vec_col, "__qv", query_norm)
     if round_digits is not None:
-        sim = F.round(sim, round_digits)
+        sim = f"round({sim}, {int(round_digits)})"
     return (
-        vectors.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        vectors.withColumn("__qv", query_vec)
+        .selectExpr(id_col, f"{sim} AS cosine_sim")
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -514,9 +520,8 @@ def _assign_probe_lists(
     # user ids through this path; point serving passes bigints)
     id_type = vectors.schema[id_col].dataType.simpleString()
     return (
-        vectors.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
+        vectors.selectExpr(
+            f"{id_col} AS __id", f"CAST({vec_col} AS array<double>) AS __v"
         )
         .mapInPandas(compute, f"__id {id_type}, __list int")
         .withColumnRenamed("__id", id_col)
@@ -586,9 +591,8 @@ def _assign_probe_lists_adc(
 
     id_type = vectors.schema[id_col].dataType.simpleString()
     return (
-        vectors.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
+        vectors.selectExpr(
+            f"{id_col} AS __id", f"CAST({vec_col} AS array<double>) AS __v"
         )
         .mapInPandas(compute, f"__id {id_type}, __list int, __adc array<long>")
         .withColumnRenamed("__id", id_col)
@@ -626,12 +630,11 @@ def ivf_deterministic_top_k(
 
     assigned = _assign_lists(vectors, centroids, id_col, vec_col)
     cand_ids = assigned.filter(F.col("__list").isin(probe_ids)).select(id_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-    sim = F.round(cosine_similarity_qnorm(F.col(vec_col), qlit, py_l2_norm(query)), 6)
+    sim = query_cosine(vec_col, query)
     return (
         vectors.join(cand_ids, on=id_col, how="leftsemi")
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .selectExpr(id_col, f"{sim} AS cosine_sim")
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -677,12 +680,11 @@ def ivf_ann_top_k(
 
     assigned = _assign_lists(vectors, centroids, id_col, vec_col)
     cand_ids = assigned.filter(F.col("__list").isin(probe_ids)).select(id_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-    sim = F.round(cosine_similarity_qnorm(F.col(vec_col), qlit, py_l2_norm(query)), 6)
+    sim = query_cosine(vec_col, query)
     return (
         vectors.join(cand_ids, on=id_col, how="leftsemi")
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .selectExpr(id_col, f"{sim} AS cosine_sim")
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -790,15 +792,15 @@ def precision_at_k(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         F.col(label_col).alias("q_label"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+        l2_norm(vec_col).alias("__qn"),
     )
     sim = F.round(
-        dot_product(F.col("q_vec"), F.col(vec_col))
+        dot_product("q_vec", vec_col)
         / (F.col("__qn") * F.col("__vn")),
         6,
     )
     scored = (
-        vectors.withColumn("__vn", l2_norm(F.col(vec_col)))
+        vectors.withColumn("__vn", l2_norm(vec_col))
         .join(F.broadcast(q), F.col(id_col) != F.col("q_id"))
         .select(
             "q_id",
@@ -903,7 +905,7 @@ def retrieval_metrics(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         F.col(label_col).alias("q_label"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+        l2_norm(vec_col).alias("__qn"),
     )
     # total relevant per label (bounded by |labels| — broadcasts)
     label_totals = vectors.groupBy(F.col(label_col).alias("q_label")).agg(
@@ -912,11 +914,11 @@ def retrieval_metrics(
     # per-side norm columns: see precision_at_k — bit-identical, one
     # interpreted norm per row instead of two per pair
     sim = F.round(
-        dot_product(F.col("q_vec"), F.col(vec_col))
+        dot_product("q_vec", vec_col)
         / (F.col("__qn") * F.col("__vn")),
         6,
     )
-    vecs_n = vectors.withColumn("__vn", l2_norm(F.col(vec_col)))
+    vecs_n = vectors.withColumn("__vn", l2_norm(vec_col))
     if n_lists is not None:
         cand = _ivf_candidate_pairs(vectors, q, n_lists, n_probe, id_col, vec_col)
         pool = vecs_n.join(cand, on=id_col).join(F.broadcast(q), on="q_id").filter(
@@ -1002,16 +1004,16 @@ def hard_negative_mining(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         F.col(label_col).alias("q_label"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+        l2_norm(vec_col).alias("__qn"),
     )
     # per-side norm columns: see precision_at_k — bit-identical, one
     # interpreted norm per row instead of two per pair
     sim = F.round(
-        dot_product(F.col("q_vec"), F.col(vec_col))
+        dot_product("q_vec", vec_col)
         / (F.col("__qn") * F.col("__vn")),
         6,
     )
-    vecs_n = vectors.withColumn("__vn", l2_norm(F.col(vec_col)))
+    vecs_n = vectors.withColumn("__vn", l2_norm(vec_col))
     if n_lists is not None:
         cand = _ivf_candidate_pairs(vectors, q, n_lists, n_probe, id_col, vec_col)
         pool = vecs_n.join(cand, on=id_col).join(F.broadcast(q), on="q_id").filter(
@@ -1090,12 +1092,11 @@ def pq_deterministic_top_k(
         raise ValueError(f"dim {len(qraw)} not divisible by m={m}")
     codes = pq_encode(vectors, cw, m=m, id_col=id_col, vec_col=vec_col)
     short = pq_adc_shortlist(codes, cw, qraw, m=m, shortlist=shortlist, id_col=id_col)
-    qlit = F.array(*[F.lit(x) for x in qraw]).cast("array<double>")
-    sim = F.round(cosine_similarity_qnorm(F.col(vec_col), qlit, py_l2_norm(qraw)), 6)
+    sim = query_cosine(vec_col, qraw)
     return (
         vectors.join(short, on=id_col)
-        .select(F.col(id_col), F.col("adc_micro"), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .selectExpr(id_col, "adc_micro", f"{sim} AS cosine_sim")
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -1210,15 +1211,12 @@ def pq_adc_shortlist(
                 ip += qv[t] * float(cw[c, t])
             row.append(int(ip * 1e6))
         luts.append(row)
-    score = None
-    for j in range(m):
-        lut_arr = F.array(*[F.lit(v) for v in luts[j]])
-        term = F.element_at(lut_arr, F.col(f"c{j}") + 1)
-        score = term if score is None else score + term
+    score = " + ".join(
+        f"element_at({array_literal(luts[j])}, c{j} + 1)" for j in range(m)
+    )
     return (
-        codes.withColumn("adc_micro", score.cast("long"))
-        .select(id_col, "adc_micro")
-        .orderBy(F.col("adc_micro").desc(), F.col(id_col).asc())
+        codes.selectExpr(id_col, f"CAST({score} AS BIGINT) AS adc_micro")
+        .orderBy(F.desc("adc_micro"), F.asc(id_col))
         .limit(shortlist)
     )
 
@@ -1372,12 +1370,11 @@ def sq8_deterministic_top_k(
         .orderBy(F.col("approx_micro").desc(), F.col(id_col).asc())
         .limit(shortlist)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
-    sim = F.round(cosine_similarity_qnorm(F.col(vec_col), qlit, py_l2_norm(query)), 6)
+    sim = query_cosine(vec_col, query)
     return (
         vectors.join(short, on=id_col)
-        .select(F.col(id_col), F.col("approx_micro"), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .selectExpr(id_col, "approx_micro", f"{sim} AS cosine_sim")
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -1452,25 +1449,25 @@ def _bq_query_words(query) -> list[int]:
     return words
 
 
-def _bq_words_expr(vec_col: str, dim: int):
+def bq_words_literal(words) -> str:
+    """SQL text of a query's packed words (`_bq_query_words`) as an
+    ``array<bigint>`` literal."""
+    return f"CAST({array_literal(words)} AS array<bigint>)"
+
+
+def _bq_words_sql(vec_col: str, dim: int) -> str:
     """Packed sign-bit words of a vector column as array<long>: per
     63-dim slice, a left fold ``acc*2 + (x>0)`` — pure whole-stage-
     codegen arithmetic, no Python worker. Signs are taken on the RAW
     components (L2 normalization never flips a sign), so no norm pass
     is needed at encode time."""
-    v = F.col(vec_col).cast("array<double>")
-    words = []
-    for w in range(0, dim, BQ_WORD):
-        n = min(BQ_WORD, dim - w)
-        words.append(
-            F.aggregate(
-                F.slice(v, w + 1, n),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc * 2
-                + F.when(x > 0, 1).otherwise(0).cast("long"),
-            )
-        )
-    return F.array(*words)
+    words = [
+        f"aggregate(slice(CAST({vec_col} AS array<double>), {w + 1}, "
+        f"{min(BQ_WORD, dim - w)}), CAST(0 AS BIGINT), (acc, x) -> acc * 2 + "
+        "CAST(CASE WHEN x > 0 THEN 1 ELSE 0 END AS BIGINT))"
+        for w in range(0, dim, BQ_WORD)
+    ]
+    return f"array({', '.join(words)})"
 
 
 def bq_encode(
@@ -1492,9 +1489,7 @@ def bq_encode(
     raises a clear ValueError instead of an opaque subscript error."""
     if dim is None:
         dim = _infer_dim(vectors, vec_col)
-    return vectors.select(
-        F.col(id_col), _bq_words_expr(vec_col, dim).alias("bq_words")
-    )
+    return vectors.selectExpr(id_col, f"{_bq_words_sql(vec_col, dim)} AS bq_words")
 
 
 def _infer_dim(vectors: DataFrame, vec_col: str) -> int:
@@ -1537,20 +1532,17 @@ def bq_deterministic_top_k(
     if len(qv) != dim:
         raise ValueError(f"query dim {len(qv)} != collection dim {dim}")
     qwords = _bq_query_words(qv)
-    qarr = F.array(*[F.lit(int(w)).cast("long") for w in qwords])
-    hamming = _hamming_distance(_bq_words_expr(vec_col, dim), qarr)
+    hamming = hamming_sql(_bq_words_sql(vec_col, dim), bq_words_literal(qwords))
     short = (
-        vectors.withColumn("hamming", hamming)
-        .select(id_col, "hamming")
-        .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
+        vectors.selectExpr(id_col, f"{hamming} AS hamming")
+        .orderBy(F.asc("hamming"), F.asc(id_col))
         .limit(shortlist)
     )
-    qlit = F.array(*[F.lit(x) for x in qv]).cast("array<double>")
-    sim = F.round(cosine_similarity_qnorm(F.col(vec_col), qlit, py_l2_norm(qv)), 6)
+    sim = query_cosine(vec_col, qv)
     return (
         vectors.join(short, on=id_col)
-        .select(F.col(id_col), F.col("hamming"), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
+        .selectExpr(id_col, "hamming", f"{sim} AS cosine_sim")
+        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
 
@@ -1610,7 +1602,7 @@ def hybrid_rrf_search(
     docs: DataFrame,
     vectors: DataFrame,
     query_terms: list[str],
-    query_vec: Column,
+    query_vec,
     k: int = 10,
     top_n: int = 50,
     rrf_k: int = 60,
@@ -1665,7 +1657,7 @@ def hybrid_rrf_search(
     sem_src = vectors
     if allowed_ids is not None:
         sem_src = vectors.join(
-            allowed_ids.select(F.col(id_col).alias(vec_id_col)).distinct(),
+            allowed_ids.select(F.col(id_col).alias(vec_id_col)),
             on=vec_id_col,
             how="leftsemi",
         )
@@ -1699,39 +1691,38 @@ def _rrf_fuse(
     query-id columns both branches carry (the batch serve): ranks,
     fusion and top-k then run per query."""
     by = list(by or [])
+    part = f"PARTITION BY {', '.join(by)} " if by else ""
 
-    def window(*order):
-        return (W.partitionBy(*by) if by else W).orderBy(*order)
+    def rank(order: str, name: str) -> str:
+        return (
+            f"CAST(row_number() OVER ({part}ORDER BY {order}) AS BIGINT) AS {name}"
+        )
 
-    w_l = window(F.col("bm25").desc(), F.col(id_col).asc())
-    lex_r = lex.select(
-        *by,
-        F.col(id_col),
-        F.row_number().over(w_l).cast("long").alias("lex_rank"),
+    lex_r = lex.selectExpr(
+        *by, id_col, rank(f"bm25 DESC, {id_col} ASC", "lex_rank")
     )
-    w_s = window(F.col("cosine_sim").desc(), F.col(vec_id_col).asc())
-    sem_r = sem.select(
+    sem_r = sem.selectExpr(
         *by,
-        F.col(vec_id_col).alias(id_col),
-        F.row_number().over(w_s).cast("long").alias("sem_rank"),
-        *[F.col(c) for c in (sem_carry or [])],
+        f"{vec_id_col} AS {id_col}",
+        rank(f"cosine_sim DESC, {vec_id_col} ASC", "sem_rank"),
+        *(sem_carry or []),
     )
     fused = lex_r.join(sem_r, on=[*by, id_col], how="full_outer")
-    term = lambda c: F.coalesce(  # noqa: E731 - tiny local shape
-        F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(c).cast("double")), F.lit(0.0)
-    )
-    out = fused.select(
+
+    def term(c: str) -> str:
+        return f"coalesce(1.0D / ({sql_literal(float(rrf_k))} + CAST({c} AS DOUBLE)), 0.0D)"
+
+    out = fused.selectExpr(
         *by,
-        F.col(id_col),
-        F.coalesce(F.col("lex_rank"), F.lit(0).cast("long")).alias("lex_rank"),
-        F.coalesce(F.col("sem_rank"), F.lit(0).cast("long")).alias("sem_rank"),
-        (term("lex_rank") + term("sem_rank")).alias("rrf_score"),
-        *[F.col(c) for c in (sem_carry or [])],
+        id_col,
+        "coalesce(lex_rank, CAST(0 AS BIGINT)) AS lex_rank",
+        "coalesce(sem_rank, CAST(0 AS BIGINT)) AS sem_rank",
+        f"{term('lex_rank')} + {term('sem_rank')} AS rrf_score",
+        *(sem_carry or []),
     )
-    order = [F.col("rrf_score").desc(), F.col(id_col).asc()]
     if by:
-        return top_k_per_group(out, by, order, k)
-    return out.orderBy(*order).limit(k)
+        return top_k_per_group(out, by, f"rrf_score DESC, {id_col} ASC", k)
+    return out.orderBy(F.desc("rrf_score"), F.asc(id_col)).limit(k)
 
 
 def hybrid_rrf_search_indexed(
@@ -1959,10 +1950,9 @@ def mmr_rerank(
     import numpy as np
 
     qarr = np.asarray(list(query), dtype=np.float64)
-    qlit = F.array(*[F.lit(float(x)) for x in qarr]).cast("array<double>")
     short = knn_brute_force(
         vectors,
-        qlit,
+        qarr.tolist(),
         k=top_n,
         id_col=id_col,
         vec_col=vec_col,

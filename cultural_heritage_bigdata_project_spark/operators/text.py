@@ -22,6 +22,7 @@ from ..functions.text import (
 )
 
 from ..functions.langid import LANGS, profile_rows
+from ..functions.vectors import sql_literal
 from .localrel import _unpersist_local_checkpoint
 
 
@@ -949,11 +950,7 @@ def bm25_search(
         .agg(F.count(F.lit(1)).alias("__tf"))
     )
     if allowed_ids is not None:
-        hits = hits.join(
-            allowed_ids.select(F.col(id_col)).distinct(),
-            on=id_col,
-            how="leftsemi",
-        )
+        hits = hits.join(allowed_ids.select(F.col(id_col)), on=id_col, how="leftsemi")
     return bm25_rank_hits(hits, corpus, top_k=top_k, k1=k1, b=b, id_col=id_col)
 
 
@@ -967,20 +964,21 @@ def bm25_rank_hits(
 ) -> DataFrame:
     """The shared BM25 scoring tail: ``hits`` carries one row per
     (doc, query term) as ``(id_col, __dl, __term, __tf)``; ``corpus``
-    is one row ``(__n_docs, __avgdl)``. Factored out so the corpus-scan
-    path (`bm25_search`) and the persisted inverted-index path
-    (`text_index.text_index_search`) run the IDENTICAL IEEE expression
-    tree — their scores are bit-equal by construction, not by luck."""
+    is the corpus stats (`_bm25_scores`). Factored out so the
+    corpus-scan path (`bm25_search`) and the persisted inverted-index
+    path (`text_index.text_index_search`) run the IDENTICAL IEEE
+    expression tree — their scores are bit-equal by construction, not
+    by luck."""
     return (
         _bm25_scores(hits, corpus, k1, b, id_col)
-        .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+        .orderBy(F.desc("bm25"), F.asc(id_col))
         .limit(top_k)
     )
 
 
 def _bm25_scores(
     hits: DataFrame,
-    corpus: DataFrame,
+    corpus,
     k1: float,
     b: float,
     id_col: str,
@@ -991,21 +989,38 @@ def _bm25_scores(
     batch serve (`text_index.text_index_search_all`) passes its query
     id as ``by``; each query's terms are distinct, so its df per
     ``(query, term)`` is the term's df and its scores equal the
-    single-query serve's bit for bit."""
-    dfreq = hits.groupBy(*by, "__term").agg(F.count(F.lit(1)).alias("__df"))
-    n_docs = F.col("__n_docs").cast("double")
-    idf = (n_docs - F.col("__df") + F.lit(0.5)) / (F.col("__df") + F.lit(0.5))
-    tf = F.col("__tf").cast("double")
-    dl_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("__dl") / F.col("__avgdl"))
-    term_score = idf * ((tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * dl_norm))
+    single-query serve's bit for bit.
+
+    ``corpus`` is either the exact ``(n_docs, sum_dl)`` a persisted
+    index records (inlined as DOUBLE literals; ``avgdl`` is
+    ``float(sum_dl) / float(n_docs)``, the double division Spark runs
+    for long / long) or the scan path's one-row
+    ``(__n_docs, __avgdl)`` relation, cross-joined. Both feed the same
+    formula text."""
+    dfreq = hits.groupBy(*by, "__term").agg(F.expr("count(1) AS __df"))
+    scored = hits.join(F.broadcast(dfreq), on=[*by, "__term"])
+    if isinstance(corpus, DataFrame):
+        scored = scored.crossJoin(F.broadcast(corpus))
+        n_docs, avgdl = "CAST(__n_docs AS DOUBLE)", "__avgdl"
+    else:
+        n, sum_dl = (int(x) for x in corpus)
+        n_docs, avgdl = sql_literal(float(n)), sql_literal(float(sum_dl) / float(n))
+    idf = f"(({n_docs} - __df) + 0.5D) / (__df + 0.5D)"
+    tf = "CAST(__tf AS DOUBLE)"
+    dl_norm = (
+        f"(1.0D - {sql_literal(float(b))}) + "
+        f"({sql_literal(float(b))} * (__dl / {avgdl}))"
+    )
+    term_score = (
+        f"({idf}) * (({tf} * {sql_literal(k1 + 1.0)}) / "
+        f"({tf} + ({sql_literal(float(k1))} * ({dl_norm}))))"
+    )
     return (
-        hits.join(F.broadcast(dfreq), on=[*by, "__term"])
-        .crossJoin(F.broadcast(corpus))
-        .select(*by, F.col(id_col), term_score.alias("__s"))
+        scored.selectExpr(*by, id_col, f"{term_score} AS __s")
         .groupBy(*by, id_col)
         .agg(
-            F.sum(F.col("__s").cast("decimal(38,6)")).cast("double").alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
+            F.expr("CAST(sum(CAST(__s AS DECIMAL(38,6))) AS DOUBLE) AS bm25"),
+            F.expr("count(1) AS n_terms_hit"),
         )
     )
 

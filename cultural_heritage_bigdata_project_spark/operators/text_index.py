@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from ..functions.vectors import isin_sql
 from . import segment_index as sx
 from . import txn
 from .localrel import local_df
@@ -147,7 +148,7 @@ def _replaced_stats(
     )
     rep = (
         prior_dl.join(
-            F.broadcast(keys.select("doc_id").distinct()),
+            F.broadcast(keys.select("doc_id")),
             on="doc_id",
             how="leftsemi",
         )
@@ -814,7 +815,7 @@ def text_index_search(
             payload_filter=payload_filter,
             version=version,
         )
-        return hits_, _corpus_relation(spark, root, tix, version)
+        return hits_, _corpus_stats(spark, root, tix, version)
 
     if allowed_ids is None and (
         payload_filter is None or isinstance(payload_filter, str)
@@ -846,7 +847,10 @@ def text_index_search(
     # scan∪delta union appeared once under the df BroadcastExchange
     # and again as the join stream). hits here is term-filtered and
     # bucket-pruned — O(docs containing the query terms) — so the
-    # checkpoint is bounded by the serve, not the corpus.
+    # checkpoint is bounded by the serve, not the corpus. eager=False
+    # defers the scan to the action, but under AQE the call itself runs
+    # the exchanges beneath it: a filtered serve's semi-join broadcast
+    # is one job at this line, counted in construction time.
     hits = hits.localCheckpoint(eager=False)
     return bm25_rank_hits(hits, corpus, top_k=top_k, k1=k1, b=b, id_col=id_col)
 
@@ -868,24 +872,17 @@ def _search_hits(
     the subtree from the final query's formatted plan."""
     terms = sorted(set(query_terms))
     rows, tix = _probed_rows(spark, root, terms, version=version)
-    hits = (
-        rows.filter(F.col("term").isin(terms))
-        .select(
-            F.col("doc_id").alias(id_col),
-            F.col("dl").cast("int").alias("__dl"),
-            F.col("term").alias("__term"),
-            F.col("tf").alias("__tf"),
-        )
+    hits = rows.filter(isin_sql("term", terms)).selectExpr(
+        f"doc_id AS {id_col}",
+        "CAST(dl AS INT) AS __dl",
+        "term AS __term",
+        "tf AS __tf",
     )
     allowed_ids = _allowed_by_payload(
         spark, root, version, id_col, allowed_ids, payload_filter
     )
     if allowed_ids is not None:
-        hits = hits.join(
-            allowed_ids.select(F.col(id_col)).distinct(),
-            on=id_col,
-            how="leftsemi",
-        )
+        hits = hits.join(allowed_ids.select(F.col(id_col)), on=id_col, how="leftsemi")
     return hits, tix
 
 
@@ -916,18 +913,15 @@ def text_index_current_version(root: str) -> str:
     return sx.pin(root)
 
 
-def _corpus_relation(spark: SparkSession, root: str, tix: dict, version: str):
-    """The one-row ``(__n_docs, __avgdl)`` relation BM25 scoring
-    cross-joins. ``(n_docs, sum_dl)`` are exact and metadata-only from
-    the ``tix`` block in the normal case; when the block is gone (a
-    generic component rewrite rebuilt the dict) they are recomputed
-    from the doclen component instead of silently scoring NULL
-    (round-8 ADVICE). A genuinely empty corpus raises — avgdl is
-    undefined. The division is the same long/long double division the
-    scan path computes. Built over a one-row LocalRelation so the
-    broadcast side of the scoring crossJoin is collected driver-side —
-    zero extra stages per serve (round 12; spark.range(1) was a 1-task
-    RDD stage in every BM25 serve)."""
+def _corpus_stats(
+    spark: SparkSession, root: str, tix: dict, version: str
+) -> tuple[int, int]:
+    """The exact ``(n_docs, sum_dl)`` BM25 scoring inlines as literals
+    (`text._bm25_scores`). Metadata-only from the ``tix`` block in the
+    normal case; when the block is gone (a generic component rewrite
+    rebuilt the dict) they are recomputed from the doclen component
+    instead of silently scoring NULL (round-8 ADVICE). A genuinely
+    empty corpus raises — avgdl is undefined."""
     n_docs = int(tix.get("n_docs", 0))
     sum_dl = int(tix.get("sum_dl", 0))
     if n_docs == 0:
@@ -944,12 +938,7 @@ def _corpus_relation(spark: SparkSession, root: str, tix: dict, version: str):
             "stats (avgdl) are undefined — build the index over a "
             "non-empty corpus"
         )
-    return txn.literal_local_relation(spark).select(
-        F.lit(n_docs).cast("long").alias("__n_docs"),
-        (F.lit(sum_dl).cast("long") / F.lit(n_docs).cast("long")).alias(
-            "__avgdl"
-        ),
-    )
+    return n_docs, sum_dl
 
 
 def _probed_rows(
@@ -1051,9 +1040,8 @@ def text_index_search_all(
     Returns ``(q_id, doc_id, bm25, n_terms_hit)``, ``top_k`` rows per
     query with the (bm25 desc, id asc) tie-break."""
     version = sx.pin(root, version)
-    qterms = queries.select(
-        F.col(q_id_col).alias("__qid"),
-        F.explode(F.array_distinct(F.col(terms_col))).alias("__term"),
+    qterms = queries.selectExpr(
+        f"{q_id_col} AS __qid", f"explode(array_distinct({terms_col})) AS __term"
     )
     terms = sorted(
         r["__term"] for r in qterms.select("__term").distinct().collect()
@@ -1072,14 +1060,15 @@ def text_index_search_all(
     )
     # the scorer references its hits twice (per-term df + score join):
     # cut the lineage once so the probed fold is scanned once per batch
+    # (under AQE the query join's broadcast runs at this call)
     qhits = hits.join(qterms, on="__term").localCheckpoint(eager=False)
     scored = _bm25_scores(
-        qhits, _corpus_relation(spark, root, tix, version), k1, b, id_col,
+        qhits, _corpus_stats(spark, root, tix, version), k1, b, id_col,
         by=["__qid"],
     )
     return top_k_per_group(
-        scored, ["__qid"], [F.col("bm25").desc(), F.col(id_col).asc()], top_k
-    ).select(F.col("__qid").alias(q_id_col), id_col, "bm25", "n_terms_hit")
+        scored, ["__qid"], f"bm25 DESC, {id_col} ASC", top_k
+    ).selectExpr(f"__qid AS {q_id_col}", id_col, "bm25", "n_terms_hit")
 
 
 def _doclen_with_payload(

@@ -31,15 +31,13 @@ def distinct_on(
 
 
 def top_k_per_group(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str], k: int
+    df: DataFrame, keys: Sequence[str], order_by: str, k: int
 ) -> DataFrame:
-    """Top-k rows per group via ranking window."""
-    w = W.partitionBy(*[F.col(c) for c in keys]).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    """Top-k rows per group via ranking window. ``order_by`` is SQL
+    ``ORDER BY`` text (``"score DESC, id"``): the window is one SQL
+    expression, built in one py4j round trip."""
+    rn = f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY {order_by})"
+    return df.withColumn("__rn", F.expr(rn)).filter(f"__rn <= {int(k)}").drop("__rn")
 
 
 def keyset_page(df: DataFrame, key: str, last_key, page_size: int) -> DataFrame:

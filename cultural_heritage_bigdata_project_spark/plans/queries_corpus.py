@@ -263,12 +263,7 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3. near-dup prune: MinHash-LSH verified >= 0.6; drop the larger id
     # (e1 is checkpointed at `par` partitions, so the tokenize/shingle
     # projections inherit full parallelism with no extra exchange)
-    toks = e1.select(
-        "doc_id", F.split(F.trim(F.lower("text")), " +").alias("t")
-    )
-    shingled = toks.filter(F.size("t") >= 3).select(
-        "doc_id", dedup.shingles_expr("t", 3).alias("sh")
-    )
+    shingled = dedup.shingled_docs(e1)
     pairs = dedup.minhash_lsh_pairs(
         shingled,
         "doc_id",
@@ -391,12 +386,7 @@ def incremental_dedup_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # near stage: band-collision vs the seen index, signature verify
     def shingled(df: DataFrame) -> DataFrame:
-        toks = df.repartition(par).select(
-            "doc_id", F.split(F.trim(F.lower("text")), " +").alias("t")
-        )
-        return toks.filter(F.size("t") >= 3).select(
-            "doc_id", dedup.shingles_expr("t", 3).alias("sh")
-        )
+        return dedup.shingled_docs(df.repartition(par))
 
     # pre_partitioned: shingled() spreads the TEXT above, so the index
     # build must not round-robin the heavy shingle arrays again

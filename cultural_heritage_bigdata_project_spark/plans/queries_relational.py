@@ -535,7 +535,7 @@ FROM (
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     top = windows.top_k_per_group(
-        o, ["o_orderpriority"], [F.col("o_totalprice").desc(), F.col("o_orderkey")], 3
+        o, ["o_orderpriority"], "o_totalprice DESC, o_orderkey", 3
     )
     return top.select("o_orderpriority", "o_orderkey", "o_totalprice")
 

@@ -491,12 +491,7 @@ WHERE round(len(list_intersect(sa.sh, sb.sh)) * 1.0
 """,
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_parallel(spark, sf_dir).select(
-        "doc_id", F.split(F.trim(F.lower("text")), " +").alias("t")
-    )
-    docs = docs.filter(F.size("t") >= 3).select(
-        "doc_id", dedup.shingles_expr("t", 3).alias("sh")
-    )
+    docs = dedup.shingled_docs(_docs_parallel(spark, sf_dir))
     pairs = dedup.jaccard_pairs(
         docs,
         "doc_id",
@@ -550,12 +545,7 @@ WHERE round(len(list_intersect(sa.sh, sb.sh)) * 1.0
 """,
 )
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_parallel(spark, sf_dir).select(
-        "doc_id", F.split(F.trim(F.lower("text")), " +").alias("t")
-    )
-    docs = docs.filter(F.size("t") >= 3).select(
-        "doc_id", dedup.shingles_expr("t", 3).alias("sh")
-    )
+    docs = dedup.shingled_docs(_docs_parallel(spark, sf_dir))
     return dedup.minhash_lsh_pairs(
         docs,
         "doc_id",

@@ -86,8 +86,7 @@ def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vectors = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
     ql = _query_list(spark, sf_dir, 0)
-    qv = F.array(*[F.lit(x) for x in ql]).cast("array<double>")
-    return similarity.knn_brute_force(vectors, qv, k=10, query_norm=py_l2_norm(ql))
+    return similarity.knn_brute_force(vectors, ql, k=10, query_norm=py_l2_norm(ql))
 
 
 @register(
@@ -488,11 +487,8 @@ def text_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.repartition(spark.sparkContext.defaultParallelism).select(
-        "doc_id", F.split(F.trim(F.lower("text")), " +").alias("t")
-    )
-    shingled = toks.filter(F.size("t") >= 3).select(
-        "doc_id", dedup.shingles_expr("t", 3).alias("sh")
+    shingled = dedup.shingled_docs(
+        docs.repartition(spark.sparkContext.defaultParallelism)
     )
     # pre_partitioned: toks is repartitioned above, so the operator's
     # entry exchange would round-robin the heavy shingle arrays a second
@@ -534,10 +530,10 @@ def vector_concat_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import l2_norm
 
     e = _emb(spark, sf_dir)
-    combined = F.concat("embedding", "embedding")
+    combined = "concat(embedding, embedding)"
     return e.select(
         "vec_id",
-        F.size(combined).alias("combined_dim"),
+        F.expr(f"size({combined})").alias("combined_dim"),
         F.round(l2_norm(combined), 6).alias("combined_norm"),
     )
 
@@ -632,10 +628,9 @@ def hash_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     from ..functions.vectors import py_l2_norm
 
-    qv = F.array(*[F.lit(float(x)) for x in emb]).cast("array<double>")
     return similarity.knn_brute_force(
         embedded.filter(F.col("doc_id") != 0),
-        qv,
+        emb,
         k=5,
         id_col="doc_id",
         query_norm=py_l2_norm(emb),
@@ -707,12 +702,11 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ql = _query_list(spark, sf_dir, 0)
-    qv = F.array(*[F.lit(x) for x in ql]).cast("array<double>")
     return similarity.hybrid_rrf_search(
         docs,
         _emb(spark, sf_dir),
         ["merge", "spark", "window"],
-        qv,
+        ql,
         k=10,
         top_n=50,
         query_norm=py_l2_norm(ql),

@@ -710,6 +710,11 @@ def _stage_upsert(
         spark, tdir, spec, (list(prior["segments"]) if prior else []) + changes,
         epoch, compact_every, minor_every, spec.get("buckets"),
     )
+    # a read list that is exactly this epoch's own delta (a first
+    # commit) is one row per key already — the delta is deduplicated on
+    # the keys above — so readers skip the merge-on-read window too
+    # (tombstones are still filtered on the collapsed read path)
+    collapsed = collapsed or (bool(changes) and segments == changes)
     component = _upsert_component(
         spark, tdir, spec, segments, changes, collapsed, prior, key_blooms,
         schema,

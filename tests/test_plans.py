@@ -810,3 +810,37 @@ def test_collection_hybrid_page_fuses_bounded_legs_only(spark):
                 "UNBOUNDED index component feeds a BroadcastExchange:\n"
                 + sub
             )
+
+
+def test_shingled_docs_splits_each_row_once(spark):
+    """The MinHash / Jaccard callers' tokenizer (`dedup.shingled_docs`,
+    here over `ngram_jaccard_pairs`' own input) evaluates the split once
+    per row. The projected form it replaced let the optimizer push its
+    ``size(t) >= 3`` filter under the projection, so the split ran in the
+    scan filter and again in the projection. Rows are unchanged."""
+    from pyspark.sql import functions as F
+
+    from cultural_heritage_bigdata_project_spark.operators import dedup
+    from cultural_heritage_bigdata_project_spark.plans.queries_text import (
+        _docs_parallel,
+    )
+
+    docs = _docs_parallel(spark, SF_DIR)
+    got = dedup.shingled_docs(docs)
+    projected = (
+        docs.select("doc_id", F.split(F.trim(F.lower("text")), " +").alias("t"))
+        .filter(F.size("t") >= 3)
+        .select("doc_id", dedup.shingles_expr("t", 3).alias("sh"))
+    )
+
+    def splits(df):
+        # evaluations: Filter/Project/Generate lines (the scan line only
+        # echoes its pushed data filter)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sum(
+            ln.count("split(") for ln in plan.splitlines() if "FileScan" not in ln
+        )
+
+    assert splits(projected) == 2
+    assert splits(got) == 1, got._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, projected.collect()))

@@ -702,6 +702,88 @@ def test_sink_compaction_marks_collapsed_and_read_skips_window(spark, tmp_path):
     assert feed.filter("is_deleted").count() == 5
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _latest(rows, delete: bool) -> set:
+    """Reference fold: newest ``ts`` per key (first seen wins a tie),
+    tombstoned winners dropped when ``delete``."""
+    best = {}
+    for r in rows:
+        if r[0] not in best or r[1] > best[r[0]][1]:
+            best[r[0]] = r
+    return {r for r in best.values() if not (delete and r[3])}
+
+
+def test_first_commit_is_collapsed_and_reads_without_window(spark, tmp_path):
+    """A first commit's read list is its own delta, already one row per
+    key, so its manifest says collapsed: the read has no Window and no
+    Exchange, returns the folded rows (tombstones filtered), and the
+    metadata count is exact without a delete flag and None with one. A
+    second commit appends a delta and is not collapsed."""
+    schema = "user_id long, ts long, val string, is_deleted boolean"
+    first = [(k, 100 + k % 3, f"a{k}", k % 7 == 0) for k in range(30)]
+    first += [(k, 50, "stale", False) for k in range(10)]  # in-batch duplicates
+    second = [(k, 500, f"b{k}", False) for k in range(25, 35)]
+    for delete_col in (None, "is_deleted"):
+        tbl = str(tmp_path / f"t_{delete_col}")
+        streaming.batch_upsert_commit(
+            spark, spark.createDataFrame(first, schema), keys=["user_id"],
+            order_desc=["ts"], target_dir=tbl, delete_col=delete_col,
+        )
+        comp = txn.read_manifest(tbl, os.path.basename(txn.current_version_dir(tbl)))[""]
+        assert comp["collapsed"] is True and len(comp["segments"]) == 1
+        df = txn.read_version(spark, tbl)
+        plan = _executed_plan(df)
+        assert "Window" not in plan and "Exchange" not in plan, plan[:2000]
+        want = _latest(first, delete_col is not None)
+        got = {tuple(r) for r in df.select("user_id", "ts", "val", "is_deleted").collect()}
+        assert got == want
+        n_meta = txn.version_row_count(tbl)
+        assert n_meta == (len(want) if delete_col is None else None)
+
+        streaming.batch_upsert_commit(
+            spark, spark.createDataFrame(second, schema), keys=["user_id"],
+            order_desc=["ts"], target_dir=tbl, delete_col=delete_col,
+        )
+        comp2 = txn.read_manifest(tbl, os.path.basename(txn.current_version_dir(tbl)))[""]
+        assert comp2["collapsed"] is False and len(comp2["segments"]) == 2
+        got2 = {
+            tuple(r)
+            for r in txn.read_version(spark, tbl)
+            .select("user_id", "ts", "val", "is_deleted")
+            .collect()
+        }
+        assert got2 == _latest(first + second, delete_col is not None)
+        assert txn.version_row_count(tbl) is None
+
+
+def test_sink_first_epoch_is_collapsed(spark, tmp_path):
+    """The streaming sink's first epoch takes the same path as a first
+    batch commit: collapsed, read without Window or Exchange."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    schema = "user_id long, ts long, val string, is_deleted boolean"
+    rows = [(k, 100 + k % 4, f"v{k}", k % 5 == 0) for k in range(20)]
+    rows += [(k, 10, "stale", False) for k in range(8)]
+    _drop_file(spark, tmp_path, src, "f0", rows, schema, time.time() - 100)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    tbl = str(tmp_path / "tbl")
+    streaming.foreach_batch_upsert_run(
+        spark, stream, keys=["user_id"], order_desc=["ts"], target_dir=tbl,
+        delete_col="is_deleted",
+    )
+    comp = txn.read_manifest(tbl, os.path.basename(txn.current_version_dir(tbl)))[""]
+    assert comp["collapsed"] is True
+    df = txn.read_version(spark, tbl)
+    plan = _executed_plan(df)
+    assert "Window" not in plan and "Exchange" not in plan, plan[:2000]
+    got = {tuple(r) for r in df.select("user_id", "ts", "val", "is_deleted").collect()}
+    assert got == _latest(rows, True)
+    assert txn.version_row_count(tbl) is None
+
+
 def test_streaming_materialized_view_matches_full_reaggregation(spark, tmp_path):
     """The upsert sink's per-epoch IVM view (retract+apply over the
     epoch delta) must EQUAL a from-scratch aggregation of the table at
