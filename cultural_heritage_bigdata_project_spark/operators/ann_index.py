@@ -42,14 +42,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_sql, hamming_sql, isin_sql, query_cosine
+from ..functions.vectors import cosine_sql, hamming_sql, isin_sql
 from . import segment_index as sx
 from . import txn
 from .localrel import local_df
 from .similarity import (
     _deterministic_centroids,
-    pq_adc_shortlist,
+    nearest_lists,
+    pq_adc_sql,
     pq_codebook,
+    shortlist_rerank,
 )
 from .windows import top_k_per_group
 
@@ -282,6 +284,10 @@ def build_ann_index(
                     "base": None,
                     "segments": seg_names,
                     "changes": seg_names,
+                    # the list segments hold one row per key: reads scan
+                    # them without the merge-on-read window until a
+                    # delta joins the read list (`_append_delta`)
+                    "collapsed": True,
                     "reconstruct": _spec(id_col),
                     "schema": schema,
                     "stats": stats,
@@ -380,8 +386,11 @@ def ann_index_upsert(
 def _append_delta(root: str, components: dict, ann: dict, epoch: int, seg: str) -> dict:
     """The manifest after a row-delta commit (upsert or tombstones):
     ``seg`` joins the codes read list, the feed record and the ``ann``
-    delta tail that every probe reads whole."""
+    delta tail that every probe reads whole. A key may now have a row in
+    the base and one in ``seg``, so the component is no longer
+    ``collapsed``."""
     comp = dict(components[CODES_COMPONENT])
+    comp.pop("collapsed", None)
     stats = dict(comp.get("stats") or {})
     stats[seg] = txn.collect_parquet_stats(txn.segment_path(root, seg))
     ann["epoch"] = epoch
@@ -609,18 +618,13 @@ def ann_index_top_k(
     Either way CURRENT resolves at most ONCE — meta, manifest, and
     fold all read the same pinned version (the round-10 ADVICE
     single-resolve discipline)."""
-    import numpy as np
-
     version = sx.pin(root, version)
     centroids, codebook = read_index_meta(spark, root, version=version)
     comp = txn.read_manifest(root, version)[CODES_COMPONENT]
     ann = comp.get("ann") or {}
     m = int(ann.get("m", 8))
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    qv = np.asarray(list(query), dtype=np.float64)
-    d = ((cmat - qv[None, :]) ** 2).sum(axis=1)
-    probe_ids = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
+    probe_ids = nearest_lists(centroids, query, n_probe)
 
     excl = (
         tuple(sorted(int(i) for i in exclude_ids)) if exclude_ids else None
@@ -631,11 +635,10 @@ def ann_index_top_k(
         # twin of the text side's hits memo): `_probed_filtered` is a
         # pure plan — scans, broadcast anti-join, filters; no collects,
         # no checkpoints, no shuffle exchange — keyed on (version
-        # manifest stat, probe list, exclusions, filter string). The
-        # per-serve lineage cut stays inside `_shortlist_rerank`, so
-        # every serve still materializes from a fresh parquet scan;
-        # only plan construction/compilation is reused (measured
-        # 0.57 → 0.21 s construction per serve at sf0.1).
+        # manifest stat, probe list, exclusions, filter string). Every
+        # serve's action still reads the parquet inputs; only plan
+        # construction is reused (measured 0.57 → 0.21 s construction
+        # per serve at sf0.1).
         probed = txn.version_plan_memo(
             spark,
             root,
@@ -671,12 +674,9 @@ def _probed_filtered(
     exclude_ids=None,
     payload_filter=None,
 ) -> DataFrame:
-    """The pre-lineage-cut probed frame of a serve: probed-list fold →
-    exclusion → payload filter. Factored out so plan gates can assert
-    the parquet pushdown on the EXACT production subtree —
-    `_shortlist_rerank` cuts lineage right after this frame
-    (localCheckpoint), which replaces the subtree with an RDD scan in
-    the final query's formatted plan."""
+    """The probed frame of a serve: probed-list fold → exclusion →
+    payload filter (the memoized plan `ann_index_top_k` hands to
+    `_shortlist_rerank`)."""
     latest = _probed_latest(
         spark, root, comp, ann, probe_ids, id_col, version=version
     )
@@ -816,35 +816,16 @@ def _shortlist_rerank(
     payload_out: list[str] | None = None,
 ) -> DataFrame:
     """Shared serving tail: payload filter → codec shortlist (PQ ADC or
-    BQ hamming over the stored columns) → exact cosine re-rank.
+    BQ hamming over the stored columns) → exact cosine re-rank, one
+    pass over the probed rows (`similarity.shortlist_rerank`).
     ``payload_out`` columns project through from the probed rows."""
     if allowed_ids is not None:
         probed = probed.join(
             allowed_ids.select(id_col), on=id_col, how="leftsemi"
         )
-    # probed is referenced twice below — once under the shortlist
-    # (codes columns) and once as the re-rank join stream (embedding
-    # column) — and the two legs share no exchange, so without a
-    # lineage cut the whole probed fold subtree executed twice per
-    # serve (plan-verified: base∪delta appeared once with
-    # ReadSchema=codes and again with ReadSchema=embedding). The local
-    # checkpoint materializes the probed rows once — bounded by the
-    # probed lists + delta tail, the set the serve must read anyway —
-    # and both legs reuse it. eager=False defers the row scan to the
-    # action, but not the exchanges: under AQE the call itself runs
-    # every exchange beneath it (an ``allowed_ids`` semi-join's
-    # broadcast is one job), so those jobs count as construction time.
-    probed = probed.localCheckpoint(eager=False)
     if codec == "pq":
-        short = pq_adc_shortlist(
-            probed.selectExpr(id_col, *[f"c{j}" for j in range(m)]),
-            codebook,
-            query,
-            m=m,
-            shortlist=shortlist,
-            id_col=id_col,
-        )
-        surrogate = "adc_micro"
+        surrogate, ascending = "adc_micro", False
+        score = pq_adc_sql(codebook, query, m)
     elif codec == "bq":
         from .similarity import _bq_query_words, bq_words_literal
 
@@ -854,25 +835,13 @@ def _shortlist_rerank(
                 "rebuild with build_ann_index"
             )
         qwords = _bq_query_words([float(x) for x in query])
-        hamming = hamming_sql("bq_words", bq_words_literal(qwords))
-        short = (
-            probed.selectExpr(id_col, f"{hamming} AS hamming")
-            .orderBy(F.asc("hamming"), F.asc(id_col))
-            .limit(shortlist)
-        )
-        surrogate = "hamming"
+        surrogate, ascending = "hamming", True
+        score = hamming_sql("bq_words", bq_words_literal(qwords))
     else:
         raise ValueError(f"unknown codec {codec!r}: expected 'pq' or 'bq'")
-    return (
-        probed.join(short, on=id_col)
-        .selectExpr(
-            id_col,
-            surrogate,
-            f"{query_cosine(vec_col, query)} AS cosine_sim",
-            *(payload_out or []),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
+    return shortlist_rerank(
+        probed, query, surrogate, score, k, shortlist, id_col, vec_col,
+        ascending=ascending, carry=payload_out,
     )
 
 
@@ -1117,7 +1086,7 @@ def ann_index_top_k_all(
         short_order = f"{surrogate} ASC, {id_col} ASC"
     else:
         # m element_at lookups into the riding ADC table — whole-stage
-        # codegen, bit-identical to pq_adc_shortlist's LUT scoring
+        # codegen, bit-identical to pq_adc_sql's LUT scoring
         score = " + ".join(
             f"CAST(element_at(__adc, c{j} + {j * n_codes} + 1) AS BIGINT)"
             for j in range(m)
@@ -1165,8 +1134,6 @@ def mmr_rerank_indexed(
     governed by ``n_probe`` exactly as in `ann_index_top_k`; with
     every list probed the result equals `mmr_rerank` over the full
     vector table (pinned by tests)."""
-    import numpy as np
-
     from .similarity import mmr_rerank
 
     # single CURRENT resolution (round-10 ADVICE discipline): meta,
@@ -1176,10 +1143,7 @@ def mmr_rerank_indexed(
     comp = txn.read_manifest(root, version)[CODES_COMPONENT]
     ann = comp.get("ann") or {}
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    qv = np.asarray(list(query), dtype=np.float64)
-    d = ((cmat - qv[None, :]) ** 2).sum(axis=1)
-    probe_ids = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
+    probe_ids = nearest_lists(centroids, query, n_probe)
 
     latest = _probed_latest(
         spark, root, comp, ann, probe_ids, id_col, version=version
@@ -1278,6 +1242,7 @@ def ann_index_compact(
         comp["base"] = None
         comp["segments"] = seg_names
         comp["changes"] = []  # a rewrite is not a change
+        comp["collapsed"] = True  # the fold left one row per key
         comp["stats"] = stats
         ann.update(
             {"list_segments": new_map, "delta_segments": [],
@@ -1403,9 +1368,11 @@ def ann_index_live(
     """The index's live point set: generic latest-per-key fold over the
     codes component, tombstones dropped (`_spec`'s delete column rides
     the manifest's reconstruct spec, so `txn.read_version` honors
-    deletions committed by `ann_index_delete`). The shared base of the
-    point-management APIs below (scroll / count / example fetch) —
-    the SERVING paths never call this; they stay on the probe-pruned
+    deletions committed by `ann_index_delete`). After a build or a
+    compaction the component is ``collapsed`` and the fold is a plain
+    scan. The shared base of the point-management APIs below (scroll /
+    count; point reads of more ids than `sx.lookup` bounds) — the
+    SERVING paths never call this; they stay on the probe-pruned
     `_probed_latest` read. Pending set_payload overlays merge here
     too, so counts, scrolls, and grouped maps see mutated payload.
 
@@ -1582,18 +1549,16 @@ def ann_index_fetch_vectors(
     version: str | None = None,
 ) -> dict:
     """Point lookup of a FEW ids' stored vectors (Qdrant ``retrieve``):
-    returns ``{id: [float, ...]}`` from the live fold, id-filtered
-    before the fold (pushed IN predicate; only id/vector/epoch columns
-    read). Bounded collect — callers pass example-sized id lists.
+    returns ``{id: [float, ...]}`` through `ann_index_retrieve`'s
+    bounded read (one IN-pushed scan; no fold window while the index is
+    collapsed). Bounded collect — callers pass example-sized id lists.
     Raises ``KeyError`` on any missing (or tombstoned) id, the 404 the
     reference's recommend flow surfaces for an unknown point."""
     want = sorted(int(i) for i in ids)
-    rows = (
-        ann_index_live(spark, root, id_col, version=version)
-        .filter(isin_sql(id_col, want))
-        .select(id_col, vec_col)
-        .collect()
-    )
+    rows = ann_index_retrieve(
+        spark, root, want, id_col=id_col, vec_col=vec_col,
+        with_vectors=True, payload_out=[], version=version,
+    ).collect()
     got = {int(r[id_col]): [float(x) for x in r[vec_col]] for r in rows}
     missing = [i for i in want if i not in got]
     if missing:

@@ -109,39 +109,19 @@ def test_grouped_by_stored_payload_column(spark, built):
 
 
 def test_payload_predicate_pushes_into_probed_scans(spark, built):
-    # the serve cuts lineage after the probed frame (round-12
-    # localCheckpoint: the shortlist and re-rank legs otherwise
-    # re-execute the probed fold), which replaces the scan subtree
-    # with an RDD scan in the final plan — so the pushdown is asserted
-    # on the EXACT production subtree via `_probed_filtered`, the
-    # frame the serve checkpoints
-    import os
-
-    from cultural_heritage_bigdata_project_spark.operators import txn
-
+    # the serve reads the probed segments once, with no lineage cut, so
+    # the pushdown shows in the full serve's plan
     root, _ = built
-    version = os.path.basename(txn.current_version_dir(root))
-    comp = txn.read_manifest(root, version)[ann_index.CODES_COMPONENT]
-    ann = comp.get("ann") or {}
-    probed = ann_index._probed_filtered(
-        spark, root, comp, ann, [0, 1], "vec_id",
-        version=version, payload_filter="label = 2",
+    df = ann_index.ann_index_top_k(
+        spark, root, _q(spark), k=5, payload_filter="label = 2"
     )
     jvm = spark._jvm
-    plan = probed._jdf.queryExecution().explainString(
+    full = df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     # note: the same PushedFilters list carries In(ann_list,[...]) whose
     # nested brackets defeat a [^\]]* match — anchor on the line instead
-    assert re.search(r"PushedFilters: \[.*EqualTo\(label,2\)", plan), plan
-    assert "SortMergeJoin" not in plan, plan
-    # what remains visible on the full serve: broadcast-only joins
-    df = ann_index.ann_index_top_k(
-        spark, root, _q(spark), k=5, payload_filter="label = 2"
-    )
-    full = df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    assert re.search(r"PushedFilters: \[.*EqualTo\(label,2\)", full), full
     assert "SortMergeJoin" not in full, full
 
 

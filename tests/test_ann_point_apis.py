@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cultural_heritage_bigdata_project_spark.operators import ann_index
+from cultural_heritage_bigdata_project_spark.operators import ann_index, txn
 from cultural_heritage_bigdata_project_spark.sources.tables import load_table
 
 from .conftest import SF_DIR
@@ -103,6 +103,73 @@ def test_fetch_vectors_point_lookup_and_missing_id(spark, built):
     assert got == want
     with pytest.raises(KeyError):
         ann_index.ann_index_fetch_vectors(spark, root, [5, 10**9])
+
+
+def _codes_component(root):
+    cur = os.path.basename(txn.current_version_dir(root))
+    return txn.read_manifest(root, cur)[ann_index.CODES_COMPONENT]
+
+
+def test_collapsed_flag_lifecycle(spark, tmp_path):
+    """A build writes one row per key, so its codes component is
+    ``collapsed`` and the live read is a plain scan. An upsert or a
+    delete appends a delta and clears the flag: every point read then
+    returns one row per id, the newest one. Compaction folds the tail
+    and sets the flag again."""
+    root = str(tmp_path / "idx")
+    base = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") != 0)
+    n = base.count()
+
+    def count():
+        return ann_index.ann_index_count(spark, root).first()["n_points"]
+
+    def rows_of(i):
+        """id ``i``'s rows from fetch, retrieve and scroll."""
+        fetched = ann_index.ann_index_fetch_vectors(spark, root, [i])
+        got = {"fetch": [fetched[i]]}
+        got["retrieve"] = [
+            [float(x) for x in r["embedding"]]
+            for r in ann_index.ann_index_retrieve(
+                spark, root, [i], with_vectors=True
+            ).collect()
+        ]
+        got["scroll"] = [
+            [float(x) for x in r["embedding"]]
+            for r in ann_index.ann_index_scroll(
+                spark, root, limit=n, with_vectors=True
+            ).collect()
+            if r["vec_id"] == i
+        ]
+        return got
+
+    ann_index.build_ann_index(spark, base, root)
+    assert _codes_component(root)["collapsed"] is True
+    live = ann_index.ann_index_live(spark, root)
+    live.collect()
+    plan = live._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "Exchange" not in plan, plan
+
+    moved = base.filter(F.col("vec_id") == 5).select(
+        "vec_id", F.transform("embedding", lambda x: -x).alias("embedding")
+    )
+    new = [float(x) for x in moved.first()["embedding"]]
+    ann_index.ann_index_upsert(spark, moved, root)
+    assert not _codes_component(root).get("collapsed")
+    assert rows_of(5) == {"fetch": [new], "retrieve": [new], "scroll": [new]}
+    assert count() == n
+
+    ann_index.ann_index_delete(spark, [5], root)
+    assert not _codes_component(root).get("collapsed")
+    with pytest.raises(KeyError):
+        ann_index.ann_index_fetch_vectors(spark, root, [5])
+    assert ann_index.ann_index_retrieve(spark, root, [5]).count() == 0
+    assert 5 not in _live_ids(spark, root)
+    assert count() == n - 1
+
+    ann_index.ann_index_compact(spark, root)
+    assert _codes_component(root)["collapsed"] is True
+    assert 5 not in _live_ids(spark, root)
+    assert count() == n - 1
 
 
 def test_recommend_is_average_vector_serve_with_exclusion(spark, built):

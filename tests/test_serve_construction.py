@@ -1,5 +1,5 @@
-"""Construction budget of the dashboard serves, and the SQL-literal
-helper their plans are built with.
+"""Construction budget of the dashboard serves, the one-pass shape of
+the ANN serves, and the SQL-literal helper their plans are built with.
 
 A serve's driver-side cost is its py4j round trips: every ``F.*`` call,
 ``Column`` method and literal element is at least one command (a
@@ -13,7 +13,9 @@ fixture; the ceilings are the measured counts plus headroom."""
 from __future__ import annotations
 
 import math
+import re
 import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,18 +34,20 @@ from .conftest import SF_DIR
 TERMS = ["merge", "spark", "window"]
 
 # py4j commands per construction. Measured on the fixture (first serve
-# of each kind on fresh indexes, so every plan memo misses): knn 97,
-# recommend 276 (its example fetch is an action), bm25 110, filtered
-# bm25 106, hybrid 168, collection 97, batch hybrid of 2 queries 373
-# (two bounded collects). The per-element F.lit builds this replaced
-# cost 1,683 / 1,963 / 752 / 749 / 1,891 / 1,555 / 2,985.
+# of each kind on fresh indexes, so every plan memo misses): knn 77,
+# recommend 225 (its example fetch is an action), bm25 110, filtered
+# bm25 106, hybrid 162, collection 77, batch hybrid of 2 queries 373
+# (two bounded collects). The ANN ceilings keep the headroom ratio they
+# had over the counts before the one-pass tail (97 / 276 / 168 / 97).
+# The per-element F.lit builds this replaced cost 1,683 / 1,963 / 752 /
+# 749 / 1,891 / 1,555 / 2,985.
 CEILINGS = {
-    "knn": 150,
-    "recommend": 400,
+    "knn": 119,
+    "recommend": 326,
     "bm25": 170,
     "bm25_filtered": 170,
-    "hybrid": 260,
-    "collection": 150,
+    "hybrid": 251,
+    "collection": 119,
     "batch_hybrid": 560,
 }
 
@@ -151,3 +155,59 @@ def test_array_literal_matches_f_array(spark):
         F.expr(isin_sql("id", [])).alias("none"),
     ).first()
     assert row["a"] == s and row["hit"] is True and row["none"] is False
+
+
+@pytest.fixture(scope="module")
+def ann_serves(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("one_pass") / "ann")
+    emb = load_table(spark, SF_DIR, "embeddings")
+    ann_index.build_ann_index(spark, emb, root, payload_cols=["label"])
+    q = [float(x) for x in emb.filter("vec_id = 3").first()["embedding"]]
+    allowed = local_df(spark, [(i,) for i in range(0, 600, 3)], "vec_id bigint")
+    return {
+        "knn_pq": lambda: ann_index.ann_index_top_k(spark, root, q, k=10),
+        "knn_bq": lambda: ann_index.ann_index_top_k(
+            spark, root, q, k=10, codec="bq"
+        ),
+        "allowed_ids": lambda: ann_index.ann_index_top_k(
+            spark, root, q, k=10, allowed_ids=allowed
+        ),
+        "payload_out": lambda: ann_index.ann_index_top_k(
+            spark, root, q, k=10, payload_filter="label >= 1",
+            payload_out=["label"],
+        ),
+        "recommend": lambda: ann_index.ann_index_recommend(
+            spark, root, [1, 2, 4], [5], k=10
+        ),
+    }
+
+
+# Spark jobs per serve, construction and action together: one for the
+# serve, plus the ``allowed_ids`` semi-join's broadcast (a job even over
+# a local relation) or the recommend's example fetch
+MAX_JOBS = {"allowed_ids": 2, "recommend": 2}
+
+
+def test_ann_serves_run_in_one_pass(spark, ann_serves):
+    """Each ANN serve reads its probed rows once: the shortlist carries
+    the vectors into the exact re-rank, so the executed plan has no
+    inner join back to the probed rows and no checkpoint scan
+    (``ExistingRDD``), and a kNN runs one Spark job (`MAX_JOBS`)."""
+    sc = spark.sparkContext
+    jobs = {}
+    for kind, build in ann_serves.items():
+        group = f"one_pass_{kind}_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, kind)
+        try:
+            df = build()
+            assert len(df.collect()) == 10, kind
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"Join.*Inner", plan), (kind, plan)
+        assert "ExistingRDD" not in plan, (kind, plan)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {k: n for k, n in jobs.items() if n > MAX_JOBS.get(k, 1)}
+    assert not over, f"serves over their job count: {over} (all: {jobs})"
