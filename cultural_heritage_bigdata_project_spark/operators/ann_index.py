@@ -1371,7 +1371,7 @@ def ann_index_live(
     deletions committed by `ann_index_delete`). After a build or a
     compaction the component is ``collapsed`` and the fold is a plain
     scan. The shared base of the point-management APIs below (scroll /
-    count; point reads of more ids than `sx.lookup` bounds) — the
+    count; point reads beyond `txn.small_key_fold`'s id bound) — the
     SERVING paths never call this; they stay on the probe-pruned
     `_probed_latest` read. Pending set_payload overlays merge here
     too, so counts, scrolls, and grouped maps see mutated payload.
@@ -1549,17 +1549,27 @@ def ann_index_fetch_vectors(
     version: str | None = None,
 ) -> dict:
     """Point lookup of a FEW ids' stored vectors (Qdrant ``retrieve``):
-    returns ``{id: [float, ...]}`` through `ann_index_retrieve`'s
-    bounded read (one IN-pushed scan; no fold window while the index is
-    collapsed). Bounded collect — callers pass example-sized id lists.
-    Raises ``KeyError`` on any missing (or tombstoned) id, the 404 the
-    reference's recommend flow surfaces for an unknown point."""
+    returns ``{id: [float, ...]}`` from `txn.small_key_fold`'s bounded
+    read of the codes (one IN-pushed scan; no fold window while the
+    index is collapsed), or the id-filtered live fold beyond its bound.
+    Bounded collect — callers pass example-sized id lists. Raises
+    ``KeyError`` on any missing (or tombstoned) id, the 404 the
+    reference's recommend flow surfaces for an unknown point.
+
+    The plan is built per call, outside `txn.version_plan_memo`: a
+    recommend's example set rarely repeats, so a memo entry per set
+    would only push hot serve plans out."""
     want = sorted(int(i) for i in ids)
-    rows = ann_index_retrieve(
-        spark, root, want, id_col=id_col, vec_col=vec_col,
-        with_vectors=True, payload_out=[], version=version,
-    ).collect()
-    got = {int(r[id_col]): [float(x) for x in r[vec_col]] for r in rows}
+    version = sx.pin(root, version)
+    rows = txn.small_key_fold(spark, root, version, CODES_COMPONENT, want)
+    if rows is None:
+        rows = ann_index_live(spark, root, id_col, version=version).filter(
+            isin_sql(id_col, want)
+        )
+    got = {
+        int(r[id_col]): [float(x) for x in r[vec_col]]
+        for r in rows.select(id_col, vec_col).collect()
+    }
     missing = [i for i in want if i not in got]
     if missing:
         raise KeyError(f"ids not in index {root!r}: {missing}")

@@ -1242,25 +1242,6 @@ def _pq_codes(
     return out.withColumnRenamed("__v", vec_col) if keep_vec else out
 
 
-def pq_adc_shortlist(
-    codes: DataFrame,
-    codebook,
-    query,
-    m: int = 8,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """The ``shortlist`` best (adc_micro DESC, id ASC) rows of a
-    PQ-coded collection against one query (`pq_adc_sql` scores);
-    integer sort, no tie ambiguity. The serves score the same text
-    inside `shortlist_rerank` instead."""
-    return (
-        codes.selectExpr(id_col, f"{pq_adc_sql(codebook, query, m)} AS adc_micro")
-        .orderBy(F.desc("adc_micro"), F.asc(id_col))
-        .limit(shortlist)
-    )
-
-
 def pq_adc_sql(codebook, query, m: int) -> str:
     """SQL text of one query's ADC score over the code columns
     ``c0..c{m-1}``: the (m × n_codes) lookup table is computed

